@@ -656,9 +656,7 @@ def _ntile_boundary_keys(
     internal all-ascending convention), ``ck`` the o_custkey tiebreak.
     This is the derivation half of the order-statistic selection
     documented on :func:`_ntile_boundary_buckets`; the assignment half
-    is :func:`_assign_ntile_bounds`. Split out (r14) so the boundary
-    keys can be materialized as a write-once layout and re-consumed as
-    literals without re-deriving.
+    is :func:`_assign_ntile_bounds`.
 
     Why not rank-from-counts: the monetary key is ~unique per
     customer, so a distinct-value counts frame is full-size and saves
@@ -803,12 +801,6 @@ RFM_DIMS = [
     ("cents", True, "m_bucket"),
 ]
 
-# Version stamp for the write-once RFM segment-boundary layout —
-# folded into the layout key so derivation changes invalidate
-# materialized /tmp copies automatically (the r11 edge-layout lesson).
-_RFM_BOUNDARY_LAYOUT_V = 1
-
-
 def _rfm_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer RFM dimension frame (o_custkey, last_days, freq,
     cents): ONE shuffle on o_custkey over the orders scan. last_days
@@ -831,75 +823,6 @@ def _rfm_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rfm_boundary_literals(
-    spark: SparkSession, sf_dir: str, k: int
-) -> dict[int, list[tuple[int, int, int]]] | None:
-    """The ntile(k) boundary keys of the RFM dimensions as driver
-    literals, backed by a write-once fingerprint-keyed layout.
-
-    OPT-IN ONLY (r15): the r14 judge ruled this layout crosses the
-    no-precompute boundary — the cut-points are an aggregate statistic
-    of the orders table, i.e. a partial result of the very query being
-    timed, so persisting them across runs removes the query's hardest
-    stage from the clock. Layouts may restructure INPUT (bucketed
-    order lines, edge lists); they may not store statistics the timed
-    query is credited with computing. The default path is therefore
-    the LIVE fused derivation (_ntile_boundary_buckets below); this
-    warehouse-maintained-cutpoint shape stays available behind
-    ``SMRGH_RFM_BOUNDARY_LAYOUT=1`` for deployments where segment
-    boundaries genuinely are maintained state, and its numbers must be
-    reported separately from the live path's.
-
-    The build runs the full scale-correct derivation (_rfm_frame
-    checkpoint + _ntile_boundary_keys histogram-locate-pick) and
-    publishes the dims x (k - 1) boundary rows atomically; repeat
-    declarations read them back DRIVER-SIDE via pyarrow (zero Spark
-    jobs). Keyed on the orders fingerprint + k + derivation version.
-    Returns None unless opted in, for view-backed test dirs, and
-    under SMRGH_FORCE_DISTRIBUTED."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..plans.budget import force_distributed
-    from ..sources.tables import (
-        fingerprint_cache_dir,
-        prune_layout_variants,
-        publish_layout_atomic,
-    )
-
-    if os.environ.get("SMRGH_RFM_BOUNDARY_LAYOUT") != "1":
-        return None
-    if force_distributed():
-        return None
-    try:
-        kd = fingerprint_cache_dir(sf_dir, "rfmb", "orders")
-    except OSError:
-        return None
-    deriv = f"k={k};v={_RFM_BOUNDARY_LAYOUT_V}"
-    h = hashlib.sha256(f"{kd}|{deriv}".encode()).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), "smrgh_roundtrip", f"rfmboundaries_orders_{h}"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_layout_variants(path, "rfmboundaries", "orders")
-        # build through the real producer at its real scale posture
-        # (the r13 layout-lifecycle lesson): checkpoint the dimension
-        # frame once, then the histogram-locate-pick derivation
-        rfm_ck = _rfm_frame(spark, sf_dir).localCheckpoint()
-        keys = _ntile_boundary_keys(rfm_ck, k, RFM_DIMS)
-        publish_layout_atomic(
-            lambda tmp: keys.coalesce(1).write.mode("overwrite").parquet(tmp),
-            path,
-        )
-    import pyarrow.parquet as pq  # driver-side read: zero Spark jobs
-
-    bounds: dict[int, list[tuple[int, int, int]]] = {}
-    for r in pq.read_table(path).to_pylist():
-        bounds.setdefault(r["dim"], []).append((r["bi"], r["v"], r["ck"]))
-    return bounds
-
-
 def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation:
     per-customer stats roll into ntile(5) buckets per dimension, and
@@ -910,57 +833,50 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile ties break on custkey for determinism; recency buckets on
     last_days DESC, bit-identical to rec_days ASC (see RFM_DIMS).
 
-    Three tiers, identical output (equality-pinned in
-    tests/test_budget_tiers.py). Everything on the default path is
-    LIVE — the boundary derivation runs inside the timed query (the
-    r15 posture; the opt-in cut-point layout is documented on
-    _rfm_boundary_literals and reported separately when used):
+    Two tiers, identical output (equality-pinned in
+    tests/test_budget_tiers.py); both derive the boundaries inside
+    the timed query:
 
     1. Above RFM_NTILE_LOCAL_MAX customers (or under
-       SMRGH_FORCE_DISTRIBUTED): live order-statistic selection
-       (_ntile_boundary_buckets — histogram locate + one-bucket pick +
-       literal comparison). EXACT, no full-frame sort anywhere, so a
-       1.5e8-customer dimension never serializes into one task NOR
-       pays three chained range exchanges (the r10 tier's 6.9s).
-    2. At or below RFM_NTILE_LOCAL_MAX (incl. view-backed test dirs):
-       the three global ntile windows — dimension-sized single tasks,
-       fastest at toy scale.
-    3. SMRGH_RFM_BOUNDARY_LAYOUT=1 opt-in: warehouse-maintained
-       cut-point literals (one job per run)."""
-    rfm = _rfm_frame(spark, sf_dir)
-    bounds = _rfm_boundary_literals(spark, sf_dir, 5)
-    if bounds is not None:
-        bucketed = _assign_ntile_bounds(rfm, RFM_DIMS, bounds)
-    else:
-        from ..plans.budget import table_rows, within_budget
+       SMRGH_FORCE_DISTRIBUTED, or with no footer bound): live
+       order-statistic selection (_ntile_boundary_buckets — histogram
+       locate + one-bucket pick + literal comparison). EXACT, no
+       full-frame sort anywhere, so a 1.5e8-customer dimension never
+       serializes into one task NOR pays three chained range
+       exchanges (the r10 tier's 6.9s).
+    2. At or below RFM_NTILE_LOCAL_MAX: the three global ntile
+       windows — dimension-sized single tasks, fastest at toy
+       scale."""
+    from ..plans.budget import table_rows, within_budget
 
-        try:
-            cust_bound = table_rows(sf_dir, "customer")
-        except FileNotFoundError:
-            cust_bound = None  # view-backed test dir: take the scale tier
-        if within_budget(cust_bound, RFM_NTILE_LOCAL_MAX):
-            bucketed = rfm.select(
-                "o_custkey",
-                "cents",
-                *[
-                    F.ntile(5)
-                    .over(
-                        Window.orderBy(
-                            F.col(col).desc() if desc else F.col(col).asc(),
-                            F.col("o_custkey"),
-                        )
+    rfm = _rfm_frame(spark, sf_dir)
+    try:
+        cust_bound = table_rows(sf_dir, "customer")
+    except FileNotFoundError:
+        cust_bound = None  # view-backed test dir: take the scale tier
+    if within_budget(cust_bound, RFM_NTILE_LOCAL_MAX):
+        bucketed = rfm.select(
+            "o_custkey",
+            "cents",
+            *[
+                F.ntile(5)
+                .over(
+                    Window.orderBy(
+                        F.col(col).desc() if desc else F.col(col).asc(),
+                        F.col("o_custkey"),
                     )
-                    .alias(out)
-                    for col, desc, out in RFM_DIMS
-                ],
-            )
-        else:
-            # checkpoint the dimension frame ONCE: three consumers
-            # (histogram, boundary pick, final assign) would otherwise
-            # each replay the orders groupBy — the repo's recurring
-            # multi-consumer re-execution class
-            rfm_ck = rfm.localCheckpoint()
-            bucketed = _ntile_boundary_buckets(rfm_ck, 5, RFM_DIMS)
+                )
+                .alias(out)
+                for col, desc, out in RFM_DIMS
+            ],
+        )
+    else:
+        # checkpoint the dimension frame ONCE: three consumers
+        # (histogram, boundary pick, final assign) would otherwise
+        # each replay the orders groupBy — the repo's recurring
+        # multi-consumer re-execution class
+        rfm_ck = rfm.localCheckpoint()
+        bucketed = _ntile_boundary_buckets(rfm_ck, 5, RFM_DIMS)
     return bucketed.groupBy("r_bucket", "f_bucket", "m_bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         F.sum("cents").cast("bigint").alias("sum_cents"),

@@ -221,16 +221,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _roundtrip_cache_dir(sf_dir: str, kind: str, table: str) -> str:
-    """Written-once roundtrip copy location — see
-    sources.tables.fingerprint_cache_dir (shared with the streaming
-    CDC state keying; moved there because streaming cannot import this
-    module without a cycle)."""
-    from ..sources.tables import fingerprint_cache_dir
-
-    return fingerprint_cache_dir(sf_dir, kind, table)
-
-
 def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source on the gate: orders written once to a header CSV
     (idempotent per warehouse dir), read back through the
@@ -239,23 +229,26 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text round-trip must be value-exact (Java double formatting is
     shortest-round-trip; dates are ISO)."""
     from ..sources.files import read_csv
+    from ..sources.tables import derived_layout
 
-    # layout is part of the cache key ("csvN"): text parsing is the
+    # the file count is part of the layout key: text parsing is the
     # whole cost of this query, and the parquet source's 1-4 splits
     # capped read parallelism at 4 tasks — spreading the one-time
     # write across default parallelism lets every core parse
     # (0.68 -> ~0.25s at sf0.1; same rows, same values)
     n_parts = spark.sparkContext.defaultParallelism
-    path = _roundtrip_cache_dir(sf_dir, f"csv{n_parts}", "orders")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from ..sources.tables import prune_layout_variants
-
-        prune_layout_variants(path, "csv", "orders")
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
-        ).repartition(n_parts).write.mode("overwrite").option(
-            "header", True
-        ).csv(path)
+    path = derived_layout(
+        sf_dir,
+        "csv",
+        ("orders",),
+        f"parts={n_parts}",
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
+        .repartition(n_parts)
+        .write.mode("overwrite")
+        .option("header", True)
+        .csv(tmp),
+    )
     df = read_csv(
         spark,
         path,
@@ -276,17 +269,21 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     once as JSONL, read back through the explicit-schema reader,
     aggregated per type."""
     from ..sources.files import read_json
+    from ..sources.tables import derived_layout
 
     # same parse-parallelism spread as source_csv_roundtrip
     n_parts = spark.sparkContext.defaultParallelism
-    path = _roundtrip_cache_dir(sf_dir, f"json{n_parts}", "events")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from ..sources.tables import prune_layout_variants
-
-        prune_layout_variants(path, "json", "events")
-        load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "user_id", "value"
-        ).repartition(n_parts).write.mode("overwrite").json(path)
+    path = derived_layout(
+        sf_dir,
+        "json",
+        ("events",),
+        f"parts={n_parts}",
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .select("event_id", "event_type", "user_id", "value")
+        .repartition(n_parts)
+        .write.mode("overwrite")
+        .json(tmp),
+    )
     df = read_json(
         spark, path, "event_id bigint, event_type string, user_id bigint, value double"
     )
@@ -303,11 +300,18 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns written once as ORC, read back, filtered + aggregated so
     the scan exercises predicate pushdown on the ORC reader. Oracle
     aggregates the original parquet."""
-    path = _roundtrip_cache_dir(sf_dir, "orc", "lineitem")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_quantity", "l_discount"
-        ).write.mode("overwrite").orc(path)
+    from ..sources.tables import derived_layout
+
+    path = derived_layout(
+        sf_dir,
+        "orc",
+        ("lineitem",),
+        "",
+        lambda tmp: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_returnflag", "l_quantity", "l_discount")
+        .write.mode("overwrite")
+        .orc(tmp),
+    )
     df = spark.read.orc(path)
     return (
         df.where(F.col("l_discount") > 0.05)
@@ -631,32 +635,6 @@ ORACLES = {
 }
 
 
-_DPP_READ_CACHE: dict[tuple[str, str], tuple[int, DataFrame]] = {}
-
-
-def _dpp_open(spark: SparkSession, path: str) -> DataFrame:
-    """Open (or reuse) a fingerprint-keyed warehouse relation. The
-    memo is per-application AND keyed on the layout's _SUCCESS stamp
-    mtime: entries of stopped applications are evicted on access (they
-    pinned DataFrames of dead sessions — r8 advice), and a cached
-    relation whose directory was deleted OR rewritten within the same
-    application (a completed rewrite leaves a FRESH _SUCCESS — r9
-    advice) is re-opened rather than served with a stale file index."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _DPP_READ_CACHE if k[0] != app]:
-        del _DPP_READ_CACHE[key]
-    try:
-        stamp = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
-    except OSError:
-        stamp = -1  # missing marker: never serve a memoized relation
-    hit = _DPP_READ_CACHE.get((app, path))
-    if hit is not None and stamp >= 0 and hit[0] == stamp:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _DPP_READ_CACHE[(app, path)] = (stamp, df)
-    return df
-
-
 def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning (DPP) on the gate: orders are laid
     out hive-partitioned by month (80 dirs — the write is idempotent
@@ -670,33 +648,43 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_warehouse.py). At 100 TB this is the difference
     between scanning 3 months and scanning 8 years. The oracle joins
     the plain parquet: pruning must not change a row."""
+    from ..sources.tables import derived_layout, read_layout
     from ..sources.warehouse import write_partitioned
 
-    fact_path = _roundtrip_cache_dir(sf_dir, "dpp_fact", "orders")
-    dim_path = _roundtrip_cache_dir(sf_dir, "dpp_dim", "orders")
-    if not os.path.exists(os.path.join(fact_path, "_SUCCESS")):
-        o = load_table(spark, sf_dir, "orders").withColumn(
-            "month", F.date_format("o_orderdate", "yyyy-MM")
+    fact_path = derived_layout(
+        sf_dir,
+        "dpp_fact",
+        ("orders",),
+        "",
+        lambda tmp: write_partitioned(
+            load_table(spark, sf_dir, "orders").withColumn(
+                "month", F.date_format("o_orderdate", "yyyy-MM")
+            ),
+            tmp,
+            ["month"],
+        ),
+    )
+    dim_path = derived_layout(
+        sf_dir,
+        "dpp_dim",
+        ("orders",),
+        "",
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .select(
+            F.date_format("o_orderdate", "yyyy-MM").alias("month"),
+            F.expr("CAST((month(o_orderdate) - 1) DIV 3 + 1 AS INT)").alias(
+                "quarter"
+            ),
         )
-        write_partitioned(o, fact_path, ["month"])
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
-        dim = (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                F.date_format("o_orderdate", "yyyy-MM").alias("month"),
-                F.expr(
-                    "CAST((month(o_orderdate) - 1) DIV 3 + 1 AS INT)"
-                ).alias("quarter"),
-            )
-            .distinct()
-        )
-        dim.write.mode("overwrite").parquet(dim_path)
-    # memoize the OPENED relations per session: partition discovery on
-    # the 80-dir hive layout is a driver listing job re-paid on every
-    # re-declaration otherwise (~0.45s; the same per-session+stamp rule
-    # as load_table — the fingerprint-keyed write makes contents stable)
-    fact = _dpp_open(spark, fact_path)
-    dim = _dpp_open(spark, dim_path).where(F.col("quarter") == 1)
+        .distinct()
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
+    # read_layout memoizes the opened relations per session: partition
+    # discovery on the 80-dir hive layout is a driver listing job
+    # re-paid on every re-declaration otherwise (~0.45s)
+    fact = read_layout(spark, fact_path)
+    dim = read_layout(spark, dim_path).where(F.col("quarter") == 1)
     return (
         fact.join(dim, "month")
         .groupBy("month", "quarter")
@@ -800,10 +788,9 @@ def source_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil
 
-    # layout-versioned kind: pre-r8 trees at the old "binfile" key used
-    # the partitioned layout and must not be read with the flat glob
-    path = _roundtrip_cache_dir(sf_dir, "binfile_flat", "documents")
-    if not os.path.exists(os.path.join(path, "_done")):
+    from ..sources.tables import derived_layout
+
+    def _write(tmp: str) -> None:
         # Build via the partitioned text sink, then FLATTEN to one file
         # per doc named doc_id=N.txt in a single directory: the
         # binaryFile reader's file index lists each directory
@@ -813,7 +800,7 @@ def source_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # declaration; one flat dir is a single list call. The rename
         # is build-once, byte content identical (text sink newline
         # included).
-        staging = os.path.join(path, "_staging")
+        staging = os.path.join(tmp, "_staging")
         (
             load_table(spark, sf_dir, "documents")
             .where(F.col("doc_id") < _BINFILE_DOCS)
@@ -826,14 +813,12 @@ def source_binaryfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             parts = _glob.glob(os.path.join(d, "part-*"))
             if len(parts) != 1:
                 raise RuntimeError(f"expected one part file in {d}, got {parts}")
-            os.replace(
-                parts[0], os.path.join(path, os.path.basename(d) + ".txt")
-            )
+            os.replace(parts[0], os.path.join(tmp, os.path.basename(d) + ".txt"))
         shutil.rmtree(staging)
-        # explicit completion marker so a partially-flattened tree is
-        # never read
-        with open(os.path.join(path, "_done"), "w") as fh:
-            fh.write("ok")
+
+    path = derived_layout(
+        sf_dir, "binfile_flat", ("documents",), f"docs={_BINFILE_DOCS}", _write
+    )
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "doc_id=*.txt")

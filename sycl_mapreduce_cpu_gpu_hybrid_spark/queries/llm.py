@@ -96,15 +96,7 @@ def _truth_pairs_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently, so the certificate's cross-engine teeth are
     unchanged. Falls back to the lazy pipeline for view-backed test
     dirs."""
-    import hashlib
-    import tempfile
-
-    from ..sources.tables import (
-        fingerprint_cache_dir,
-        prune_layout_variants,
-        publish_layout_atomic,
-        read_layout,
-    )
+    from ..sources.tables import derived_layout, read_layout
 
     build = lambda: ngram_jaccard_pairs(  # noqa: E731
         _truth_sample(_docs(spark, sf_dir)),
@@ -113,23 +105,14 @@ def _truth_pairs_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_doc_freq_frac=1.0,
         max_doc_freq_abs=None,
     ).select("a", "b")
-    try:
-        kd = fingerprint_cache_dir(sf_dir, "tp", "documents")
-    except OSError:
-        return build()
-    deriv = (
-        f"k=6;t=0.9;budget={_TRUTH_SAMPLE_BUDGET};v={_TRUTH_PAIRS_LAYOUT_V}"
+    path = derived_layout(
+        sf_dir,
+        "truthpairs",
+        ("documents",),
+        f"k=6;t=0.9;budget={_TRUTH_SAMPLE_BUDGET};v={_TRUTH_PAIRS_LAYOUT_V}",
+        lambda tmp: build().write.mode("overwrite").parquet(tmp),
     )
-    h = hashlib.sha256(f"{kd}|{deriv}".encode()).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), "smrgh_roundtrip", f"truthpairs_pairs_{h}"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_layout_variants(path, "truthpairs", "pairs")
-        publish_layout_atomic(
-            lambda tmp: build().write.mode("overwrite").parquet(tmp), path
-        )
-    return read_layout(spark, path)
+    return build() if path is None else read_layout(spark, path)
 
 
 def _pair_recall_cert(
@@ -250,7 +233,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_GRAPH_LAYOUT_V = 1
 
 
-def _ngram_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ngram_pair_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int | None]:
     """The contracted ngram-Jaccard pair graph for clustering
     consumers (dedup_clusters, corpus_curate — both consume the SAME
     (k=6, threshold=0.6) graph), materialized once per fixture
@@ -260,50 +245,30 @@ def _ngram_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat runs scan the ~|E|-row relation instead of re-paying the
     shingle index + candidate join + Jaccard verify. Falls back to
     the lazy pipeline for view-backed test dirs (no files to
-    fingerprint)."""
-    df, _ = _ngram_pair_graph_ex(spark, sf_dir)
-    return df
+    fingerprint).
 
-
-def _ngram_pair_graph_ex(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, int | None]:
-    """_ngram_pair_graph plus the layout's footer row count (None on
-    the view-backed fallback) — a zero-job UPPER BOUND on the
-    canonical edge count that lets connected_components skip its
-    local-tier probe when the graph provably exceeds the cap (r15:
-    the probe's limit(cap+1).toPandas() executed the full edge
-    pipeline once, then the distributed loop's localCheckpoint paid
-    it AGAIN — one wasted full pass exactly on the graphs where the
-    pipeline is most expensive)."""
-    import hashlib
-    import tempfile
-
-    from ..sources.tables import (
-        fingerprint_cache_dir,
-        layout_rows,
-        prune_layout_variants,
-        publish_layout_atomic,
-        read_layout,
-    )
+    Also returns the layout's footer row count (None on the
+    fallback) — a zero-job UPPER BOUND on the canonical edge count
+    that lets connected_components skip its local-tier probe when the
+    graph provably exceeds the cap (r15: the probe's
+    limit(cap+1).toPandas() executed the full edge pipeline once, then
+    the distributed loop's localCheckpoint paid it AGAIN — one wasted
+    full pass exactly on the graphs where the pipeline is most
+    expensive)."""
+    from ..sources.tables import derived_layout, layout_rows, read_layout
 
     build = lambda: ngram_jaccard_pair_graph(  # noqa: E731
         _docs(spark, sf_dir), k=6, threshold=0.6
     )
-    try:
-        kd = fingerprint_cache_dir(sf_dir, "ng", "documents")
-    except OSError:
-        return build(), None
-    deriv = f"k=6;t=0.6;v={_NGRAM_GRAPH_LAYOUT_V}"
-    h = hashlib.sha256(f"{kd}|{deriv}".encode()).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), "smrgh_roundtrip", f"ngramgraph_pairs_{h}"
+    path = derived_layout(
+        sf_dir,
+        "ngramgraph",
+        ("documents",),
+        f"k=6;t=0.6;v={_NGRAM_GRAPH_LAYOUT_V}",
+        lambda tmp: build().write.mode("overwrite").parquet(tmp),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_layout_variants(path, "ngramgraph", "pairs")
-        publish_layout_atomic(
-            lambda tmp: build().write.mode("overwrite").parquet(tmp), path
-        )
+    if path is None:
+        return build(), None
     return read_layout(spark, path), layout_rows(path)
 
 
@@ -317,8 +282,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     count scaling with distinct contents instead of copies — read from
     the write-once per-fixture layout (_ngram_pair_graph). The
     layout's footer row count rides along as the CC probe's edge
-    bound (see _ngram_pair_graph_ex)."""
-    graph, n_edges = _ngram_pair_graph_ex(spark, sf_dir)
+    bound."""
+    graph, n_edges = _ngram_pair_graph(spark, sf_dir)
     return connected_components(graph, n_edges_bound=n_edges).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
@@ -426,7 +391,7 @@ def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters, md5 exact-keep, quality gate) over the same parquet."""
     d = _docs(spark, sf_dir)
     keep_exact = exact_dedup(d).select(F.col("keep_id").alias("doc_id"))
-    graph, n_edges = _ngram_pair_graph_ex(spark, sf_dir)
+    graph, n_edges = _ngram_pair_graph(spark, sf_dir)
     dropped = (
         connected_components(graph, n_edges_bound=n_edges)
         .where(F.col("id") != F.col("cluster_id"))

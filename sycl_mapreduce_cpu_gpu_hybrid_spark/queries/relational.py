@@ -23,8 +23,6 @@ Scale notes, encoded in the plans rather than comments where possible:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1618,37 +1616,21 @@ def _tradegraph_edge_layout(spark, sf_dir: str, edges):
     Returns the opened relation, or None when the fixture has no
     plain-file tables to fingerprint (view-backed test dirs keep the
     lazy lineage)."""
-    import hashlib
-    import tempfile
+    from ..sources.tables import derived_layout, read_layout
 
-    from ..sources.tables import (
-        fingerprint_cache_dir,
-        prune_layout_variants,
-        publish_layout_atomic,
-        read_layout,
-    )
-
-    try:
-        ka = fingerprint_cache_dir(sf_dir, "tg", "orders")
-        kb = fingerprint_cache_dir(sf_dir, "tg", "lineitem")
-    except OSError:
-        return None
-    # The key folds in every input the layout CONTENTS depend on, not
-    # just the source tables: SUPP_NODE_OFFSET changed in r11 and a
-    # fingerprint-only key would have served stale pre-change edges.
+    # ``deriv`` folds in every input the layout CONTENTS depend on,
+    # not just the source tables: SUPP_NODE_OFFSET changed in r11 and
+    # a fingerprint-only key would have served stale pre-change edges.
     # Bump _EDGE_LAYOUT_DERIVATION_V whenever _trade_pairs semantics
     # change without an accompanying constant change.
-    derivation = f"off={SUPP_NODE_OFFSET};v={_EDGE_LAYOUT_DERIVATION_V}"
-    h = hashlib.sha256(f"{ka}|{kb}|{derivation}".encode()).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), "smrgh_roundtrip", f"tradegraph1_edges_{h}"
+    path = derived_layout(
+        sf_dir,
+        "tradegraph_edges",
+        ("orders", "lineitem"),
+        f"off={SUPP_NODE_OFFSET};v={_EDGE_LAYOUT_DERIVATION_V}",
+        lambda tmp: edges.write.mode("overwrite").parquet(tmp),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_layout_variants(path, "tradegraph", "edges")
-        publish_layout_atomic(
-            lambda tmp: edges.write.mode("overwrite").parquet(tmp), path
-        )
-    return read_layout(spark, path)
+    return None if path is None else read_layout(spark, path)
 
 
 _NODE_LAYOUT_DERIVATION_V = 1
@@ -1670,38 +1652,22 @@ def _tradegraph_node_layout(
     suppliers), supplier sinks go to 0 (see graph_pagerank_directed).
     Keyed on BOTH source fingerprints + the edge derivation version +
     its own; returns None for view-backed dirs."""
-    import hashlib
-    import tempfile
+    from ..sources.tables import derived_layout, read_layout
 
-    from ..sources.tables import (
-        fingerprint_cache_dir,
-        prune_layout_variants,
-        publish_layout_atomic,
-        read_layout,
-    )
-
-    try:
-        ka = fingerprint_cache_dir(sf_dir, "tg", "orders")
-        kb = fingerprint_cache_dir(sf_dir, "tg", "lineitem")
-    except OSError:
-        return None
-    derivation = (
-        f"off={SUPP_NODE_OFFSET};ev={_EDGE_LAYOUT_DERIVATION_V}"
-        f";nv={_NODE_LAYOUT_DERIVATION_V}"
-    )
-    h = hashlib.sha256(f"{ka}|{kb}|{derivation}".encode()).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), "smrgh_roundtrip", f"tradegraph1_nodes_{h}"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_layout_variants(path, "tradegraph", "nodes")
-        nd = edges_layout.groupBy(F.col("src").alias("node_id")).agg(
+    def _write(tmp: str) -> None:
+        edges_layout.groupBy(F.col("src").alias("node_id")).agg(
             F.count(F.lit(1)).cast("bigint").alias("deg")
-        )
-        publish_layout_atomic(
-            lambda tmp: nd.write.mode("overwrite").parquet(tmp), path
-        )
-    return read_layout(spark, path)
+        ).write.mode("overwrite").parquet(tmp)
+
+    path = derived_layout(
+        sf_dir,
+        "tradegraph_nodes",
+        ("orders", "lineitem"),
+        f"off={SUPP_NODE_OFFSET};ev={_EDGE_LAYOUT_DERIVATION_V}"
+        f";nv={_NODE_LAYOUT_DERIVATION_V}",
+        _write,
+    )
+    return None if path is None else read_layout(spark, path)
 
 
 def _pagerank_trade_graph_local(
@@ -1832,11 +1798,6 @@ ORACLES["agg_grouping_sets"] = """
 """
 
 
-PARETO_LOCAL_MAX = 1_000_000  # part-dimension ceiling for the single-
-# task global cumulative window; above it (or under the forced-
-# distributed switch) the two-phase distributed prefix sum runs
-
-
 def _running_sum_distributed(
     df: DataFrame,
     val: str,
@@ -1902,48 +1863,29 @@ def pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile. Ordering ties break on p_key so the running sum is
     deterministic.
 
-    Scale tiers (r14, shared budget gate — plans/budget.py): up to
-    PARETO_LOCAL_MAX parts (metadata bound: the part table's parquet
-    footer) the cumulative sum runs as one global window — a
-    dimension-sized single task, fastest at small dimensions. Above
-    the ceiling, or under SMRGH_FORCE_DISTRIBUTED, the two-phase
-    distributed prefix sum (_running_sum_distributed) runs instead —
-    no single-task WindowExec anywhere in the plan (plan-pinned in
-    tests/test_plans.py). total_cents comes from the tiny per-range
-    totals, never a second pass over the fact scan."""
-    from ..plans.budget import table_rows, within_budget
-
+    The cumulative sum is the two-phase distributed prefix sum
+    (_running_sum_distributed) at every scale — no single-task
+    WindowExec anywhere in the plan (plan-pinned in
+    tests/test_plans.py). There is no driver-local single-window
+    tier: at sf0.1 one measured 0.39 s against this path's 0.43 s,
+    within noise."""
     li = _t(spark, sf_dir, "lineitem")
     per_part = li.groupBy(F.col("l_partkey").alias("p_key")).agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
         .cast("bigint")
         .alias("cents")
     )
-    sort_cols = [F.col("cents").desc(), F.col("p_key")]
-    try:
-        part_bound = table_rows(sf_dir, "part")
-    except FileNotFoundError:
-        part_bound = None  # view-backed test dir: take the scale tier
-    if within_budget(part_bound, PARETO_LOCAL_MAX):
-        total = per_part.agg(F.sum("cents").alias("total_cents"))
-        w = Window.orderBy(*sort_cols).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        ranked = per_part.join(F.broadcast(total)).select(
-            "p_key",
-            "cents",
-            F.sum("cents").over(w).alias("cum_cents"),
-            "total_cents",
-        )
-    else:
-        # total_cents rides the same per-range-totals broadcast as the
-        # prefix offsets — never a second aggregate branch over
-        # per_part, which would replay the lineitem groupBy (the
-        # repo's recurring multi-consumer recompute class)
-        ranked = _running_sum_distributed(
-            per_part, "cents", sort_cols, "cum_cents",
-            total_out="total_cents",
-        )
+    # total_cents rides the same per-range-totals broadcast as the
+    # prefix offsets — never a second aggregate branch over per_part,
+    # which would replay the lineitem groupBy (the repo's recurring
+    # multi-consumer recompute class)
+    ranked = _running_sum_distributed(
+        per_part,
+        "cents",
+        [F.col("cents").desc(), F.col("p_key")],
+        "cum_cents",
+        total_out="total_cents",
+    )
     return ranked.select(
         "p_key",
         "cents",

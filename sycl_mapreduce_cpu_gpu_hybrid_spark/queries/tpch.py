@@ -75,31 +75,14 @@ def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame | None
     byte/row on disk) is what removes the last join. At cluster scale
     the bucket count follows the warehouse's standard sizing (one
     bucket per target task), not this local-mode 32."""
-    import hashlib
     import os
-    import tempfile
 
-    from ..sources.tables import fingerprint_cache_dir, prune_layout_variants
+    from ..sources.tables import derived_layout
 
-    try:
-        ka = fingerprint_cache_dir(sf_dir, "ol", "orders")
-        kb = fingerprint_cache_dir(sf_dir, "ol", "lineitem")
-        kc = fingerprint_cache_dir(sf_dir, "ol", "customer")
-        kd = fingerprint_cache_dir(sf_dir, "ol", "part")
-    except OSError:
-        return None
-    h = hashlib.sha256(
-        f"{ka}|{kb}|{kc}|{kd}|v={_ORDERLINE_LAYOUT_V}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(
-        tempfile.gettempdir(), "smrgh_roundtrip", f"orderline_flat_{h}"
-    )
-    tbl = f"smrgh_orderline_flat_{h}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        prune_layout_variants(path, "orderline", "flat")
-        # the in-memory catalog may hold an entry from an earlier
-        # build in THIS process whose files were since invalidated
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    built = []
+
+    def _write(tmp_path: str) -> None:
+        built.append(tmp_path)
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderdate"
         )
@@ -132,53 +115,57 @@ def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame | None
                 "p_type",
             )
         )
-        # Publish race-safely (r13 advisory): write the bucketed table
-        # under a temp path + temp name, detach the catalog entry
-        # (external table — DROP keeps the files), then one atomic
-        # rename into place; a concurrent builder's copy is identical.
-        from ..sources.tables import publish_layout_atomic
+        # write the bucketed table under a temp name, then detach the
+        # catalog entry (external table — DROP keeps the files) so only
+        # the files are published
+        tmp_tbl = f"smrgh_orderline_build{os.getpid()}"
+        spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+        (
+            flat.write.mode("overwrite")
+            .bucketBy(_ORDERLINE_BUCKETS, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", tmp_path)
+            .format("parquet")
+            .saveAsTable(tmp_tbl)
+        )
+        # FK-integrity guard (r13 advisory): consumers aggregate
+        # over this INNER-joined view assuming it is row-for-row
+        # lineitem (TPC-H referential integrity: every l_orderkey
+        # has its order, every l_partkey its part). A fixture
+        # violating that would silently diverge from oracles that
+        # join lineitem->part only (q14) — fail the BUILD loudly
+        # instead. Both counts are metadata-cheap (parquet
+        # footers).
+        from ..plans.budget import table_rows
 
-        tmp_tbl = f"{tbl}_build{os.getpid()}"
-
-        def _write(tmp_path: str) -> None:
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-            (
-                flat.write.mode("overwrite")
-                .bucketBy(_ORDERLINE_BUCKETS, "l_orderkey")
-                .sortBy("l_orderkey")
-                .option("path", tmp_path)
-                .format("parquet")
-                .saveAsTable(tmp_tbl)
+        built_rows = spark.table(tmp_tbl).count()
+        expect = table_rows(sf_dir, "lineitem", _t(spark, sf_dir, "lineitem"))
+        spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+        if built_rows != expect:
+            raise AssertionError(
+                f"orderline flat layout dropped rows: built {built_rows}"
+                f" != lineitem {expect} — the fixture violates the"
+                f" orders/part FK integrity this denormalized view"
+                f" assumes (see _orderline_flat_layout docstring)"
             )
-            # FK-integrity guard (r13 advisory): consumers aggregate
-            # over this INNER-joined view assuming it is row-for-row
-            # lineitem (TPC-H referential integrity: every l_orderkey
-            # has its order, every l_partkey its part). A fixture
-            # violating that would silently diverge from oracles that
-            # join lineitem->part only (q14) — fail the BUILD loudly
-            # instead. Both counts are metadata-cheap (parquet
-            # footers).
-            from ..plans.budget import table_rows
 
-            built = spark.table(tmp_tbl).count()
-            expect = table_rows(
-                sf_dir, "lineitem", _t(spark, sf_dir, "lineitem")
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-            if built != expect:
-                raise AssertionError(
-                    f"orderline flat layout dropped rows: built {built}"
-                    f" != lineitem {expect} — the fixture violates the"
-                    f" orders/part FK integrity this denormalized view"
-                    f" assumes (see _orderline_flat_layout docstring)"
-                )
-
-        publish_layout_atomic(_write, path)
-    if not spark.catalog.tableExists(tbl):
-        # single registration path: the build above publishes FILES
-        # only; register the external bucketed table over them — the
-        # bucket ids ride in the part-file names, so the spec stays
-        # valid across sessions and processes
+    path = derived_layout(
+        sf_dir,
+        "orderline_flat",
+        ("orders", "lineitem", "customer", "part"),
+        f"v={_ORDERLINE_LAYOUT_V}",
+        _write,
+    )
+    if path is None:
+        return None
+    tbl = f"smrgh_orderline_flat_{path[-16:]}"
+    if built or not spark.catalog.tableExists(tbl):
+        # single registration path: the build publishes FILES only;
+        # register the external bucketed table over them — the bucket
+        # ids ride in the part-file names, so the spec stays valid
+        # across sessions and processes. A rebuild in THIS process
+        # replaces any entry whose files were since invalidated.
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
             for f in spark.read.parquet(path).schema.fields

@@ -213,11 +213,11 @@ def fingerprint_cache_dir(sf_dir: str, kind: str, table: str) -> str:
     running from a different CWD changes/relocates the key, so a stale
     copy can never be read against a fresh oracle (r5 advice), and
     repeated bench/parity runs reuse ONE tree instead of accumulating
-    mkdtemp leftovers (r6 advice). Callers guard their writes on a
-    _SUCCESS marker inside the keyed dir, making them idempotent per
-    fixture state. Local-filesystem paths only (os.stat on the source,
-    tempdir anchor) — cluster deployments point derived state at a
-    shared filesystem instead."""
+    mkdtemp leftovers (r6 advice). The streaming state dirs use it
+    directly; write-once layouts hash it into :func:`derived_layout`'s
+    key. Local-filesystem paths only (os.stat on the source, tempdir
+    anchor) — cluster deployments point derived state at a shared
+    filesystem instead."""
     import hashlib
     import tempfile
 
@@ -277,18 +277,12 @@ def layout_rows(path: str) -> int | None:
 
 
 def publish_layout_atomic(write_fn, path: str) -> None:
-    """Race-safe publication for the write-once layouts (r13
-    advisory): the bare check-then-write on _SUCCESS admits two
-    concurrent sessions (bench + parity on the same fixture) both
-    running mode('overwrite') into the SAME directory, or one reading
-    a half-overwritten tree. ``write_fn(tmp_path)`` writes the layout
-    into a pid-suffixed temp sibling; the publish is one atomic
-    ``os.rename`` (same filesystem — both live under the
-    smrgh_roundtrip root). If a concurrent publisher won the rename,
-    the loser discards its copy and the caller reads the winner's —
-    the builds are deterministic per fixture fingerprint, so either
-    copy is correct. Temp dirs never match prune_layout_variants'
-    name pattern, so GC cannot delete an in-flight build."""
+    """``write_fn(tmp)`` builds into a pid-suffixed sibling, which one
+    ``os.rename`` publishes. Two sessions building the same key (bench
+    and parity on one fixture) each write their own copy; the loser of
+    the rename drops its copy and reads the winner's, which is
+    identical because builds are deterministic per key. A build that
+    raises leaves nothing behind."""
     import shutil
 
     tmp = f"{path}.tmp{os.getpid()}"
@@ -306,26 +300,64 @@ def publish_layout_atomic(write_fn, path: str) -> None:
             raise
 
 
-def prune_layout_variants(current: str, kind_family: str, table: str) -> None:
-    """Best-effort GC of superseded roundtrip layouts (r9 advice):
-    kinds that embed a parallelism suffix (``csv8`` vs ``csv32``) or a
-    stale fixture fingerprint would otherwise accumulate one full
-    written copy per (parallelism, fixture-state) forever. Deletes
-    every sibling ``{family}[N]_{table}_{fp}`` dir other than
-    ``current`` — safe because the writes are idempotent (a concurrent
-    session with a different layout key just re-writes its copy)."""
+def prune_layout_variants(current: str) -> None:
+    """Best-effort delete of every sibling named like ``current`` up to
+    its hash: the same layout of a regenerated fixture or an older
+    derivation, which would otherwise stay on disk forever. In-flight
+    ``.tmp<pid>`` builds never match."""
     import re
     import shutil
+
+    root, name = os.path.split(os.path.abspath(current))
+    pat = re.compile(re.escape(name[:-16]) + r"[0-9a-f]{16}$")
+    try:
+        siblings = os.listdir(root)
+    except OSError:
+        return
+    for other in siblings:
+        if other != name and pat.match(other):
+            shutil.rmtree(os.path.join(root, other), ignore_errors=True)
+
+
+def derived_layout(
+    sf_dir: str, family: str, tables: tuple[str, ...], deriv: str, write
+) -> str | None:
+    """The one write-once layout mechanism: the published directory of
+    layout ``family``, derived from the fixture's ``tables`` by
+    ``write``, built on first use.
+
+    The boundary rule (r15): layouts may restructure input, and may
+    not store a result the timed query is credited with computing.
+
+    The dir ``$TMPDIR/smrgh_roundtrip/{family}_{hash16}`` is keyed on
+    the fingerprint of every named table plus ``deriv``, which must
+    name every constant the bytes depend on (a version stamp,
+    parallelism, thresholds). Changing any of them yields a new dir,
+    and the superseded one is pruned — every other
+    ``{family}_{hash16}`` dir counts as superseded, so each layout
+    needs a family of its own. ``write(tmp)`` fills ``tmp`` and runs
+    only while the keyed dir lacks its ``_SUCCESS`` marker; the marker
+    is added after it returns, and :func:`publish_layout_atomic`
+    publishes the result. Returns None when a table cannot be
+    fingerprinted (view-backed test dirs), so callers keep their lazy
+    lineage."""
+    import hashlib
     import tempfile
 
-    root = os.path.join(tempfile.gettempdir(), "smrgh_roundtrip")
-    if not os.path.isdir(root):
-        return
-    pat = re.compile(
-        rf"^{re.escape(kind_family)}\d*_{re.escape(table)}_[0-9a-f]{{16}}$"
-    )
-    cur = os.path.abspath(current)
-    for name in os.listdir(root):
-        path = os.path.join(root, name)
-        if os.path.abspath(path) != cur and pat.match(name):
-            shutil.rmtree(path, ignore_errors=True)
+    try:
+        keys = [fingerprint_cache_dir(sf_dir, family, t) for t in tables]
+    except OSError:
+        return None
+    h = hashlib.sha256("|".join([*keys, deriv]).encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), "smrgh_roundtrip", f"{family}_{h}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+        def build(tmp: str) -> None:
+            write(tmp)
+            # Spark's writers leave the marker; hand-built trees don't
+            with open(os.path.join(tmp, "_SUCCESS"), "a"):
+                pass
+
+        prune_layout_variants(path)
+        publish_layout_atomic(build, path)
+    return path

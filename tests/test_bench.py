@@ -125,17 +125,27 @@ def test_write_attempt_reference_ledger_format(tmp_path):
 def test_ensure_driver_memory_scales_heap_to_fixture(tmp_path, monkeypatch):
     """The sf10 driver-heap requirement is code, not folklore (r9
     verdict task 7): a ~2.4 GB fixture must predict the measured 64g
-    local-mode heap, small fixtures keep the 16g default, and an
-    explicit SPARK_GRAFT_DRIVER_MEM always wins."""
+    local-mode heap on a host with room for it, the heap is clamped to
+    ~80% of host RAM on a smaller one, small fixtures keep the 16g
+    default, and an explicit SPARK_GRAFT_DRIVER_MEM always wins. Host
+    RAM is reported through a stubbed os.sysconf so the result does
+    not depend on the machine running the test."""
     from sycl_mapreduce_cpu_gpu_hybrid_spark.session import ensure_driver_memory
 
+    page = 4096
+
+    def host_gib(gib):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * (1 << 30) // page}
+        monkeypatch.setattr(os, "sysconf", lambda name: sizes[name])
+
+    host_gib(128)
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     # small fixture: stays at the default, env untouched
     small = tmp_path / "sf_small"
     small.mkdir()
     (small / "t.parquet").write_bytes(b"x" * 1024)
     assert ensure_driver_memory(str(small)) == "16g"
-    assert "SPARK_GRAFT_DRIVER_MEM" not in __import__("os").environ
+    assert "SPARK_GRAFT_DRIVER_MEM" not in os.environ
 
     # sf10-sized fixture (2.4 GB total, sparse files to avoid real IO)
     big = tmp_path / "sf_big"
@@ -144,7 +154,14 @@ def test_ensure_driver_memory_scales_heap_to_fixture(tmp_path, monkeypatch):
         fh.seek(int(2.4 * (1 << 30)) - 1)
         fh.write(b"\0")
     assert ensure_driver_memory(str(big)) == "64g"
-    assert __import__("os").environ["SPARK_GRAFT_DRIVER_MEM"] == "64g"
+    assert os.environ["SPARK_GRAFT_DRIVER_MEM"] == "64g"
+
+    # the same fixture on a 16 GiB host: clamped to 16g, env untouched
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    host_gib(16)
+    assert ensure_driver_memory(str(big)) == "16g"
+    assert "SPARK_GRAFT_DRIVER_MEM" not in os.environ
+    host_gib(128)
 
     # explicit env wins regardless of fixture size
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "8g")

@@ -3,15 +3,18 @@ version bump must (a) re-derive the layout under a NEW key and (b) GC
 the superseded directory via prune_layout_variants — the r11
 SUPP_NODE_OFFSET near-miss class, where a semantics change without a
 key change would have served stale bytes under a correct-looking
-fixture fingerprint. Parameterized over every fingerprint-keyed layout builder
-(trade edges + nodes, ngram pair graph, orderline flat, truth pairs,
-RFM segment boundaries)."""
+fixture fingerprint. Parameterized over every version-stamped layout
+builder (trade edges + nodes, ngram pair graph, orderline flat, truth
+pairs); the shared mechanism, sources.tables.derived_layout, is
+checked directly on a scratch fixture."""
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import tempfile
+import time
 
 import pytest
 
@@ -19,8 +22,9 @@ SF = "/root/testdata/sf0.001"
 ROOT = os.path.join(tempfile.gettempdir(), "smrgh_roundtrip")
 
 
-def _dirs(family_glob: str) -> set[str]:
-    return set(glob.glob(os.path.join(ROOT, family_glob)))
+def _dirs(family: str) -> set[str]:
+    # exactly derived_layout's "{family}_{hash16}" names
+    return set(glob.glob(os.path.join(ROOT, family + "_" + "[0-9a-f]" * 16)))
 
 
 def _build_orderline(spark):
@@ -32,29 +36,13 @@ def _build_orderline(spark):
 def _build_ngram(spark):
     from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import llm
 
-    llm._ngram_pair_graph(spark, SF).count()
+    llm._ngram_pair_graph(spark, SF)[0].count()
 
 
 def _build_truthpairs(spark):
     from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import llm
 
     llm._truth_pairs_layout(spark, SF).count()
-
-
-def _build_rfm_boundaries(spark):
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import behavioral
-
-    # the cut-point layout is opt-in only since r15 (the default
-    # orders_rfm path derives boundaries live, on the clock)
-    prior = os.environ.get("SMRGH_RFM_BOUNDARY_LAYOUT")
-    os.environ["SMRGH_RFM_BOUNDARY_LAYOUT"] = "1"
-    try:
-        assert behavioral._rfm_boundary_literals(spark, SF, 5) is not None
-    finally:
-        if prior is None:
-            os.environ.pop("SMRGH_RFM_BOUNDARY_LAYOUT", None)
-        else:
-            os.environ["SMRGH_RFM_BOUNDARY_LAYOUT"] = prior
 
 
 def _build_tradegraph(spark):
@@ -86,21 +74,21 @@ CASES = [
         "orderline",
         "sycl_mapreduce_cpu_gpu_hybrid_spark.queries.tpch",
         "_ORDERLINE_LAYOUT_V",
-        "orderline_flat_*",
+        "orderline_flat",
         _build_orderline,
     ),
     (
         "ngramgraph",
         "sycl_mapreduce_cpu_gpu_hybrid_spark.queries.llm",
         "_NGRAM_GRAPH_LAYOUT_V",
-        "ngramgraph_pairs_*",
+        "ngramgraph",
         _build_ngram,
     ),
     (
         "tradegraph",
         "sycl_mapreduce_cpu_gpu_hybrid_spark.queries.relational",
         "_EDGE_LAYOUT_DERIVATION_V",
-        "tradegraph*_edges_*",
+        "tradegraph_edges",
         _build_tradegraph,
     ),
     (
@@ -109,50 +97,43 @@ CASES = [
         "tradegraph-nodes",
         "sycl_mapreduce_cpu_gpu_hybrid_spark.queries.relational",
         "_NODE_LAYOUT_DERIVATION_V",
-        "tradegraph*_nodes_*",
+        "tradegraph_nodes",
         _build_tradegraph,
-    ),
-    (
-        "rfmboundaries",
-        "sycl_mapreduce_cpu_gpu_hybrid_spark.queries.behavioral",
-        "_RFM_BOUNDARY_LAYOUT_V",
-        "rfmboundaries_orders_*",
-        _build_rfm_boundaries,
     ),
     (
         "truthpairs",
         "sycl_mapreduce_cpu_gpu_hybrid_spark.queries.llm",
         "_TRUTH_PAIRS_LAYOUT_V",
-        "truthpairs_pairs_*",
+        "truthpairs",
         _build_truthpairs,
     ),
 ]
 
 
 @pytest.mark.parametrize(
-    "name,mod_name,ver_attr,family_glob,build", CASES, ids=[c[0] for c in CASES]
+    "name,mod_name,ver_attr,family,build", CASES, ids=[c[0] for c in CASES]
 )
 def test_version_bump_rederives_and_prunes(
-    spark, monkeypatch, name, mod_name, ver_attr, family_glob, build
+    spark, monkeypatch, name, mod_name, ver_attr, family, build
 ):
     import importlib
 
     mod = importlib.import_module(mod_name)
 
     build(spark)
-    before = _dirs(family_glob)
+    before = _dirs(family)
     assert before, f"{name}: no layout dir materialized under {ROOT}"
 
     monkeypatch.setattr(mod, ver_attr, getattr(mod, ver_attr) + 1)
     build(spark)
-    bumped = _dirs(family_glob)
+    bumped = _dirs(family)
     assert bumped, f"{name}: bumped layout not materialized"
     assert bumped.isdisjoint(before), (
         f"{name}: version bump did not change the layout key: "
         f"{before} -> {bumped}"
     )
     # prune_layout_variants must have GC'd every superseded sibling
-    assert not (before & _dirs(family_glob)), (
+    assert not (before & _dirs(family)), (
         f"{name}: stale pre-bump layout dir survived the re-derivation"
     )
 
@@ -161,7 +142,7 @@ def test_version_bump_rederives_and_prunes(
     # and GCs the bumped dir
     monkeypatch.undo()
     build(spark)
-    final = _dirs(family_glob)
+    final = _dirs(family)
     assert final.isdisjoint(bumped), (
         f"{name}: stale bumped layout dir survived the restore"
     )
@@ -203,3 +184,54 @@ def test_read_layout_memoized_and_stamp_invalidated(spark, tmp_path):
     ]
     assert entries == [entries[0]]  # exactly one stamp survives
     assert entries[0][0] == "layout"
+
+
+def test_derived_layout_lifecycle(tmp_path, monkeypatch):
+    """The helper every layout goes through: a failed build publishes
+    nothing, a published key is never rebuilt, the key follows every
+    named source table and the derivation string, and a re-derivation
+    prunes the superseded sibling."""
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import derived_layout
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    root = tmp_path / "tmp" / "smrgh_roundtrip"
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    for t in ("a", "b"):
+        (fx / f"{t}.parquet").write_bytes(t.encode())
+    calls = []
+
+    def write(tmp):
+        calls.append(tmp)
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part-0"), "w") as fh:
+            fh.write("rows")
+
+    def layout(deriv="v=1"):
+        return derived_layout(str(fx), "fam", ("a", "b"), deriv, write)
+
+    def boom(tmp):
+        os.makedirs(tmp)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        derived_layout(str(fx), "fam", ("a", "b"), "v=1", boom)
+    assert not root.exists() or os.listdir(root) == []
+
+    p0 = layout()
+    assert re.fullmatch("fam_[0-9a-f]{16}", os.path.basename(p0))
+    assert os.path.isfile(os.path.join(p0, "_SUCCESS"))
+    assert layout() == p0 and len(calls) == 1  # published: no rebuild
+    assert sorted(os.listdir(root)) == [os.path.basename(p0)]
+
+    p1 = layout("v=2")
+    assert p1 != p0 and not os.path.exists(p0)  # superseded sibling pruned
+    time.sleep(0.01)
+    os.utime(fx / "b.parquet")  # one source regenerated
+    p2 = layout("v=2")
+    assert p2 not in (p0, p1)
+    assert sorted(os.listdir(root)) == [os.path.basename(p2)]
+    assert len(calls) == 3
+
+    # a table that cannot be fingerprinted keeps the caller lazy
+    assert derived_layout(str(fx), "fam", ("absent",), "v=1", write) is None

@@ -255,18 +255,14 @@ def test_q18_aggregates_on_bucket_clustering(spark, sf_dir):
     assert "orderline_flat" in plan, plan
 
 
-def test_pareto_distributed_tier_two_phase_prefix_sum(spark, sf_dir, monkeypatch):
-    # Above PARETO_LOCAL_MAX parts (or under the forced-distributed
-    # switch) pareto_revenue must run the two-phase prefix sum: the
-    # full part-grain frame range-partitions and its running sum
-    # windows PARTITION BY the range id — never an unpartitioned
+def test_pareto_distributed_tier_two_phase_prefix_sum(spark, sf_dir):
+    # pareto_revenue's default (and only) plan is the two-phase prefix
+    # sum: the full part-grain frame range-partitions and its running
+    # sum windows PARTITION BY the range id — never an unpartitioned
     # WindowExec over the whole dimension (the r13 verdict's
     # single-task-sort flag). The only SinglePartition work left is
     # the per-range offsets frame, bounded at shuffle-partition count
     # (32 rows), one Exchange.
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.plans import budget
-
-    monkeypatch.setenv(budget.FORCE_DISTRIBUTED_ENV, "1")
     plan = _plan(spark, sf_dir, "pareto_revenue")
     assert "_pid" in plan, plan
     assert "hashpartitioning(_pid" in plan, plan
@@ -286,18 +282,13 @@ def test_unpartitioned_windows_are_audited():
     #   queries/relational.py    _running_sum_distributed offsets
     #       (w_off / w_all): per-range totals frame, bounded at
     #       spark.sql.shuffle.partitions rows.
-    #   queries/relational.py    pareto_revenue local tier: global
-    #       cumulative window gated by within_budget(part rows,
-    #       PARETO_LOCAL_MAX); the scale tier is the two-phase prefix
-    #       sum (plan-pinned above).
     #   queries/llm.py           corpus_mix_schedule quota remainder
     #       rank: frame is one row per LANGUAGE (bounded domain).
     #   queries/behavioral.py    _ntile_distributed offsets
     #       (w_off / w_all): per-range counts, bounded at shuffle
     #       partitions.
     #   queries/behavioral.py    orders_rfm local tier ntile windows:
-    #       gated by within_budget(customer rows, RFM_NTILE_LOCAL_MAX)
-    #       (and normally short-circuited by the boundary layout).
+    #       gated by within_budget(customer rows, RFM_NTILE_LOCAL_MAX).
     import os
     import re
 
@@ -308,7 +299,6 @@ def test_unpartitioned_windows_are_audited():
     allowed = {
         ("operators/similarity.py", "sample_centroids"),
         ("queries/relational.py", "_running_sum_distributed"),
-        ("queries/relational.py", "pareto_revenue"),
         ("queries/llm.py", "corpus_mix_schedule"),
         ("queries/behavioral.py", "_ntile_distributed"),
         ("queries/behavioral.py", "orders_rfm"),

@@ -116,28 +116,38 @@ def test_exact_quantiles_hooks_value_identical(spark):
 def test_tradegraph_layout_key_tracks_both_sources(tmp_path, monkeypatch):
     """The edge-layout key must change when EITHER source table's
     fingerprint changes (a stale layout must never be served against a
-    regenerated fixture), and must stay stable when nothing changed."""
+    regenerated fixture), and must stay stable when nothing changed.
+    Drives the real _tradegraph_edge_layout call site with the
+    publish/read steps stubbed, so the key checked is the one the
+    code computes."""
     import shutil
+    import tempfile
 
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import (
-        fingerprint_cache_dir,
-    )
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import relational
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources import tables
 
     src = "/root/testdata/sf0.001"
     fx = tmp_path / "fx"
     fx.mkdir()
     for t in ("orders", "lineitem"):
         shutil.copy(f"{src}/{t}.parquet", fx / f"{t}.parquet")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    published = []
+
+    def publish(write_fn, path):
+        published.append(path)
+        os.makedirs(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    monkeypatch.setattr(tables, "publish_layout_atomic", publish)
+    monkeypatch.setattr(tables, "read_layout", lambda spark, path: path)
 
     def key(d):
-        import hashlib
-
-        ka = fingerprint_cache_dir(str(d), "tg", "orders")
-        kb = fingerprint_cache_dir(str(d), "tg", "lineitem")
-        return hashlib.sha256(f"{ka}|{kb}".encode()).hexdigest()[:16]
+        return relational._tradegraph_edge_layout(None, str(d), None)
 
     k0 = key(fx)
     assert key(fx) == k0  # stable when untouched
+    assert published == [k0]  # ...and not rebuilt
     os.utime(fx / "orders.parquet")  # orders regenerated (mtime bump)
     k1 = key(fx)
     assert k1 != k0
