@@ -23,13 +23,17 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_col: str,
-    n_buckets: int = 8,
+    n_buckets: int | None = None,
     sort: bool = True,
 ) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) managed table.
-    Sorting within buckets additionally enables merge-join without a
-    sort step."""
+    """Persist ``df`` as a bucketed (and bucket-sorted) managed table,
+    by default one bucket per core slot (the session's
+    defaultParallelism), so tables written by one session share a
+    count. Sorting within buckets additionally enables merge-join
+    without a sort step."""
     spark = df.sparkSession
+    if n_buckets is None:
+        n_buckets = spark.sparkContext.defaultParallelism
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     # the in-memory catalog forgets tables across sessions but their
     # warehouse directories persist; clear a stale location so the

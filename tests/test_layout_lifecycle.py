@@ -235,3 +235,53 @@ def test_derived_layout_lifecycle(tmp_path, monkeypatch):
 
     # a table that cannot be fingerprinted keeps the caller lazy
     assert derived_layout(str(fx), "fam", ("absent",), "v=1", write) is None
+
+
+def test_orderline_buckets_follow_core_slots(spark, monkeypatch):
+    """The order-line layout writes one bucket per core slot, and the
+    count is part of its key: the part files, the registered bucket
+    spec and the dir agree, and a session with another count gets a
+    layout of its own rather than reading these files under the wrong
+    bucket ids. q3 returns the same rows at either count."""
+    from pyspark import SparkContext
+
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import tpch
+
+    # Spark's BucketingUtils.bucketIdPattern
+    bucket_id = re.compile(r".*_(\d+)(?:\..*)?$")
+
+    def layout(n):
+        assert spark.sparkContext.defaultParallelism == n
+        _build_orderline(spark)
+        (path,) = _dirs("orderline_flat")
+        ids = {
+            int(bucket_id.match(f).group(1))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        }
+        desc = spark.sql(
+            f"DESCRIBE TABLE EXTENDED smrgh_orderline_flat_{path[-16:]}"
+        ).collect()
+        spec = {r.col_name: r.data_type for r in desc}
+        rows = sorted(tpch.tpch_q3_priority(spark, SF).collect())
+        return path, ids, int(spec["Num Buckets"]), rows
+
+    n = spark.sparkContext.defaultParallelism
+    assert n == 8  # tests/conftest.py's local[8] session
+    path8, ids8, spec8, rows8 = layout(n)
+    assert ids8 == set(range(n))
+    assert spec8 == n
+    assert rows8
+
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 2)
+    )
+    path2, ids2, spec2, rows2 = layout(2)
+    assert path2 != path8
+    assert ids2 == {0, 1}
+    assert spec2 == 2
+    assert rows2 == rows8
+
+    # restore the session's own layout for the tests that follow
+    monkeypatch.undo()
+    assert layout(n)[0] == path8

@@ -235,6 +235,9 @@ def test_q3_reads_flat_layout_exchange_free(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
     assert "orderline_flat" in plan, plan
     assert "Bucketed: true" in plan, plan
+    # one bucket, so one scan task, per core slot
+    n = spark.sparkContext.defaultParallelism
+    assert f"SelectedBucketsCount: {n} out of {n}" in plan, plan
 
 
 def test_q18_aggregates_on_bucket_clustering(spark, sf_dir):
@@ -253,6 +256,8 @@ def test_q18_aggregates_on_bucket_clustering(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Bucketed: true" in plan, plan
     assert "orderline_flat" in plan, plan
+    n = spark.sparkContext.defaultParallelism
+    assert f"SelectedBucketsCount: {n} out of {n}" in plan, plan
 
 
 def test_pareto_distributed_tier_two_phase_prefix_sum(spark, sf_dir):
