@@ -18,6 +18,14 @@ driver-transfer bias. Timings also append to ``points.txt`` in the
 reference's row shape ``N k ls lsc mode metric value``
 (src/main.cpp:19-38) via plans.metrics.MetricsRecorder.
 
+``results/bench_full.json`` carries, under ``"trace"``, one record per
+timed query keyed by its name: the declaration/execution split of the
+last timed run and the Spark jobs, stages, tasks, shuffle, spill, peak
+memory, layout scans and Python-boundary bytes it caused, read from
+Spark's in-process status store. To profile one query at one fixture::
+
+    SPARK_GRAFT_SF_DIR=<fixture dir> SPARK_GRAFT_QUERIES=q python bench.py
+
 Sweep mode (``SPARK_GRAFT_SWEEP=1``): additionally runs the
 reference's own experiment grid — k-mer counting over k x truncation-N
 (README.md:3-10 shape) — appending one points row per grid point.
@@ -29,7 +37,6 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,7 +50,6 @@ from sycl_mapreduce_cpu_gpu_hybrid_spark.plans.metrics import (  # noqa: E402
     METRIC_TIME_MS,
     CpuMonitor,
     MetricsRecorder,
-    StageMetricsCapture,
     timed,
 )
 
@@ -81,13 +87,16 @@ DUCK_FLOOR_SQL = {
 
 def spark_floor(spark) -> dict[str, float]:
     """Measured per-query overhead floor, published with every bench
-    artifact so the ratio decomposition is self-documenting: the time
-    to noop-write (a) a 1-row in-memory frame (pure job scheduling +
-    py4j round trip — no data, no shuffle) and (b) a 1-row parquet
-    scan + 32-partition shuffle (the smallest realistic query shape).
-    Any declared query's wall time is bounded below by (a); ~70 of the
-    125 queries cost DuckDB <50 ms and sit within a few multiples of
-    (b) — harness-floor territory, not plan defects."""
+    artifact so the ratio decomposition is self-documenting: the
+    min-of-3 time to noop-write (a) ``noop_1row``, a 1-row in-memory
+    frame (pure job scheduling + py4j round trip — no data, no
+    shuffle), and (b) ``shuffle_32part``, ``spark.range(32)`` grouped
+    by ``id % 4`` (a 32-row in-memory source, a partial aggregate, one
+    shuffle into ``spark.sql.shuffle.partitions`` partitions that AQE
+    may coalesce, and the final aggregate; no file scan). Any declared
+    query's wall time is bounded below by (a); ~70 of the 126 queries
+    cost DuckDB <50 ms and sit within a few multiples of (b) —
+    harness-floor territory, not plan defects."""
     from pyspark.sql import functions as F
 
     floors: dict[str, float] = {}
@@ -147,6 +156,48 @@ def _kmer_k(name: str) -> int:
     return int(m.group(1)) if m else 0
 
 
+def _trace_record(decl_s: float, exec_s: float, jobs: list[dict], sql: dict) -> dict:
+    """One query's trace: the declaration/sink split of a timed run and
+    the sum of the Spark jobs and SQL executions it caused."""
+
+    def total(key: str) -> float:
+        return round(sum(j[key] for j in jobs), 4)
+
+    return {
+        "decl_s": round(decl_s, 4),
+        "exec_s": round(exec_s, 4),
+        "jobs": len(jobs),
+        "stages": sum(j["stages"] for j in jobs),
+        "tasks": sum(j["tasks"] for j in jobs),
+        "task_s": total("task_s"),
+        "shuffle_write_mb": total("shuffle_write_mb"),
+        "shuffle_read_mb": total("shuffle_read_mb"),
+        "spill_mb": total("spill_mb"),
+        "peak_exec_mem_mb": round(max((j["peak_exec_mem_mb"] for j in jobs), default=0.0), 4),
+        "layout_scans": sql["layout_scans"],
+        "py_sent_mb": round(sql["sent_mb"], 4),
+        "py_returned_mb": round(sql["returned_mb"], 4),
+    }
+
+
+def _skip_to_newest(reader, spark) -> None:
+    """``reader.skip_new()``, first moved to the newest job and SQL
+    execution the status stores hold. The reader scans ids upward from
+    its last read and stops at the first id the store lacks: one
+    evicted past ``spark.ui.retainedJobs`` or
+    ``spark.sql.ui.retainedExecutions`` in a long session, or a job that
+    failed before it started. Both lists are sorted by id."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    if jobs.size():
+        reader.next_job = max(reader.next_job, jobs.head().jobId(), jobs.last().jobId())
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    if execs.size():
+        reader.next_exec = max(
+            reader.next_exec, execs.head().executionId(), execs.last().executionId()
+        )
+    reader.skip_new()
+
+
 def run_inventory(
     spark,
     sf_dir: str,
@@ -156,7 +207,11 @@ def run_inventory(
     errors: dict[str, str] | None = None,
     queries: dict | None = None,
     record_points: bool = True,
+    trace: dict[str, dict] | None = None,
 ) -> dict[str, float]:
+    """Time every query; return ``{name: seconds}``. Failures go into
+    ``errors``. Pass 1 (``record_points``) also appends points rows and
+    fills ``trace`` with one ``_trace_record`` per timed query."""
     if queries is None:
         import __spark_entry__ as entrymod
 
@@ -168,9 +223,14 @@ def run_inventory(
         queries = {k: v for k, v in queries.items() if k in names}
     if errors is None:
         errors = {}
+    if trace is None:
+        trace = {}
+    if record_points:
+        from perfbench.tracing import SparkReader
+
+        reader = SparkReader(spark)
 
     cpu = CpuMonitor()
-    capture = StageMetricsCapture(spark)
     timings: dict[str, float] = {}
     # SPARK_GRAFT_MARKERS=1: emit the reference's START/STOP marker
     # protocol (measyrepy.py:227-246) around each timed run so the
@@ -194,23 +254,27 @@ def run_inventory(
                 force(fn(spark, sf_dir))
             # min of two timed runs: the host shows episodic CPU-steal
             # bursts; min is the standard noise-robust point estimate.
-            # Secondary metrics bracket only the LAST run (one clean
-            # START..STOP window, reference Metric() protocol).
+            # Secondary metrics and the trace bracket only the LAST run
+            # (one clean START..STOP window, reference Metric()
+            # protocol); skipping to the newest job first leaves out
+            # the warm-up's jobs and a failed previous query's.
             # Extra min-of-N passes (record_points=False) time once —
             # pass 1 already warmed JIT/codegen; the caller takes the
             # min across passes.
             best = float("inf")
             for i in range(2 if record_points else 1):
                 if record_points and i == 1:
-                    stages_before = capture.stages()
+                    _skip_to_newest(reader, spark)
                     cpu.snapshot_start()
                 if markers:
                     print(f"START {name}", flush=True)
-                with timed() as t:
-                    force(fn(spark, sf_dir))
+                with timed() as decl:
+                    df = fn(spark, sf_dir)
+                with timed() as sink:
+                    force(df)
                 if markers:
                     print(f"STOP {name}", flush=True)
-                best = min(best, t["sec"])
+                best = min(best, decl["sec"] + sink["sec"])
         except Exception as exc:  # noqa: BLE001 — isolation is the point
             msg = f"{type(exc).__name__}: {exc}"[:500]
             if record_points:
@@ -254,11 +318,10 @@ def run_inventory(
         rec(METRIC_HOST_MEM_MB, cpu.mem_used_mb())
         if (temp := cpu.temp_c()):
             rec(METRIC_CPU_TEMP_C, temp)
-        if capture.enabled:
-            d = capture.delta(stages_before, capture.stages())
-            rec(METRIC_EXEC_PEAK_MEM_MB, round(d["peak_exec_mem_mb"], 3))
-            rec(METRIC_SHUFFLE_WRITE_MB, round(d["shuffle_write_mb"], 3))
-            rec(METRIC_SHUFFLE_READ_MB, round(d["shuffle_read_mb"], 3))
+        trace[name] = r = _trace_record(decl["sec"], sink["sec"], *reader.read_new())
+        rec(METRIC_EXEC_PEAK_MEM_MB, round(r["peak_exec_mem_mb"], 3))
+        rec(METRIC_SHUFFLE_WRITE_MB, round(r["shuffle_write_mb"], 3))
+        rec(METRIC_SHUFFLE_READ_MB, round(r["shuffle_read_mb"], 3))
     return timings
 
 
@@ -388,11 +451,11 @@ def write_attempt(
 
 def compact_summary(out: dict, full_path: str, budget: int = 1500) -> dict:
     """Bound the one-line stdout summary to ``budget`` serialized
-    bytes: keep headline fields intact, trim the per-query map to the
-    slowest entries (10 at a time) until the line fits. The full map
-    lives at ``full_path``."""
+    bytes: keep headline fields intact, drop the per-query trace, trim
+    the per-query map to the slowest entries (10 at a time) until the
+    line fits. The full map and the trace live at ``full_path``."""
     timings = out["queries"]
-    compact = dict(out)
+    compact = {k: v for k, v in out.items() if k != "trace"}
     compact["n_queries"] = len(timings)
     compact["queries_full"] = full_path
     if out.get("errors"):
@@ -420,15 +483,14 @@ def main() -> None:
     # Scale the single-JVM heap to the fixture before launch (sf10's
     # 64 GiB requirement as code, not folklore — r9 verdict task 7)
     print(f"driver heap: {ensure_driver_memory(sf_dir)}", file=sys.stderr)
-    # UI on for the bench session only: the REST status API is how
-    # StageMetricsCapture reads per-stage shuffle/memory metrics
-    spark = get_spark(app_name="bench", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="bench")
     ls = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_scale = int((sf or 0) * 1_000_000)
 
     recorder = MetricsRecorder()
     errors: dict[str, str] = {}
-    timings = run_inventory(spark, sf_dir, recorder, n_scale, ls, errors)
+    trace: dict[str, dict] = {}
+    timings = run_inventory(spark, sf_dir, recorder, n_scale, ls, errors, trace=trace)
     # Min-of-N passes (r12 verdict task 4): a single-pass total on this
     # shared host reads up to 24% over the quiet-window floor (BENCH_r12
     # 63.98 s vs 3 quiet passes at ~47 s on identical code — ambient
@@ -476,6 +538,7 @@ def main() -> None:
         "sf": sf,
         "duck_floor": duck_floor(sf_dir),
         "spark_floor": spark_floor(spark),
+        "trace": trace,
     }
     if errors:
         out["errors"] = errors

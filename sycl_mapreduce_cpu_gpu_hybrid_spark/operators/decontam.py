@@ -59,28 +59,6 @@ def word_ngram_array(text_col: Column | str, n: int) -> Column:
     return word_ngram_array_from_tokens(F.split(normalize_text(text_col), " "), n)
 
 
-def doc_ngrams(
-    docs: DataFrame, n: int, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, gram) with per-document distinct word n-grams. Two r12
-    structural moves: the distinct happens INSIDE the row
-    (array_distinct before the explode, not a (id, gram) DISTINCT
-    aggregate — per-document uniqueness needs no cross-row state, so
-    the r11 plan's full exchange of every (doc, gram-text) pair was
-    pure waste), and the token split is STAGED as a column so the
-    gram-building lambda references a bound array instead of
-    re-evaluating the split per gram (lambdas get no CSE)."""
-    toks = docs.select(
-        id_col, F.split(normalize_text(text_col), " ").alias("_tk")
-    )
-    return toks.select(
-        id_col,
-        F.explode(
-            F.array_distinct(word_ngram_array_from_tokens(F.col("_tk"), n))
-        ).alias("gram"),
-    )
-
-
 def _gram_key_array_sql(tok_col: str, n: int) -> str:
     """SQL for the per-row array of DISTINCT n-gram xxhash64 keys over
     an already-split token array column — the gram never materializes

@@ -34,7 +34,7 @@ than executor memory.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAXK = 64  # reference fixed-width key cap, src/GPU_Module/GPU.h:15
@@ -242,12 +242,6 @@ def kmer_sink(
         .mode("overwrite")
         .save(path)
     )
-
-
-def window_starts(text: Column, k: int) -> Column:
-    """Number of valid window starts in a document (0 if len < k);
-    byte lengths, consistent with the byte-windowed map kernel."""
-    return F.greatest(F.octet_length(text) - F.lit(k) + F.lit(1), F.lit(0))
 
 
 def safe_num_to_string(col: F.Column | str) -> F.Column:

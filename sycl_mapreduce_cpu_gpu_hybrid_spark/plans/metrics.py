@@ -9,9 +9,7 @@ plus warm-up iterations excluded from metrics (runprogram.sh:29-41).
 
 from __future__ import annotations
 
-import json
 import time
-import urllib.request
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -130,70 +128,6 @@ class CpuMonitor:
                 return int(fh.read().strip()) // 1000
         except (OSError, ValueError):
             return 0
-
-
-class StageMetricsCapture:
-    """Per-query executor metrics from Spark's REST status API
-    (requires ``spark.ui.enabled``; silently disabled otherwise).
-
-    Attribution is by stage delta: snapshot the completed-stage set
-    before a run, diff after, and aggregate shuffle read/write bytes
-    plus max peak execution memory over only the new stages. This
-    avoids job-group bookkeeping and is exactly what a cluster-side
-    SparkListener would sum from StageCompleted events.
-
-    Known limits of stage-delta attribution (accepted; metrics are
-    advisory, not hash-bearing): stages SKIPPED via ReusedExchange
-    never complete, so a plan that re-reads a cached exchange (e.g.
-    dedup_ngram_jaccard) under-reports shuffle_read for the reuse —
-    the bytes were already attributed to the query that first
-    materialized the exchange, and are not re-counted. Likewise,
-    concurrent queries on the same session would be attributed to
-    whichever delta window closes first; bench.py runs queries
-    strictly sequentially, which is the supported mode.
-    """
-
-    def __init__(self, spark) -> None:
-        self._base: str | None = None
-        url = spark.sparkContext.uiWebUrl
-        if not url:
-            return
-        try:
-            with urllib.request.urlopen(f"{url}/api/v1/applications", timeout=3) as r:
-                apps = json.loads(r.read())
-            self._base = f"{url}/api/v1/applications/{apps[0]['id']}"
-        except Exception:
-            self._base = None
-
-    @property
-    def enabled(self) -> bool:
-        return self._base is not None
-
-    def stages(self) -> dict[tuple[int, int], dict]:
-        if not self._base:
-            return {}
-        try:
-            with urllib.request.urlopen(
-                f"{self._base}/stages?status=complete", timeout=5
-            ) as r:
-                data = json.loads(r.read())
-        except Exception:
-            return {}
-        return {(s["stageId"], s["attemptId"]): s for s in data}
-
-    @staticmethod
-    def delta(before: dict, after: dict) -> dict[str, float]:
-        new = [s for key, s in after.items() if key not in before]
-        return {
-            "shuffle_write_mb": sum(s.get("shuffleWriteBytes", 0) for s in new)
-            / (1024 * 1024),
-            "shuffle_read_mb": sum(s.get("shuffleReadBytes", 0) for s in new)
-            / (1024 * 1024),
-            "peak_exec_mem_mb": max(
-                (s.get("peakExecutionMemory", 0) for s in new), default=0
-            )
-            / (1024 * 1024),
-        }
 
 
 @contextmanager

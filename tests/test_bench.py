@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +15,12 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import run_inventory
-from sycl_mapreduce_cpu_gpu_hybrid_spark.plans.metrics import MetricsRecorder
+from sycl_mapreduce_cpu_gpu_hybrid_spark.plans.metrics import (
+    METRIC_EXEC_PEAK_MEM_MB,
+    METRIC_SHUFFLE_READ_MB,
+    METRIC_SHUFFLE_WRITE_MB,
+    MetricsRecorder,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -65,6 +71,88 @@ def test_run_inventory_broken_analysis_time_query(spark):
     assert set(errors) == {"bad"}
 
 
+TRACE_KEYS = {
+    "decl_s", "exec_s", "jobs", "stages", "tasks", "task_s",
+    "shuffle_write_mb", "shuffle_read_mb", "spill_mb", "peak_exec_mem_mb",
+    "layout_scans", "py_sent_mb", "py_returned_mb",
+}
+# a declaration this long dominates each timed run, so the run the
+# trace describes and the faster of the two timed runs agree closely
+DECL_SLEEP_S = 2.0
+
+
+def _slow_decl_shuffling(spark, sf_dir):
+    time.sleep(DECL_SLEEP_S)
+    return spark.range(10_000).groupBy(F.col("id") % 100).count()
+
+
+def _slow_decl_narrow(spark, sf_dir):
+    time.sleep(DECL_SLEEP_S)
+    return _ok_query(spark, sf_dir)
+
+
+def test_run_inventory_traces_each_query_from_status_store(spark):
+    """With the UI off (as in every session get_spark builds), pass 1
+    records one trace per passing query from Spark's status store, and
+    feeds points rows 3/7/8 from it; a query that raised has no trace."""
+    recorder = MetricsRecorder()
+    errors: dict[str, str] = {}
+    trace: dict[str, dict] = {}
+    timings = run_inventory(
+        spark,
+        SF_DIR,
+        recorder,
+        n_scale=0,
+        ls=4,
+        errors=errors,
+        queries={
+            "shuffling": _slow_decl_shuffling,
+            "bad": _broken_query,
+            "narrow": _slow_decl_narrow,
+        },
+        trace=trace,
+    )
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    assert set(timings) == set(trace) == {"shuffling", "narrow"}
+    assert set(errors) == {"bad"}
+    for name, r in trace.items():
+        assert set(r) == TRACE_KEYS
+        assert r["jobs"] >= 1 and r["stages"] >= 1 and r["tasks"] >= 1
+        # the timing is the sum of the split, and the sleep is declaration
+        total = r["decl_s"] + r["exec_s"]
+        assert timings[name] <= total + 1e-3
+        assert total <= timings[name] * 1.05
+        assert r["decl_s"] >= DECL_SLEEP_S > r["exec_s"]
+    # one shuffle of 100 groups from every map task; none for a narrow scan
+    assert trace["shuffling"]["stages"] >= 2
+    assert trace["shuffling"]["shuffle_write_mb"] > 0
+    assert trace["shuffling"]["shuffle_read_mb"] > 0
+    assert trace["narrow"]["shuffle_write_mb"] == 0
+    assert trace["narrow"]["stages"] == 1
+    by_metric: dict[int, list[float]] = {}
+    for row in recorder.rows:
+        by_metric.setdefault(row["metric"], []).append(row["value"])
+    for metric in (METRIC_EXEC_PEAK_MEM_MB, METRIC_SHUFFLE_WRITE_MB, METRIC_SHUFFLE_READ_MB):
+        assert len(by_metric.get(metric, [])) == 2
+    assert max(by_metric[METRIC_SHUFFLE_WRITE_MB]) > 0
+
+
+def test_trace_reader_resumes_past_ids_the_status_store_lacks(spark):
+    """The status store drops jobs past ``spark.ui.retainedJobs`` in a
+    long session, and a job that fails before it starts never enters
+    it. The reader scans ids upward and stops at such a gap, so the
+    bench moves it to the newest stored ids before each traced run."""
+    from bench import _skip_to_newest, force
+    from perfbench.tracing import SparkReader
+
+    reader = SparkReader(spark)
+    reader.next_job = reader.next_exec = -1  # an id the store lacks
+    _skip_to_newest(reader, spark)
+    force(_ok_query(spark, SF_DIR))
+    jobs, _ = reader.read_new()
+    assert len(jobs) == 1
+
+
 def test_compact_summary_fits_driver_tail_buffer():
     """BENCH_r06.json recorded parsed: null because the one-line
     summary outgrew the driver's ~2k stdout tail buffer once the
@@ -102,6 +190,13 @@ def test_compact_summary_fits_driver_tail_buffer():
     # errors never blow the budget
     noisy = compact_summary({**out, "errors": {"q": "boom" * 200}}, "x")
     assert len(json.dumps(noisy)) <= 1500
+    # the per-query trace stays in the full artifact, not the line
+    record = dict.fromkeys(TRACE_KEYS, 0.1234)
+    traced = {**out, "trace": {name: dict(record) for name in timings}}
+    line = json.dumps(compact_summary(traced, "x"))
+    assert len(line) <= 1500
+    assert "trace" not in json.loads(line)
+    assert "trace" in traced
 
 
 def test_write_attempt_reference_ledger_format(tmp_path):
