@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -45,6 +46,21 @@ def _ns_timestamp_cols(path: str) -> list[str]:
 
 
 _NS_COLS_CACHE: dict[str, list[str]] = {}
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet at ``path``, to pass to
+    ``read.schema(...)`` or ``readStream.schema(...)``. Inference
+    launches a footer-reading Spark job, so the schema is memoized per
+    path and source stamp, across sessions (they share their parquet
+    confs): a regenerated file is inferred again. A TIMESTAMP(NANOS)
+    file needs ``nanosAsLong`` set on the session first, as
+    stream_events does; load_table reads such files itself."""
+    stamp = _source_stamp(path)
+    if _SCHEMA_CACHE.get(path, (None,))[0] != stamp:
+        _SCHEMA_CACHE[path] = (stamp, spark.read.parquet(path).schema)
+    return _SCHEMA_CACHE[path][1]
 
 
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
@@ -73,11 +89,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     narrows TIMESTAMP_NS to its µs TIMESTAMP).
 
     The returned (lazy, immutable) frame is memoized per SESSION and
-    source stamp: ``spark.read.parquet`` pays a schema-resolution
-    footer job plus several py4j roundtrips on every call, pure
-    declaration overhead for a fixture that never changes mid-run.
-    Sessions are held weakly, so ephemeral scoped clones (streaming)
-    don't pin their frames."""
+    source stamp: a read pays several py4j roundtrips, pure
+    declaration overhead for a fixture that never changes mid-run, and
+    the schema comes from :func:`parquet_schema`, so a new session
+    (a scoped streaming clone) launches no schema job either. Sessions
+    are held weakly, so ephemeral clones don't pin their frames."""
     path = f"{sf_dir}/{name}.parquet"
     per_session = _cache_for(spark)
     key = ("table", path, _source_stamp(path))
@@ -115,7 +131,7 @@ def _cache_insert(per_session: dict, key: tuple, df: DataFrame) -> None:
 def _load_table_uncached(spark: SparkSession, path: str) -> DataFrame:
     ns_cols = _ns_timestamp_cols(path)
     if not ns_cols:
-        return spark.read.parquet(path)
+        return spark.read.schema(parquet_schema(spark, path)).parquet(path)
     # Scope the legacy flag to this read: the reader captures it at
     # DataFrame creation (verified: execution after restore still
     # reads longs), so restoring immediately keeps unrelated

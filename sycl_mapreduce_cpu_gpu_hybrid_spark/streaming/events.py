@@ -20,28 +20,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
-from ..sources.tables import _ns_timestamp_cols
+from ..sources.tables import (
+    _ns_timestamp_cols,
+    fingerprint_cache_dir,
+    load_table,
+    parquet_schema,
+)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table. Streaming sources need
-    an explicit schema; ns-precision timestamps go through the same
-    nanosAsLong + microsecond conversion as the batch loader."""
+    an explicit schema: the memoized ``parquet_schema``, whose
+    ns-precision timestamps are raw nanoseconds that go through the
+    same microsecond conversion as the batch loader."""
     path = f"{sf_dir}/events.parquet"
-    ns_cols = set(_ns_timestamp_cols(path))
+    ns_cols = _ns_timestamp_cols(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(path).schema
-    fields = [
-        StructField(f.name, LongType() if f.name in ns_cols else f.dataType, f.nullable)
-        for f in batch_schema
-    ]
     # the file stream source requires a directory: stream the sf dir
     # with a glob pinned to the events file
     stream = (
-        spark.readStream.schema(StructType(fields))
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -143,46 +143,28 @@ def _n_committed(checkpoint: str) -> int:
     return sum(1 for p in os.listdir(d) if p.isdigit())
 
 
-def _drain_complete_to_parquet(result: DataFrame, out_dir: str, checkpoint: str) -> None:
-    """Drain a complete-mode aggregation through foreachBatch into ONE
-    parquet dir (each batch overwrites with the full current result —
-    idempotent under redelivery, so at-least-once becomes exactly-once;
-    the last committed batch is the complete aggregate of the whole
-    backlog). A re-run against a complete checkpoint drains nothing and
-    leaves the durable result in place — restart-resume reuse, the same
-    contract as stream_to_parquet's append sinks."""
+def _schema_tag(df: DataFrame) -> str:
+    """Short hash of ``df``'s schema for durable-tree keys. Read-backs
+    pass the drained frame's schema instead of inferring one, so files
+    written under another schema (an older version of the query) must
+    never share its tree."""
+    import hashlib
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    q = (
-        result.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return hashlib.sha256(df.schema.json().encode()).hexdigest()[:8]
 
 
-def _drain_update_to_parquet(result: DataFrame, out_base: str, checkpoint: str) -> None:
-    """Drain an update-mode stream through foreachBatch into
-    batch-keyed parquet subdirs (b0, b1, ...): redelivery of a batch
-    overwrites its own subdir, never duplicates — the idempotence rule
-    foreachBatch requires. Readers glob ``{out_base}/b*``. Re-runs
-    against a complete checkpoint drain nothing."""
+def _durable_dir(sf_dir: str, family: str, drained: DataFrame) -> str:
+    """A stream family's durable tree (sink + checkpoint), keyed on the
+    events fixture's fingerprint and the drained frame's schema."""
+    kind = f"{family}_{_schema_tag(drained)}"
+    return fingerprint_cache_dir(sf_dir, kind, "events")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_base}/b{batch_id}")
 
-    q = (
-        result.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+def _overwrite_sink(path: str):
+    """Complete-mode foreachBatch sink: each batch overwrites ``path``
+    with the full current result — idempotent under redelivery, and
+    the last committed batch is the aggregate of the whole backlog."""
+    return lambda batch_df, batch_id: batch_df.write.mode("overwrite").parquet(path)
 
 
 def stream_tumbling_to_table(
@@ -224,15 +206,12 @@ def stream_tumbling_to_table(
     to the clone (same JVM data, collectable anywhere).
 
     The sink is DURABLE (foreachBatch complete-overwrite parquet +
-    checkpoint, keyed on the fixture fingerprint and the variant name):
-    a re-run against an unchanged fixture resumes a complete
-    checkpoint, drains nothing, and reads the persisted result back —
-    restart-resume exactly-once, the r7 pattern the append-mode
-    streaming queries already use. Single-process use per keyed tree
+    checkpoint, keyed on the fixture fingerprint, the variant name and
+    the drained schema): a re-run against an unchanged fixture resumes
+    a complete checkpoint, drains nothing, and reads the persisted
+    result back — restart-resume exactly-once, the r7 pattern the
+    append-mode streaming queries already use. Single-process use per keyed tree
     (local-FS markers, no cross-process locking)."""
-    from ..sources.tables import fingerprint_cache_dir
-
-    base = fingerprint_cache_dir(sf_dir, f"stream_tumbling_{name}", "events")
     scoped = spark.newSession()
     src = stream_events(scoped, sf_dir)
     watermark: str | None = "2 hours"
@@ -248,8 +227,10 @@ def stream_tumbling_to_table(
         scoped.conf.set(
             "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
         )
-    _drain_complete_to_parquet(result, f"{base}/state", f"{base}/ckpt")
-    return scoped.read.parquet(f"{base}/state")
+    base = _durable_dir(sf_dir, f"stream_tumbling_{name}", result)
+    sink = _overwrite_sink(f"{base}/state")
+    stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
+    return scoped.read.schema(result.schema).parquet(f"{base}/state")
 
 
 def stream_sliding_to_table(
@@ -260,15 +241,17 @@ def stream_sliding_to_table(
     into a durable complete-overwrite parquet sink). Same
     session-scoping and restart-resume discipline as
     stream_tumbling_to_table."""
-    from ..sources.tables import fingerprint_cache_dir
-
-    base = fingerprint_cache_dir(sf_dir, "stream_sliding", "events")
     scoped = spark.newSession()
-    src = stream_events(scoped, sf_dir)
-    result = sliding_avg(src)
+    result = sliding_avg(stream_events(scoped, sf_dir))
     scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    _drain_complete_to_parquet(result, f"{base}/state", f"{base}/ckpt")
-    return scoped.read.parquet(f"{base}/state").select("win_start", "n", "sum_value")
+    base = _durable_dir(sf_dir, "stream_sliding", result)
+    sink = _overwrite_sink(f"{base}/state")
+    stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
+    return (
+        scoped.read.schema(result.schema)
+        .parquet(f"{base}/state")
+        .select("win_start", "n", "sum_value")
+    )
 
 
 def stream_running_max_to_table(
@@ -284,16 +267,19 @@ def stream_running_max_to_table(
     (foreachBatch, idempotent on batch id) so re-runs against an
     unchanged fixture resume the complete checkpoint and just read the
     sink back — restart-resume, same as the other durable drains."""
-    from ..sources.tables import fingerprint_cache_dir
-
-    base = fingerprint_cache_dir(sf_dir, "stream_rmax", "events")
     scoped = spark.newSession()
-    src = stream_events(scoped, sf_dir)
-    result = stateful_running_max(src)
+    result = stateful_running_max(stream_events(scoped, sf_dir))
     scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    _drain_update_to_parquet(result, f"{base}/sink", f"{base}/ckpt")
+    base = _durable_dir(sf_dir, "stream_rmax", result)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        # batch-keyed subdirs: redelivery overwrites, never duplicates
+        batch_df.write.mode("overwrite").parquet(f"{base}/sink/b{batch_id}")
+
+    stream_foreach_batch(result, sink, f"{base}/ckpt", "update")
     return (
-        scoped.read.parquet(f"{base}/sink/b*")
+        scoped.read.schema(result.schema)
+        .parquet(f"{base}/sink/b*")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -346,12 +332,11 @@ def stream_interval_join_to_table(
     # durable keyed sink: re-runs resume the complete checkpoint and
     # drain nothing (restart-resume exactly-once; inner-join append
     # rows are immutable once emitted, so the sink is append-safe)
-    from ..sources.tables import fingerprint_cache_dir
-
-    base = base_dir or fingerprint_cache_dir(sf_dir, "stream_ssjoin", "events")
+    base = base_dir or _durable_dir(sf_dir, "stream_ssjoin", joined)
     stream_to_parquet(joined, f"{base}/sink", f"{base}/ckpt")
     return (
-        scoped.read.parquet(f"{base}/sink")
+        scoped.read.schema(joined.schema)
+        .parquet(f"{base}/sink")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -368,8 +353,6 @@ def stream_enrich_to_table(
     needed; the static side is re-resolvable per micro-batch, which
     is how slowly-changing dims refresh mid-stream). Drained rows
     aggregate per market segment in batch."""
-    from ..sources.tables import load_table
-
     scoped = spark.newSession()
     src = stream_events(scoped, sf_dir)
     purchases = src.where(F.col("event_type") == "purchase").select(
@@ -380,12 +363,11 @@ def stream_enrich_to_table(
     )
     enriched = purchases.join(F.broadcast(dim), "user_id")
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    from ..sources.tables import fingerprint_cache_dir
-
-    base = base_dir or fingerprint_cache_dir(sf_dir, "stream_enrich", "events")
+    base = base_dir or _durable_dir(sf_dir, "stream_enrich", enriched)
     stream_to_parquet(enriched, f"{base}/sink", f"{base}/ckpt")
     return (
-        scoped.read.parquet(f"{base}/sink")
+        scoped.read.schema(enriched.schema)
+        .parquet(f"{base}/sink")
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -498,16 +480,14 @@ def stream_purchases_to_parquet(
     fingerprint (one durable tree per fixture state): re-runs resume
     the complete checkpoint, drain nothing, and read the sink —
     restart-resume exactly-once, not a fresh re-ingest per call."""
-    from ..sources.tables import fingerprint_cache_dir
-
-    base = base_dir or fingerprint_cache_dir(sf_dir, "stream_pq", "events")
     scoped = spark.newSession()
     src = stream_events(scoped, sf_dir)
     purchases = src.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
+    base = base_dir or _durable_dir(sf_dir, "stream_pq", purchases)
     stream_to_parquet(purchases, f"{base}/data", f"{base}/ckpt")
-    back = scoped.read.parquet(f"{base}/data")
+    back = scoped.read.schema(purchases.schema).parquet(f"{base}/data")
     return (
         back.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(
@@ -551,12 +531,20 @@ def stream_rate_source_to_parquet(
     import os
     import tempfile
 
+    scoped = spark.newSession()
+    src = (
+        scoped.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", str(rows_per_batch))
+        .option("startTimestamp", 0)
+        .option("advanceMillisPerBatch", 1000)
+        .load()
+        .select("value")
+    )
     base = base_dir or os.path.join(
         tempfile.gettempdir(),
         "smrgh_roundtrip",
-        f"rate_{rows_per_batch}x{n_batches}",
+        f"rate_{rows_per_batch}x{n_batches}_{_schema_tag(src)}",
     )
-    scoped = spark.newSession()
     ckpt = f"{base}/ckpt"
     attempts = 0
     while _n_committed(ckpt) < n_batches:
@@ -566,29 +554,26 @@ def stream_rate_source_to_parquet(
                 f"rate source made no commit progress at {ckpt} "
                 f"({_n_committed(ckpt)}/{n_batches} after {attempts} starts)"
             )
-        src = (
-            scoped.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", str(rows_per_batch))
-            .option("startTimestamp", 0)
-            .option("advanceMillisPerBatch", 1000)
-            .load()
-        )
-        stream_to_parquet(
-            src.select("value"), f"{base}/data", ckpt
-        )
-    return scoped.read.parquet(f"{base}/data")
+        stream_to_parquet(src, f"{base}/data", ckpt)
+    return scoped.read.schema(src.schema).parquet(f"{base}/data")
 
 
 def stream_foreach_batch(
-    result: DataFrame, sink, checkpoint: str
+    result: DataFrame, sink, checkpoint: str, mode: str = "append"
 ) -> None:
-    """foreachBatch escape hatch: ``sink(batch_df, batch_id)`` runs
-    arbitrary batch-DataFrame logic (merge/upsert, multi-table write)
-    per micro-batch. The checkpoint makes redelivery at-least-once;
-    sinks must be idempotent on (batch_id) — e.g. write to a
-    batch-keyed path or MERGE on a key."""
+    """The availableNow foreachBatch drain: ``sink(batch_df, batch_id)``
+    runs arbitrary batch-DataFrame logic (overwrite, merge/upsert,
+    multi-table write) per micro-batch. ``mode`` is the output mode:
+    ``complete`` for windowed aggregates (append would withhold the
+    trailing windows of a finite backlog in state), ``update`` for a
+    stateful operator, ``append`` for row-level streams. The
+    checkpoint makes redelivery at-least-once; sinks must be
+    idempotent on (batch_id) — e.g. overwrite, write to a batch-keyed
+    path or MERGE on a key. A re-run against a complete checkpoint
+    drains nothing and leaves the durable output in place."""
     q = (
         result.writeStream.foreachBatch(sink)
+        .outputMode(mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -637,18 +622,18 @@ def stream_cdc_upsert_to_state(
 
     from pyspark.sql import Window
 
-    from ..sources.tables import fingerprint_cache_dir, load_table
-
-    base = base_dir or fingerprint_cache_dir(sf_dir, "cdc_state", "events")
+    changes = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    # the drained stream replays the feed, whose schema is the feed
+    # frame's: keying on that frame keys on the drained schema
+    base = base_dir or _durable_dir(sf_dir, "cdc_state", changes)
     feed, state_dir, ckpt = f"{base}/feed", f"{base}/state", f"{base}/ckpt"
     if not os.path.exists(os.path.join(feed, "_SUCCESS")):
-        changes = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type", "value"
-        )
         changes.repartition(n_files).write.mode("overwrite").parquet(feed)
 
     scoped = spark.newSession()
-    schema = scoped.read.parquet(feed).schema
+    schema = parquet_schema(scoped, feed)
     src = (
         scoped.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -658,7 +643,7 @@ def stream_cdc_upsert_to_state(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            merged_src = s.read.parquet(state_dir).unionByName(batch_df)
+            merged_src = s.read.schema(schema).parquet(state_dir).unionByName(batch_df)
         else:
             merged_src = batch_df
         w = Window.partitionBy("user_id").orderBy(
@@ -672,14 +657,8 @@ def stream_cdc_upsert_to_state(
         )
         merged.write.mode("overwrite").parquet(state_dir)
 
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(state_dir)
+    stream_foreach_batch(src, apply_batch, ckpt)
+    return spark.read.schema(schema).parquet(state_dir)
 
 
 def stream_dedup_to_table(
@@ -702,11 +681,12 @@ def stream_dedup_to_table(
     tree per fixture state, local FS)."""
     import os
 
-    from ..sources.tables import fingerprint_cache_dir, load_table
-
-    base = base_dir or fingerprint_cache_dir(sf_dir, "stream_dedup", "events")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    # keyed on the feed frame, whose schema fixes the drained one
+    base = base_dir or _durable_dir(sf_dir, "stream_dedup", ev)
     feed = f"{base}/feed"
-    cols = ["event_id", "ts", "user_id", "event_type", "value"]
     # the feed is a TWO-step write (base copy + duplicate slice), and
     # the overwrite's own _SUCCESS lands after step one — guard on a
     # separate sentinel written only after the append, so a crash
@@ -721,7 +701,6 @@ def stream_dedup_to_table(
 
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(base, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select(*cols)
         ev.coalesce(2).write.mode("overwrite").parquet(feed)
         dup = ev.where(F.col("event_id") % 3 == 0)
         dup.coalesce(1).write.mode("append").parquet(feed)
@@ -729,8 +708,7 @@ def stream_dedup_to_table(
             fh.write("ok")
 
     scoped = spark.newSession()
-    schema = scoped.read.parquet(feed).schema
-    src = scoped.readStream.schema(schema).parquet(feed)
+    src = scoped.readStream.schema(parquet_schema(scoped, feed)).parquet(feed)
     for f in src.schema:
         if f.dataType.typeName() == "timestamp_ntz":
             src = src.withColumn(f.name, F.col(f.name).cast("timestamp"))
@@ -740,7 +718,7 @@ def stream_dedup_to_table(
     # drains nothing, and reads the sink back — the restart-resume
     # exactly-once property, same as stream_cdc_upsert
     stream_to_parquet(deduped, f"{base}/sink", f"{base}/sink_ckpt")
-    back = scoped.read.parquet(f"{base}/sink")
+    back = scoped.read.schema(deduped.schema).parquet(f"{base}/sink")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),

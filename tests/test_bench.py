@@ -72,7 +72,7 @@ def test_run_inventory_broken_analysis_time_query(spark):
 
 
 TRACE_KEYS = {
-    "decl_s", "exec_s", "jobs", "stages", "tasks", "task_s",
+    "decl_s", "exec_s", "jobs", "decl_jobs", "stages", "tasks", "task_s",
     "shuffle_write_mb", "shuffle_read_mb", "spill_mb", "peak_exec_mem_mb",
     "layout_scans", "py_sent_mb", "py_returned_mb",
 }
@@ -123,6 +123,7 @@ def test_run_inventory_traces_each_query_from_status_store(spark):
         assert timings[name] <= total + 1e-3
         assert total <= timings[name] * 1.05
         assert r["decl_s"] >= DECL_SLEEP_S > r["exec_s"]
+        assert r["decl_jobs"] == 0
     # one shuffle of 100 groups from every map task; none for a narrow scan
     assert trace["shuffling"]["stages"] >= 2
     assert trace["shuffling"]["shuffle_write_mb"] > 0
@@ -135,6 +136,41 @@ def test_run_inventory_traces_each_query_from_status_store(spark):
     for metric in (METRIC_EXEC_PEAK_MEM_MB, METRIC_SHUFFLE_WRITE_MB, METRIC_SHUFFLE_READ_MB):
         assert len(by_metric.get(metric, [])) == 2
     assert max(by_metric[METRIC_SHUFFLE_WRITE_MB]) > 0
+
+
+def test_trace_splits_declaration_jobs_and_keeps_the_faster_run(spark):
+    """``decl_jobs`` counts the jobs a declaration launches (here one
+    collect, which has no shuffle, so one job) apart from the sink's.
+    Of pass 1's two timed runs the trace describes the faster: the
+    second declaration of ``slower_second`` (its third call, after the
+    warm-up) sleeps 1 s longer than the first."""
+    calls: list[None] = []
+
+    def declares_a_job(spark, sf_dir):
+        spark.range(1).collect()
+        return _ok_query(spark, sf_dir)
+
+    def slower_second(spark, sf_dir):
+        calls.append(None)
+        time.sleep(1.0 if len(calls) == 3 else 0.0)
+        return _ok_query(spark, sf_dir)
+
+    trace: dict[str, dict] = {}
+    timings = run_inventory(
+        spark,
+        SF_DIR,
+        MetricsRecorder(),
+        n_scale=0,
+        ls=4,
+        queries={"declares_a_job": declares_a_job, "slower_second": slower_second},
+        trace=trace,
+    )
+    assert trace["declares_a_job"]["decl_jobs"] == 1
+    assert trace["declares_a_job"]["jobs"] == 2
+    assert len(calls) == 3
+    r = trace["slower_second"]
+    assert r["decl_s"] < 1.0
+    assert r["decl_s"] + r["exec_s"] == pytest.approx(timings["slower_second"], abs=1e-3)
 
 
 def test_trace_reader_resumes_past_ids_the_status_store_lacks(spark):
