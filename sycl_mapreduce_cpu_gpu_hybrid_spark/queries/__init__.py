@@ -44,6 +44,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import _source_stamp
 from . import behavioral, extensions, kmerq, llm, relational, scalars, tpch
 
 _MODULES = [kmerq, relational, scalars, llm, extensions, behavioral, tpch]
@@ -169,24 +170,10 @@ _PLAN_CACHE: dict[tuple, DataFrame] = {}
 _DECL_SEQ = [0]  # unique probe job-group per declaration attempt
 
 
-def _fixture_stamp(sf_dir: str) -> tuple:
-    """Cheap immutability stamp for the fixture dir (size + mtime over
-    its entries): a regenerated fixture changes the stamp, so stale
-    plans bound to rewritten derived dirs can never be served."""
-    import os
-
-    try:
-        with os.scandir(sf_dir) as it:
-            stats = [(e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in it]
-        return tuple(sorted(stats))
-    except OSError:
-        return ("<unstattable>",)
-
-
 def _prepared(name: str, fn: Callable) -> Callable:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc = spark.sparkContext
-        key = (sc.applicationId, sf_dir, _fixture_stamp(sf_dir), name)
+        key = (sc.applicationId, sf_dir, _source_stamp(sf_dir), name)
         hit = _PLAN_CACHE.get(key)
         if hit is not None:
             return hit

@@ -299,25 +299,25 @@ def text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EMB_LSH = dict(threshold=0.4, n_planes=64, bands=8, max_bucket=500, dim=64)
 
-_EMB_DIM_CACHE: dict[tuple, int] = {}
+_EMB_DIM_CACHE: dict[str, tuple[tuple, int]] = {}
 
 
 def _embedding_dim_probe(sf_dir: str) -> int | None:
     """Embedding dimensionality from the first row of the fixture's
     embeddings.parquet via pyarrow (bounded single-row read, zero
-    Spark jobs), memoized per (path, size, mtime_ns) — the same
-    staleness contract as fingerprint_cache_dir, so a fixture
-    regenerated in-place within one process lifetime can never serve
-    a stale dim past the dim-mismatch loud-failure guard. None when
-    the fixture is not a plain single-file parquet table or has zero
-    rows (caller falls back to a Spark probe)."""
+    Spark jobs), memoized per path and source stamp
+    (sources.tables._source_stamp), so a fixture regenerated in-place
+    within one process lifetime can never serve a stale dim past the
+    dim-mismatch loud-failure guard. None when the fixture is not a
+    plain single-file parquet table or has zero rows (caller falls
+    back to a Spark probe)."""
+    from ..sources.tables import _source_stamp
+
     path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-    except OSError:
+    if not os.path.isfile(path):
         return None
-    key = (path, st.st_size, st.st_mtime_ns)
-    if key not in _EMB_DIM_CACHE:
+    stamp = _source_stamp(path)
+    if _EMB_DIM_CACHE.get(path, (None,))[0] != stamp:
         import pyarrow.parquet as pq
 
         batch = next(
@@ -326,8 +326,8 @@ def _embedding_dim_probe(sf_dir: str) -> int | None:
         )
         if batch is None or batch.num_rows == 0:
             return None
-        _EMB_DIM_CACHE[key] = len(batch.column(0)[0])
-    return _EMB_DIM_CACHE[key]
+        _EMB_DIM_CACHE[path] = (stamp, len(batch.column(0)[0]))
+    return _EMB_DIM_CACHE[path][1]
 
 
 def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,7 +443,7 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(emb, queries_from_corpus(emb, n=5), k=10)
 
 
-_IVF_CERT_CACHE: dict[tuple[str, str], DataFrame] = {}
+_IVF_CERT_CACHE: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
 
 
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,16 +461,21 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity_bruteforce_topk; the tighter pytest bound in
     tests/test_similarity.py.
 
-    The declared frame is memoized per (application, fixture): IVF
+    The declared frame is memoized per (application, fixture) and the
+    embeddings table's source stamp, so a rewritten corpus is indexed
+    again: IVF
     index construction — the Lloyd pass plus the centroid/probe-map
     collects inside ivf_topk — is a BUILD-ONCE cost in any ANN system,
     amortized across queries against the same corpus. Every
     materialization of the returned frame still executes the full
     candidate scan, cosine scoring, top-k windows, and the recall
     join; only the index build is reused."""
+    from ..sources.tables import _source_stamp
+
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _IVF_CERT_CACHE:
-        return _IVF_CERT_CACHE[key]
+    stamp = _source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
+    if _IVF_CERT_CACHE.get(key, (None,))[0] == stamp:
+        return _IVF_CERT_CACHE[key][1]
     emb = _emb(spark, sf_dir)
     qs = queries_from_corpus(emb, n=5)
     exact = brute_force_topk(emb, qs, k=10).select("query_id", "vec_id")
@@ -497,7 +502,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_queries"),
         (F.avg("recall") >= 0.55).cast("int").alias("mean_recall_ok"),
     )
-    _IVF_CERT_CACHE[key] = out
+    _IVF_CERT_CACHE[key] = (stamp, out)
     return out
 
 

@@ -141,10 +141,8 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SCALING.md) to percentile_approx, a bounded-memory mergeable
 # KLL-style sketch. The count(*) probe that makes the decision is
 # pushed to parquet footer metadata (no data scan) and memoized per
-# sf_dir so repeated invocations (bench warm-ups) don't re-pay the job.
+# fixture stamp so repeated invocations (bench warm-ups) don't re-pay it.
 MEDIAN_EXACT_MAX_ROWS = 100_000_000
-
-_MEDIAN_PROBE_CACHE: dict[str, int] = {}
 
 
 def _interp_quantile_sql(arr: str, p: float) -> str:
@@ -381,18 +379,16 @@ MEDIAN_SMALL_MAX_ROWS = 2_000_000
 
 
 def _lineitem_rows(li: DataFrame, sf_dir: str) -> int:
-    """Memoized lineitem row count for the median tier probes —
-    parquet FOOTER metadata via the shared plans/budget.py helper
-    (zero Spark jobs at query-declaration time; the r6 shape ran
-    li.count(), a collect()-class action that is a full first-touch
-    scan risk at 100 TB). Falls back to the Spark count only if the
-    source isn't a local single-file parquet table (e.g. a test
-    passes a view-backed sf_dir)."""
-    if sf_dir not in _MEDIAN_PROBE_CACHE:
-        from ..plans.budget import table_rows
+    """Lineitem row count for the median tier probes — parquet FOOTER
+    metadata via the shared, memoized plans/budget.py helper (zero
+    Spark jobs at query-declaration time; the r6 shape ran li.count(),
+    a collect()-class action that is a full first-touch scan risk at
+    100 TB). Falls back to the Spark count only if the source isn't a
+    local single-file parquet table (e.g. a test passes a view-backed
+    sf_dir)."""
+    from ..plans.budget import table_rows
 
-        _MEDIAN_PROBE_CACHE[sf_dir] = table_rows(sf_dir, "lineitem", df=li)
-    return _MEDIAN_PROBE_CACHE[sf_dir]
+    return table_rows(sf_dir, "lineitem", df=li)
 
 
 def _exact_quantiles_tiered(
@@ -1604,8 +1600,8 @@ ORACLES["graph_pagerank_directed"] = _pagerank_directed_oracle()
 def _tradegraph_edge_layout(spark, sf_dir: str, edges):
     """Write-once materialization of the deduped symmetric trade-graph
     edges, keyed on the fingerprints of BOTH source tables (orders and
-    lineitem — either regenerating invalidates the layout, the same
-    staleness contract as fingerprint_cache_dir). Repeat runs scan the
+    lineitem — either regenerating invalidates the layout, the
+    staleness contract of sources.tables.fingerprint). Repeat runs scan the
     ~|E|-row relation (783 MB at the 10x fixture) instead of re-paying
     the |lineitem|-row join + packed dedup. Stored as PLAIN splittable
     parquet, not a bucketed table: measured on the 117M-row sf10

@@ -7,7 +7,12 @@ count follows spark.sql.files.maxPartitionBytes at cluster scale.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,22 +35,22 @@ TABLE_NAMES = [
 def _ns_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's reader
     rejects ([PARQUET_TYPE_ILLEGAL]). Footer-only read — no data I/O;
-    memoized per path (fixtures are immutable and every load_table
-    call would otherwise re-read the footer)."""
-    if path in _NS_COLS_CACHE:
-        return _NS_COLS_CACHE[path]
-    try:
-        import pyarrow.parquet as pq
+    memoized per path and source stamp (every load_table call would
+    otherwise re-read the footer; a rewritten file is read again)."""
+    stamp = _source_stamp(path)
+    if _NS_COLS_CACHE.get(path, (None,))[0] != stamp:
+        try:
+            import pyarrow.parquet as pq
 
-        schema = pq.read_schema(path)
-        cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
-    except Exception:
-        cols = []
-    _NS_COLS_CACHE[path] = cols
-    return cols
+            schema = pq.read_schema(path)
+            cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+        except Exception:
+            cols = []
+        _NS_COLS_CACHE[path] = (stamp, cols)
+    return _NS_COLS_CACHE[path][1]
 
 
-_NS_COLS_CACHE: dict[str, list[str]] = {}
+_NS_COLS_CACHE: dict[str, tuple[tuple, list[str]]] = {}
 _SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
 
 
@@ -206,23 +211,14 @@ def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
-def fingerprint_cache_dir(sf_dir: str, kind: str, table: str) -> str:
-    """Written-once derived-copy location, keyed on a FINGERPRINT of
-    the source parquet (absolute path + per-file size + mtime) and
-    anchored under the system temp dir: regenerating the fixture or
-    running from a different CWD changes/relocates the key, so a stale
-    copy can never be read against a fresh oracle (r5 advice), and
-    repeated bench/parity runs reuse ONE tree instead of accumulating
-    mkdtemp leftovers (r6 advice). The streaming state dirs use it
-    directly; write-once layouts hash it into :func:`derived_layout`'s
-    key. Local-filesystem paths only (os.stat on the source, tempdir
-    anchor) — cluster deployments point derived state at a shared
-    filesystem instead."""
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.sha256(os.path.abspath(src).encode())
+def fingerprint(sf_dir: str, table: str) -> str:
+    """Digest of the source parquet ``{sf_dir}/{table}.parquet``: its
+    absolute path plus each file's name, size and mtime, so a
+    regenerated fixture or one read from another CWD changes it.
+    Raises OSError when the table cannot be stat'ed (view-backed test
+    dirs). Local-filesystem paths only."""
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    h = hashlib.sha256(src.encode())
     files = (
         [src]
         if os.path.isfile(src)
@@ -231,11 +227,7 @@ def fingerprint_cache_dir(sf_dir: str, kind: str, table: str) -> str:
     for p in files:
         st = os.stat(p)
         h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return os.path.join(
-        tempfile.gettempdir(),
-        "smrgh_roundtrip",
-        f"{kind}_{table}_{h.hexdigest()[:16]}",
-    )
+    return h.hexdigest()
 
 
 def read_layout(spark: SparkSession, path: str) -> DataFrame:
@@ -283,8 +275,6 @@ def publish_layout_atomic(write_fn, path: str) -> None:
     the rename drops its copy and reads the winner's, which is
     identical because builds are deterministic per key. A build that
     raises leaves nothing behind."""
-    import shutil
-
     tmp = f"{path}.tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
@@ -300,23 +290,43 @@ def publish_layout_atomic(write_fn, path: str) -> None:
             raise
 
 
-def prune_layout_variants(current: str) -> None:
-    """Best-effort delete of every sibling named like ``current`` up to
-    its hash: the same layout of a regenerated fixture or an older
-    derivation, which would otherwise stay on disk forever. In-flight
-    ``.tmp<pid>`` builds never match."""
-    import re
-    import shutil
+def keyed_dir(
+    sf_dir: str | None, family: str, tables: tuple[str, ...], deriv: str
+) -> str:
+    """The one rule for every directory derived under
+    ``$TMPDIR/smrgh_roundtrip``: ``{family}_{fixture8}_{hash16}``.
+    ``fixture8`` hashes the absolute ``sf_dir`` (None for a tree no
+    fixture feeds, whose family then names its scope); ``hash16``
+    covers the fingerprint of every named table plus ``deriv``, which
+    must name every constant the contents depend on (a version stamp,
+    parallelism, a drained schema). Changing any of them yields a new
+    dir, so stale contents can never be read against a fresh fixture,
+    and repeated runs reuse one tree.
 
-    root, name = os.path.split(os.path.abspath(current))
-    pat = re.compile(re.escape(name[:-16]) + r"[0-9a-f]{16}$")
-    try:
-        siblings = os.listdir(root)
-    except OSError:
-        return
-    for other in siblings:
-        if other != name and pat.match(other):
-            shutil.rmtree(os.path.join(root, other), ignore_errors=True)
+    Prune scope: when the keyed dir does not exist yet (the caller is
+    about to create it), every other ``{family}_{fixture8}_*`` sibling
+    is deleted — the same family of the same fixture under an older
+    fingerprint or derivation. Other fixtures' trees are never
+    touched, so a run at one scale cannot delete a tree that a
+    concurrent run at another scale is reading or draining; two
+    variants that must live side by side need families of their own.
+    An existing dir costs one ``exists`` check and no listing.
+    In-flight ``.tmp<pid>`` builds never match. Raises OSError when a
+    table cannot be fingerprinted."""
+    keys = [fingerprint(sf_dir, t) for t in tables]
+    scope = os.path.abspath(sf_dir) if sf_dir else ""
+    fixture8 = hashlib.sha256(scope.encode()).hexdigest()[:8]
+    h = hashlib.sha256("|".join([*keys, deriv]).encode()).hexdigest()[:16]
+    prefix = f"{family}_{fixture8}_"
+    root = os.path.join(tempfile.gettempdir(), "smrgh_roundtrip")
+    path = os.path.join(root, prefix + h)
+    if not os.path.exists(path):
+        stale = re.compile(re.escape(prefix) + r"[0-9a-f]{16}")
+        with contextlib.suppress(OSError):
+            for other in os.listdir(root):
+                if stale.fullmatch(other):
+                    shutil.rmtree(os.path.join(root, other), ignore_errors=True)
+    return path
 
 
 def derived_layout(
@@ -329,27 +339,16 @@ def derived_layout(
     The boundary rule (r15): layouts may restructure input, and may
     not store a result the timed query is credited with computing.
 
-    The dir ``$TMPDIR/smrgh_roundtrip/{family}_{hash16}`` is keyed on
-    the fingerprint of every named table plus ``deriv``, which must
-    name every constant the bytes depend on (a version stamp,
-    parallelism, thresholds). Changing any of them yields a new dir,
-    and the superseded one is pruned — every other
-    ``{family}_{hash16}`` dir counts as superseded, so each layout
-    needs a family of its own. ``write(tmp)`` fills ``tmp`` and runs
-    only while the keyed dir lacks its ``_SUCCESS`` marker; the marker
-    is added after it returns, and :func:`publish_layout_atomic`
-    publishes the result. Returns None when a table cannot be
-    fingerprinted (view-backed test dirs), so callers keep their lazy
-    lineage."""
-    import hashlib
-    import tempfile
-
+    The dir and its pruning are :func:`keyed_dir`'s. ``write(tmp)``
+    fills ``tmp`` and runs only while the keyed dir lacks its
+    ``_SUCCESS`` marker; the marker is added after it returns, and
+    :func:`publish_layout_atomic` publishes the result. Returns None
+    when a table cannot be fingerprinted (view-backed test dirs), so
+    callers keep their lazy lineage."""
     try:
-        keys = [fingerprint_cache_dir(sf_dir, family, t) for t in tables]
+        path = keyed_dir(sf_dir, family, tables, deriv)
     except OSError:
         return None
-    h = hashlib.sha256("|".join([*keys, deriv]).encode()).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), "smrgh_roundtrip", f"{family}_{h}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
 
         def build(tmp: str) -> None:
@@ -358,6 +357,5 @@ def derived_layout(
             with open(os.path.join(tmp, "_SUCCESS"), "a"):
                 pass
 
-        prune_layout_variants(path)
         publish_layout_atomic(build, path)
     return path

@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import (
     _ns_timestamp_cols,
-    fingerprint_cache_dir,
+    derived_layout,
+    keyed_dir,
     load_table,
     parquet_schema,
 )
@@ -134,30 +135,13 @@ def _n_committed(checkpoint: str) -> int:
     """Number of micro-batches durably committed at ``checkpoint`` —
     the engine's own offset ledger (one all-digit file per committed
     batch under commits/). Local-FS probe, same assumption as
-    fingerprint_cache_dir."""
+    sources.tables.keyed_dir."""
     import os
 
     d = os.path.join(checkpoint, "commits")
     if not os.path.isdir(d):
         return 0
     return sum(1 for p in os.listdir(d) if p.isdigit())
-
-
-def _schema_tag(df: DataFrame) -> str:
-    """Short hash of ``df``'s schema for durable-tree keys. Read-backs
-    pass the drained frame's schema instead of inferring one, so files
-    written under another schema (an older version of the query) must
-    never share its tree."""
-    import hashlib
-
-    return hashlib.sha256(df.schema.json().encode()).hexdigest()[:8]
-
-
-def _durable_dir(sf_dir: str, family: str, drained: DataFrame) -> str:
-    """A stream family's durable tree (sink + checkpoint), keyed on the
-    events fixture's fingerprint and the drained frame's schema."""
-    kind = f"{family}_{_schema_tag(drained)}"
-    return fingerprint_cache_dir(sf_dir, kind, "events")
 
 
 def _overwrite_sink(path: str):
@@ -206,8 +190,9 @@ def stream_tumbling_to_table(
     to the clone (same JVM data, collectable anywhere).
 
     The sink is DURABLE (foreachBatch complete-overwrite parquet +
-    checkpoint, keyed on the fixture fingerprint, the variant name and
-    the drained schema): a re-run against an unchanged fixture resumes
+    checkpoint in a ``keyed_dir`` of family ``stream_tumbling_{name}``,
+    keyed on the fixture fingerprint, the drained schema, ``dedup_key``
+    and both state knobs): a re-run against an unchanged fixture resumes
     a complete checkpoint, drains nothing, and reads the persisted
     result back — restart-resume exactly-once, the r7 pattern the
     append-mode streaming queries already use. Single-process use per keyed tree
@@ -227,15 +212,19 @@ def stream_tumbling_to_table(
         scoped.conf.set(
             "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
         )
-    base = _durable_dir(sf_dir, f"stream_tumbling_{name}", result)
+    base = keyed_dir(
+        sf_dir,
+        f"stream_tumbling_{name}",
+        ("events",),
+        f"{result.schema.json()};dedup={dedup_key}"
+        f";parts={state_partitions};rocksdb={rocksdb_state}",
+    )
     sink = _overwrite_sink(f"{base}/state")
     stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
     return scoped.read.schema(result.schema).parquet(f"{base}/state")
 
 
-def stream_sliding_to_table(
-    spark: SparkSession, sf_dir: str, name: str = "stream_sliding"
-) -> DataFrame:
+def stream_sliding_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window averages through the streaming engine (file
     source -> watermark -> 2h/1h sliding windows -> availableNow drain
     into a durable complete-overwrite parquet sink). Same
@@ -244,7 +233,7 @@ def stream_sliding_to_table(
     scoped = spark.newSession()
     result = sliding_avg(stream_events(scoped, sf_dir))
     scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    base = _durable_dir(sf_dir, "stream_sliding", result)
+    base = keyed_dir(sf_dir, "stream_sliding", ("events",), result.schema.json())
     sink = _overwrite_sink(f"{base}/state")
     stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
     return (
@@ -254,9 +243,7 @@ def stream_sliding_to_table(
     )
 
 
-def stream_running_max_to_table(
-    spark: SparkSession, sf_dir: str, name: str = "stream_running_max"
-) -> DataFrame:
+def stream_running_max_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandasWithState running-max through the streaming engine.
     Update mode emits one row per key per micro-batch that touched it;
     both state fields are monotone (count accumulates, max never
@@ -270,7 +257,7 @@ def stream_running_max_to_table(
     scoped = spark.newSession()
     result = stateful_running_max(stream_events(scoped, sf_dir))
     scoped.conf.set("spark.sql.shuffle.partitions", "8")
-    base = _durable_dir(sf_dir, "stream_rmax", result)
+    base = keyed_dir(sf_dir, "stream_rmax", ("events",), result.schema.json())
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # batch-keyed subdirs: redelivery overwrites, never duplicates
@@ -288,9 +275,7 @@ def stream_running_max_to_table(
     )
 
 
-def stream_interval_join_to_table(
-    spark: SparkSession, sf_dir: str, base_dir: str | None = None
-) -> DataFrame:
+def stream_interval_join_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: clicks joined to the purchases
     that follow within 1 hour, both sides watermarked so join state is
     EVICTED as event time advances — the property that makes a
@@ -332,7 +317,7 @@ def stream_interval_join_to_table(
     # durable keyed sink: re-runs resume the complete checkpoint and
     # drain nothing (restart-resume exactly-once; inner-join append
     # rows are immutable once emitted, so the sink is append-safe)
-    base = base_dir or _durable_dir(sf_dir, "stream_ssjoin", joined)
+    base = keyed_dir(sf_dir, "stream_ssjoin", ("events",), joined.schema.json())
     stream_to_parquet(joined, f"{base}/sink", f"{base}/ckpt")
     return (
         scoped.read.schema(joined.schema)
@@ -345,14 +330,13 @@ def stream_interval_join_to_table(
     )
 
 
-def stream_enrich_to_table(
-    spark: SparkSession, sf_dir: str, base_dir: str | None = None
-) -> DataFrame:
+def stream_enrich_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join: the purchase stream joined to
     the customer dimension (broadcast — stateless, no watermark
     needed; the static side is re-resolvable per micro-batch, which
     is how slowly-changing dims refresh mid-stream). Drained rows
-    aggregate per market segment in batch."""
+    aggregate per market segment in batch. The durable tree is keyed
+    on both tables it reads."""
     scoped = spark.newSession()
     src = stream_events(scoped, sf_dir)
     purchases = src.where(F.col("event_type") == "purchase").select(
@@ -363,7 +347,9 @@ def stream_enrich_to_table(
     )
     enriched = purchases.join(F.broadcast(dim), "user_id")
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
-    base = base_dir or _durable_dir(sf_dir, "stream_enrich", enriched)
+    base = keyed_dir(
+        sf_dir, "stream_enrich", ("events", "customer"), enriched.schema.json()
+    )
     stream_to_parquet(enriched, f"{base}/sink", f"{base}/ckpt")
     return (
         scoped.read.schema(enriched.schema)
@@ -465,9 +451,7 @@ def stream_to_parquet(result: DataFrame, path: str, checkpoint: str) -> None:
     q.awaitTermination()
 
 
-def stream_purchases_to_parquet(
-    spark: SparkSession, sf_dir: str, base_dir: str | None = None
-) -> DataFrame:
+def stream_purchases_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durable-sink roundtrip: stream the events fixture, keep the
     row-level purchase stream (stateless — append mode emits every row
     immediately; an aggregation here would withhold trailing windows
@@ -476,8 +460,8 @@ def stream_purchases_to_parquet(
     micro-batch), then read the files back and aggregate per day in
     batch. The returned frame is the proof the durable sink holds
     exactly the streamed rows. Conf stays on a cloned session, same as
-    stream_tumbling_to_table. The base dir is keyed on the fixture
-    fingerprint (one durable tree per fixture state): re-runs resume
+    stream_tumbling_to_table. The base dir is a ``keyed_dir`` (one
+    durable tree per fixture state and drained schema): re-runs resume
     the complete checkpoint, drain nothing, and read the sink —
     restart-resume exactly-once, not a fresh re-ingest per call."""
     scoped = spark.newSession()
@@ -485,7 +469,7 @@ def stream_purchases_to_parquet(
     purchases = src.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
-    base = base_dir or _durable_dir(sf_dir, "stream_pq", purchases)
+    base = keyed_dir(sf_dir, "stream_pq", ("events",), purchases.schema.json())
     stream_to_parquet(purchases, f"{base}/data", f"{base}/ckpt")
     back = scoped.read.schema(purchases.schema).parquet(f"{base}/data")
     return (
@@ -498,10 +482,7 @@ def stream_purchases_to_parquet(
 
 
 def stream_rate_source_to_parquet(
-    spark: SparkSession,
-    base_dir: str | None = None,
-    rows_per_batch: int = 2000,
-    n_batches: int = 5,
+    spark: SparkSession, rows_per_batch: int = 2000, n_batches: int = 5
 ) -> DataFrame:
     """The NON-FILE streaming source path, end to end: the
     rate-micro-batch source generates offset-tracked synthetic rows
@@ -522,15 +503,13 @@ def stream_rate_source_to_parquet(
     The restart LOOP is driven by the checkpoint's own commit ledger,
     not a fixed iteration count: each pass starts a query that resumes
     from the committed offset and commits exactly one more batch, until
-    ``n_batches`` are durably committed. A completed tree (kept under a
-    parameter-keyed temp dir) is therefore reused READ-ONLY by later
-    calls — the result is always exactly values
+    ``n_batches`` are durably committed. A completed tree (a
+    ``keyed_dir`` whose family names ``rows_per_batch`` x ``n_batches``,
+    so each parameter pair keeps a tree of its own) is therefore reused
+    READ-ONLY by later calls — the result is always exactly values
     [0, n_batches * rows_per_batch), whether this call performed all
     the restarts, some of them (crash recovery), or none (re-run).
     Single-process use per keyed tree, like the other durable sinks."""
-    import os
-    import tempfile
-
     scoped = spark.newSession()
     src = (
         scoped.readStream.format("rate-micro-batch")
@@ -540,11 +519,7 @@ def stream_rate_source_to_parquet(
         .load()
         .select("value")
     )
-    base = base_dir or os.path.join(
-        tempfile.gettempdir(),
-        "smrgh_roundtrip",
-        f"rate_{rows_per_batch}x{n_batches}_{_schema_tag(src)}",
-    )
+    base = keyed_dir(None, f"rate_{rows_per_batch}x{n_batches}", (), src.schema.json())
     ckpt = f"{base}/ckpt"
     attempts = 0
     while _n_committed(ckpt) < n_batches:
@@ -581,16 +556,14 @@ def stream_foreach_batch(
     q.awaitTermination()
 
 
-def stream_cdc_upsert_to_state(
-    spark: SparkSession,
-    sf_dir: str,
-    n_files: int = 4,
-    base_dir: str | None = None,
-) -> DataFrame:
+_CDC_FEED_FILES = 4
+
+
+def stream_cdc_upsert_to_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC apply through the streaming engine: the events table poses
     as a keyed change feed (key = user_id, version = (ts, event_id)),
-    split into ``n_files`` parquet files and drained ONE FILE PER
-    MICRO-BATCH (maxFilesPerTrigger=1) through foreachBatch, which
+    split into ``_CDC_FEED_FILES`` parquet files and drained ONE FILE
+    PER MICRO-BATCH (maxFilesPerTrigger=1) through foreachBatch, which
     MERGEs each batch into a keyed parquet state — latest version
     wins. This is the streaming complement of the batch MERGE
     (queries/relational.py merge_upsert): same latest-wins semantics,
@@ -607,17 +580,16 @@ def stream_cdc_upsert_to_state(
     The merged frame is localCheckpointed before the overwrite so the
     state dir is never read and rewritten in the same job.
 
-    Storage: the default base dir is KEYED on the fixture fingerprint
-    (sources.tables.fingerprint_cache_dir — r6 advice: mkdtemp per
-    invocation accumulated feed+state+checkpoint trees under /tmp
-    across bench/parity runs), so repeated runs against an unchanged
-    fixture reuse one tree: the feed write is _SUCCESS-guarded, the
-    checkpoint already covers the feed, availableNow finds nothing new,
-    and the call returns the (deterministic) persisted state. A run
-    killed mid-stream resumes from the checkpoint and converges to the
-    same state — the merge is idempotent. Local filesystem only (the
-    _SUCCESS probes and tempdir anchor assume one); cluster
-    deployments pass an explicit shared-FS ``base_dir``."""
+    Storage: the feed is restructured input, so it is a
+    ``derived_layout`` (published atomically, built once per fixture
+    state); the state and checkpoint live in a ``keyed_dir`` keyed on
+    the feed and the drained schema. Repeated runs against an
+    unchanged fixture reuse both: the checkpoint already covers the
+    feed, availableNow finds nothing new, and the call returns the
+    (deterministic) persisted state. A run killed mid-stream resumes
+    from the checkpoint and converges to the same state — the merge is
+    idempotent. Local filesystem only (the state's _SUCCESS probe and
+    the tempdir anchor assume one)."""
     import os
 
     from pyspark.sql import Window
@@ -625,13 +597,13 @@ def stream_cdc_upsert_to_state(
     changes = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # the drained stream replays the feed, whose schema is the feed
-    # frame's: keying on that frame keys on the drained schema
-    base = base_dir or _durable_dir(sf_dir, "cdc_state", changes)
-    feed, state_dir, ckpt = f"{base}/feed", f"{base}/state", f"{base}/ckpt"
-    if not os.path.exists(os.path.join(feed, "_SUCCESS")):
-        changes.repartition(n_files).write.mode("overwrite").parquet(feed)
-
+    feed = derived_layout(
+        sf_dir,
+        "cdc_feed",
+        ("events",),
+        f"{changes.schema.json()};files={_CDC_FEED_FILES}",
+        lambda tmp: changes.repartition(_CDC_FEED_FILES).write.parquet(tmp),
+    )
     scoped = spark.newSession()
     schema = parquet_schema(scoped, feed)
     src = (
@@ -639,6 +611,10 @@ def stream_cdc_upsert_to_state(
         .option("maxFilesPerTrigger", "1")
         .parquet(feed)
     )
+    base = keyed_dir(
+        sf_dir, "cdc_state", ("events",), f"{os.path.basename(feed)};{schema.json()}"
+    )
+    state_dir, ckpt = f"{base}/state", f"{base}/ckpt"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -661,63 +637,59 @@ def stream_cdc_upsert_to_state(
     return spark.read.schema(schema).parquet(state_dir)
 
 
-def stream_dedup_to_table(
-    spark: SparkSession, sf_dir: str, base_dir: str | None = None
-) -> DataFrame:
+def stream_dedup_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once-per-id dedup end to end: a feed with
     REAL duplicates (the full events table plus a second copy of the
     event_id % 3 == 0 slice, as separate parquet files) is drained
     through dropDuplicatesWithinWatermark (dedup_within_watermark)
-    into a memory sink, then reduced to an exact integer digest per
-    event_type. The feed is drained in ONE availableNow batch (no
-    maxFilesPerTrigger) so the result is deterministic regardless of
-    file enumeration order — multi-batch re-delivery semantics are
-    exercised by stream_cdc_upsert, watermark-horizon eviction by the
-    operator's unit tests. Oracle: the digest over the DISTINCT feed,
-    i.e. the original table — streaming dedup must reproduce batch
-    DISTINCT exactly.
+    into a durable parquet sink, then reduced to an exact integer
+    digest per event_type. The feed is drained in ONE availableNow
+    batch (no maxFilesPerTrigger) so the result is deterministic
+    regardless of file enumeration order — multi-batch re-delivery
+    semantics are exercised by stream_cdc_upsert, watermark-horizon
+    eviction by the operator's unit tests. Oracle: the digest over the
+    DISTINCT feed, i.e. the original table — streaming dedup must
+    reproduce batch DISTINCT exactly.
 
-    Storage keyed on the fixture fingerprint like the CDC state (one
-    tree per fixture state, local FS)."""
+    The feed is a ``derived_layout`` like the CDC feed: both write
+    steps land in one unpublished copy, so a crash between them can
+    never leave a duplicate-free feed that silently turns the dedup
+    gate into a no-op. The sink and checkpoint live in a ``keyed_dir``
+    keyed on the feed and the drained schema."""
     import os
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    # keyed on the feed frame, whose schema fixes the drained one
-    base = base_dir or _durable_dir(sf_dir, "stream_dedup", ev)
-    feed = f"{base}/feed"
-    # the feed is a TWO-step write (base copy + duplicate slice), and
-    # the overwrite's own _SUCCESS lands after step one — guard on a
-    # separate sentinel written only after the append, so a crash
-    # between the steps can never leave a duplicate-free feed that
-    # silently turns the dedup gate into a no-op (r7 advice)
-    done = os.path.join(base, "_feed_complete")
-    if not os.path.exists(done):
-        # wipe the whole keyed tree first: a half-built feed may already
-        # be covered by the checkpoint's file-source log, and rewriting
-        # feed files under a live checkpoint would re-ingest them as new
-        import shutil
 
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        ev.coalesce(2).write.mode("overwrite").parquet(feed)
+    def write_feed(tmp: str) -> None:
+        ev.coalesce(2).write.parquet(tmp)
         dup = ev.where(F.col("event_id") % 3 == 0)
-        dup.coalesce(1).write.mode("append").parquet(feed)
-        with open(done, "w") as fh:
-            fh.write("ok")
+        dup.coalesce(1).write.mode("append").parquet(tmp)
 
+    feed = derived_layout(
+        sf_dir,
+        "dedup_feed",
+        ("events",),
+        f"{ev.schema.json()};files=2;dup=event_id%3==0;dup_files=1",
+        write_feed,
+    )
     scoped = spark.newSession()
     src = scoped.readStream.schema(parquet_schema(scoped, feed)).parquet(feed)
     for f in src.schema:
         if f.dataType.typeName() == "timestamp_ntz":
             src = src.withColumn(f.name, F.col(f.name).cast("timestamp"))
     deduped = dedup_within_watermark(src, watermark="1 hour")
-    # durable sink + checkpoint under the SAME keyed base: a re-run
-    # against an unchanged fixture resumes a complete checkpoint,
-    # drains nothing, and reads the sink back — the restart-resume
-    # exactly-once property, same as stream_cdc_upsert
-    stream_to_parquet(deduped, f"{base}/sink", f"{base}/sink_ckpt")
+    # a re-run against an unchanged fixture resumes a complete
+    # checkpoint, drains nothing, and reads the sink back — the
+    # restart-resume exactly-once property, same as stream_cdc_upsert
+    base = keyed_dir(
+        sf_dir,
+        "stream_dedup",
+        ("events",),
+        f"{os.path.basename(feed)};{deduped.schema.json()}",
+    )
+    stream_to_parquet(deduped, f"{base}/sink", f"{base}/ckpt")
     back = scoped.read.schema(deduped.schema).parquet(f"{base}/sink")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),

@@ -1,6 +1,6 @@
 """Write-once layout lifecycle (r12 verdict task 7): a derivation-
 version bump must (a) re-derive the layout under a NEW key and (b) GC
-the superseded directory via prune_layout_variants — the r11
+the superseded directory via sources.tables.keyed_dir — the r11
 SUPP_NODE_OFFSET near-miss class, where a semantics change without a
 key change would have served stale bytes under a correct-looking
 fixture fingerprint. Parameterized over every version-stamped layout
@@ -11,8 +11,10 @@ checked directly on a scratch fixture."""
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import re
+import shutil
 import tempfile
 import time
 
@@ -22,9 +24,11 @@ SF = "/root/testdata/sf0.001"
 ROOT = os.path.join(tempfile.gettempdir(), "smrgh_roundtrip")
 
 
-def _dirs(family: str) -> set[str]:
-    # exactly derived_layout's "{family}_{hash16}" names
-    return set(glob.glob(os.path.join(ROOT, family + "_" + "[0-9a-f]" * 16)))
+def _dirs(family: str, sf_dir: str = SF) -> set[str]:
+    # exactly keyed_dir's "{family}_{fixture8}_{hash16}" names for one fixture
+    fixture8 = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    name = f"{family}_{fixture8}_" + "[0-9a-f]" * 16
+    return set(glob.glob(os.path.join(ROOT, name)))
 
 
 def _build_orderline(spark):
@@ -132,7 +136,7 @@ def test_version_bump_rederives_and_prunes(
         f"{name}: version bump did not change the layout key: "
         f"{before} -> {bumped}"
     )
-    # prune_layout_variants must have GC'd every superseded sibling
+    # keyed_dir must have GC'd every superseded sibling
     assert not (before & _dirs(family)), (
         f"{name}: stale pre-bump layout dir survived the re-derivation"
     )
@@ -219,7 +223,8 @@ def test_derived_layout_lifecycle(tmp_path, monkeypatch):
     assert not root.exists() or os.listdir(root) == []
 
     p0 = layout()
-    assert re.fullmatch("fam_[0-9a-f]{16}", os.path.basename(p0))
+    fixture8 = hashlib.sha256(str(fx).encode()).hexdigest()[:8]
+    assert re.fullmatch(f"fam_{fixture8}_[0-9a-f]{{16}}", os.path.basename(p0))
     assert os.path.isfile(os.path.join(p0, "_SUCCESS"))
     assert layout() == p0 and len(calls) == 1  # published: no rebuild
     assert sorted(os.listdir(root)) == [os.path.basename(p0)]
@@ -235,6 +240,15 @@ def test_derived_layout_lifecycle(tmp_path, monkeypatch):
 
     # a table that cannot be fingerprinted keeps the caller lazy
     assert derived_layout(str(fx), "fam", ("absent",), "v=1", write) is None
+
+    # the prune is scoped to one fixture: another fixture's layout of
+    # the same family survives this one's re-derivation
+    fx2 = tmp_path / "fx2"
+    shutil.copytree(fx, fx2)
+    other = derived_layout(str(fx2), "fam", ("a", "b"), "v=2", write)
+    p3 = layout("v=3")
+    assert not os.path.exists(p2) and os.path.isdir(other)
+    assert sorted(os.listdir(root)) == sorted(map(os.path.basename, (p3, other)))
 
 
 def test_orderline_buckets_follow_core_slots(spark, monkeypatch):

@@ -196,33 +196,42 @@ def test_stream_events_schema_follows_source_stamp(spark, sf_dir, tmp_path):
     assert "extra" in stream_events(scoped, str(tmp_path)).columns
 
 
-def test_file_sink_read_back_skips_uncommitted_files(spark, sf_dir, tmp_path):
+def test_file_sink_read_back_skips_uncommitted_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """A read-back with an explicit schema still lists the file sink
     through its _spark_metadata log: a parquet file dropped into the
     sink without a log entry is not read."""
+    import glob
+    import tempfile
+
     from sycl_mapreduce_cpu_gpu_hybrid_spark.streaming.events import (
         stream_purchases_to_parquet,
     )
 
-    base = str(tmp_path / "pq")
-    first = _all_rows(stream_purchases_to_parquet(spark, sf_dir, base_dir=base))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = _all_rows(stream_purchases_to_parquet(spark, sf_dir))
+    (base,) = glob.glob(str(tmp_path / "smrgh_roundtrip" / "stream_pq_*"))
     data = f"{base}/data"
     committed = spark.read.parquet(data).count()
     part = next(f for f in os.listdir(data) if f.endswith(".parquet"))
     shutil.copy(os.path.join(data, part), os.path.join(data, "part-stray.parquet"))
     # a listing read (a glob bypasses the log) does see the stray file
     assert spark.read.parquet(f"{data}/*.parquet").count() > committed
-    again = stream_purchases_to_parquet(spark, sf_dir, base_dir=base)
+    again = stream_purchases_to_parquet(spark, sf_dir)
     assert _all_rows(again) == first
 
 
 def test_durable_dir_keyed_on_drained_schema(spark, sf_dir):
     """Frames drained under one family land in one durable tree only
-    when their schemas match."""
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.streaming.events import _durable_dir
+    when their schemas match: every stream keys its tree on the
+    drained schema."""
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import keyed_dir
+
+    def tree(df):
+        return keyed_dir(sf_dir, "t_family", ("events",), df.schema.json())
 
     events = stream_events(spark.newSession(), sf_dir)
-    same = _durable_dir(sf_dir, "t_family", events)
-    assert _durable_dir(sf_dir, "t_family", events.select("*")) == same
-    narrow = events.select("event_id", "ts")
-    assert _durable_dir(sf_dir, "t_family", narrow) != same
+    same = tree(events)
+    assert tree(events.select("*")) == same
+    assert tree(events.select("event_id", "ts")) != same
