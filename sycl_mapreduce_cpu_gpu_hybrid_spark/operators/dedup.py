@@ -989,12 +989,11 @@ def _connected_components_star(
     a_col: str = "a",
     b_col: str = "b",
     max_iters: int = 25,
-    local_max_edges: int = CC_LOCAL_MAX_EDGES,
     n_edges_bound: int | None = None,
 ) -> tuple[DataFrame, int]:
     """connected_components body; also returns the round count so the
     O(log n) bound is testable (0 when the bounded local fast path
-    answered — pass ``local_max_edges=0`` to force the distributed
+    answered — ``SMRGH_FORCE_DISTRIBUTED`` forces the distributed
     loop)."""
     from ..plans.budget import local_tier_enabled
 
@@ -1007,12 +1006,12 @@ def _connected_components_star(
         .where(F.col("hi") != F.col("lo"))
         .distinct()
     )
-    if local_tier_enabled(local_max_edges) and not (
+    if local_tier_enabled(CC_LOCAL_MAX_EDGES) and not (
         # a caller-supplied bound already over the cap proves the
         # probe would overflow — skip its full pipeline execution
         # (see connected_components docstring, r15)
         n_edges_bound is not None
-        and n_edges_bound > local_max_edges
+        and n_edges_bound > CC_LOCAL_MAX_EDGES
     ):
         # single-pass bounded probe: limit(ceiling + 1).toPandas()
         # executes the pair pipeline ONCE with no checkpoint write —
@@ -1028,8 +1027,8 @@ def _connected_components_star(
         # forced-distributed switch skips the probe entirely, and
         # layout-backed callers pass n_edges_bound so the known-big
         # case never probes.
-        pdf = edges_decl.limit(local_max_edges + 1).toPandas()
-        if len(pdf) <= local_max_edges:
+        pdf = edges_decl.limit(CC_LOCAL_MAX_EDGES + 1).toPandas()
+        if len(pdf) <= CC_LOCAL_MAX_EDGES:
             return _cc_local_pdf(pdf, pairs.sparkSession), 0
     # each round's plan references the previous round's edges twice —
     # truncate lineage once here (see docstring)

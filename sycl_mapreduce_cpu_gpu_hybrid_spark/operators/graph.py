@@ -34,50 +34,16 @@ from pyspark.sql import functions as F
 
 RANK_SCALE = 1_000_000_000_000  # 1e12
 
-# Edge ceiling for the driver-local fast path — same bounded-budget
-# class as dedup.CC_LOCAL_MAX_EDGES / similarity's collect ceiling:
-# 2M edges is ~32 MB of longs via Arrow, the top of a sane broadcast
-# build side.
-PR_LOCAL_MAX_EDGES = 2_000_000
-
-
-def _pagerank_local(
-    ed: DataFrame,
-    iters: int,
-    damping_pct: int,
-    n_probe: int,
-    dangling: str = "none",
-) -> DataFrame | None:
-    """Bounded small-graph fast path: the fixed-point iteration is
-    EXACT integer arithmetic (truncating divisions, associative sums),
-    so a driver-side numpy replay is bit-identical to the distributed
-    loop — and to the DuckDB oracle — at microseconds per round
-    instead of one shuffle. limit(n+1)-bounded collect; None above the
-    ceiling (the distributed loop is the at-scale path)."""
-    import numpy as np
-
-    from ..plans.budget import local_tier_enabled
-
-    # shared budget gate (plans/budget.py): honors the
-    # forced-distributed switch BEFORE paying the probe job
-    if not local_tier_enabled(n_probe):
-        return None
-    # count-first probe: ``ed`` is localCheckpointed, so the count is
-    # one cheap cached-RDD job — a limit(n+1).collect() probe would
-    # transfer up to the whole ceiling just to discover the graph is
-    # too big and throw it away
-    if ed.count() > n_probe:
-        return None
-    pdf = ed.toPandas()  # Arrow columnar transfer — no per-Row objects
-    return _pagerank_replay(pdf, ed.sparkSession, iters, damping_pct, dangling)
-
 
 def _pagerank_replay(
     pdf, spark, iters: int, damping_pct: int, dangling: str = "none"
 ) -> DataFrame:
     """Driver-side numpy replay of the exact fixed-point iteration
-    over an already-collected (src, dst) frame. ``dangling`` follows
-    :func:`pagerank_fixedpoint`."""
+    over an already-collected (src, dst) frame — bit-identical to
+    :func:`pagerank_fixedpoint` (exact integer arithmetic both ways),
+    whose ``dangling`` it follows. PageRank's one driver-local tier,
+    the bounded trade graph (queries/relational.graph_pagerank), runs
+    it; :func:`pagerank_fixedpoint` itself is always distributed."""
     import numpy as np
 
     if not len(pdf):
@@ -153,8 +119,6 @@ def pagerank_fixedpoint(
     edges: DataFrame,
     iters: int = 3,
     damping_pct: int = 85,
-    local_max_edges: int = PR_LOCAL_MAX_EDGES,
-    edge_count_bound: int | None = None,
     symmetric: bool = False,
     dangling: str = "none",
     node_deg: DataFrame | None = None,
@@ -175,16 +139,6 @@ def pagerank_fixedpoint(
     truncation on directed web-style graphs. Identical expressions in
     the distributed loop, the local replay, and
     :func:`pagerank_oracle_sql` (``dangling=True``).
-
-    ``edge_count_bound``: optional caller-supplied UPPER bound on the
-    edge count derived from metadata alone (e.g. a parquet footer row
-    count — distinct (a, b) pairs over a fact table can never exceed
-    the fact rows). When the bound already fits the local ceiling the
-    probe jobs disappear entirely: no localCheckpoint materialization,
-    no count — the edge lineage executes exactly ONCE, inside the
-    Arrow collect (measured: 3 jobs -> 1 on the sf0.1 trade graph).
-    An over-ceiling or absent bound falls through to the checkpoint +
-    count-probe path unchanged.
 
     ``symmetric=True`` declares that BOTH directions of every edge are
     present (an undirected graph materialized as two directed rows).
@@ -209,12 +163,6 @@ def pagerank_fixedpoint(
     out-degrees of ``edges`` under the declared ``symmetric``
     semantics — derive it from the same materialized relation, never
     hand-build it (the r13 layout-lifecycle lesson)."""
-    from ..plans.budget import within_budget
-
-    if within_budget(edge_count_bound, local_max_edges):
-        return _pagerank_replay(
-            edges.toPandas(), edges.sparkSession, iters, damping_pct, dangling
-        )
     # Materialize the raw edge relation ONCE, HASH-PARTITIONED ON src:
     # callers pass edges as an arbitrary lineage (here a join+distinct
     # over the fact table) and every iteration re-consumes it — without
@@ -238,10 +186,6 @@ def pagerank_fixedpoint(
     # exchange on the 117M-row sf10 relation; see
     # queries/relational._tradegraph_edge_layout.)
     ed = edges.repartition(n_part, "src").localCheckpoint()
-    if local_max_edges > 0:
-        local = _pagerank_local(ed, iters, damping_pct, local_max_edges, dangling)
-        if local is not None:
-            return local
     # one aggregation yields BOTH the node universe and out-degrees:
     # dst-only nodes get deg=0 (never probed — the contribution join
     # keys on src, and every src has deg >= 1 by construction). The

@@ -1,20 +1,34 @@
 """Shared budget gate for bounded driver-local fast paths.
 
-Several operators carry a cost-based driver-local tier next to their
-distributed plan — connected components' union-find
-(operators/dedup.py), PageRank's numpy replay (operators/graph.py)
-and the trade-graph edge build (queries/relational.py), and
-graph_triangles' dense-gemm counter (queries/behavioral.py). Each
-tier is bounded (metadata probe or count-first probe), bit-identical
-to its distributed twin, and falls through past its ceiling — the
-same cost-based tiering any engine's planner does for a build side
-that fits memory.
+Six tiers sit next to a distributed plan. Each is decided once, at
+one site, against one module constant read at call time:
+
+- trade-graph PageRank: queries/relational.graph_pagerank and
+  graph_pagerank_directed, ``PR_LOCAL_MAX_EDGES``;
+- CC union-find: operators/dedup._connected_components_star,
+  ``CC_LOCAL_MAX_EDGES``;
+- ngram dense gemm: operators/dedup._ngram_pairs_dense,
+  ``NGRAM_DENSE_MAX_MEMBERSHIPS``;
+- triangle gemm: queries/behavioral.graph_triangles,
+  ``TRI_LOCAL_MAX_NODES`` (and ``TRI_LOCAL_MAX_EDGES``);
+- RFM ntile windows: queries/behavioral.orders_rfm,
+  ``RFM_NTILE_LOCAL_MAX``;
+- quantile sorted-array form: queries/relational.agg_median and
+  agg_median_approx, ``MEDIAN_SMALL_MAX_ROWS``.
+
+Each tier is bounded (metadata probe or count-first probe), bit-
+identical to its distributed twin, and falls through past its ceiling
+— the same cost-based tiering any engine's planner does for a build
+side that fits memory. A tier is forced off only through the switch
+below or by monkeypatching its constant, never by a per-call keyword.
 
 This module is the ONE place the gate decision lives, so every tier
 provably keeps its at-scale twin honest:
 
 - :func:`within_budget` / :func:`local_tier_enabled` are the only
-  gate predicates tiers may use;
+  gate predicates tiers may use, always passed an UPPER_CASE module
+  constant and imported inside the calling function
+  (tests/test_budget_tiers.py checks both);
 - the ``SMRGH_FORCE_DISTRIBUTED`` environment variable switches every
   local tier off at once, forcing the distributed twins end-to-end —
   tests/test_budget_tiers.py runs the equality suites under the

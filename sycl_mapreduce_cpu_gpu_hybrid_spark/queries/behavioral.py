@@ -277,14 +277,15 @@ _TRI_PART_CAP = 20  # drop hub parts: a part with d suppliers yields
 # d*(d-1)/2 edges, so an uncapped hub is the same quadratic hazard as
 # a stop-shingle in dedup_ngram_jaccard — cap it identically.
 
+# Budgets of graph_triangles' dense-gemm tier: the supplier-footer node
+# bound caps gemm flops (2*n^3 <= ~3.7e12) and dense scratch (n^2
+# floats, <= ~600 MB); the edge count caps the driver Arrow transfer
+# (4M edges ~= 64 MB — the similarity._collect_matrix contract).
+TRI_LOCAL_MAX_NODES = 12288
+TRI_LOCAL_MAX_EDGES = 4_000_000
 
-def graph_triangles(
-    spark: SparkSession,
-    sf_dir: str,
-    orientation: str = "degree",
-    local_max_nodes: int = 12288,
-    local_max_edges: int = 4_000_000,
-) -> DataFrame:
+
+def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count over the supplier co-supply graph (suppliers
     adjacent iff they supply a common part). The LLM-pipeline use is
     identical in shape: triangles over a near-duplicate candidate
@@ -297,21 +298,12 @@ def graph_triangles(
     (3) orientation turns wedges into pairs of OUT-neighbors, and the
     semi-join closure counts each triangle exactly once at its unique
     two-out-edge apex (any total-order orientation is a DAG); the
-    TOTAL is orientation-independent, so both variants hash against
-    the same id-oriented DuckDB oracle.
+    TOTAL is orientation-independent, so it hashes against the
+    id-oriented DuckDB oracle.
 
-    orientation='degree' (declared): edges point low-(deg, id) →
-    high-(deg, id), bounding any hub's wedge fan-out by O(sqrt(m)) —
-    the O(m^1.5) bound that survives skewed degree distributions at
-    100 TB. orientation='id': plain s1 < s2 — measured ~10% faster on
-    THIS fixture because its co-supply graph is degree-uniform (avg
-    degree 226, no hubs), so the deg lookup buys nothing locally; kept
-    as the measured counter-example, equality property-tested in
-    tests/test_scale_smoke.py."""
-    # validate BEFORE any DataFrame work: a late check would build the
-    # whole edge plan just to raise
-    if orientation not in ("degree", "id"):
-        raise ValueError(f"orientation must be degree|id, got {orientation!r}")
+    Edges point low-(deg, id) → high-(deg, id), bounding any hub's
+    wedge fan-out by O(sqrt(m)) — the O(m^1.5) bound that survives
+    skewed degree distributions at 100 TB."""
     # no fan_out before the groupBy: the aggregation shuffles on the
     # part key anyway (same reasoning as basket_pairs); parallelism for
     # the wedge expansion comes from the explicit repartition below
@@ -357,104 +349,79 @@ def graph_triangles(
         .repartition(spark.sparkContext.defaultParallelism)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if orientation == "degree":
-        # ordkey = deg * 2^24 + id is a total order (supplier ids are
-        # far below 2^24; a deg tie breaks on id), broadcast-joined
-        # onto both endpoints of the checkpointed edge list (re-running
-        # two broadcast joins per consumer measured CHEAPER than
-        # eagerly materializing the oriented copy)
-        deg = (
-            edges.select(F.col("s1").alias("v"))
-            .union(edges.select(F.col("s2").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .select("v", (F.col("deg") * (1 << 24) + F.col("v")).alias("ord"))
+    # ordkey = deg * 2^24 + id is a total order (supplier ids are
+    # far below 2^24; a deg tie breaks on id), broadcast-joined
+    # onto both endpoints of the checkpointed edge list (re-running
+    # two broadcast joins per consumer measured CHEAPER than
+    # eagerly materializing the oriented copy)
+    deg = (
+        edges.select(F.col("s1").alias("v"))
+        .union(edges.select(F.col("s2").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .select("v", (F.col("deg") * (1 << 24) + F.col("v")).alias("ord"))
+    )
+    oriented = (
+        edges.join(F.broadcast(deg).alias("d1"), F.col("s1") == F.col("d1.v"))
+        .join(F.broadcast(deg).alias("d2"), F.col("s2") == F.col("d2.v"))
+        .select(
+            F.when(F.col("d1.ord") < F.col("d2.ord"), F.col("s1"))
+            .otherwise(F.col("s2"))
+            .alias("src"),
+            F.when(F.col("d1.ord") < F.col("d2.ord"), F.col("s2"))
+            .otherwise(F.col("s1"))
+            .alias("dst"),
+            F.greatest("d1.ord", "d2.ord").alias("dst_ord"),
         )
-        oriented = (
-            edges.join(F.broadcast(deg).alias("d1"), F.col("s1") == F.col("d1.v"))
-            .join(F.broadcast(deg).alias("d2"), F.col("s2") == F.col("d2.v"))
-            .select(
-                F.when(F.col("d1.ord") < F.col("d2.ord"), F.col("s1"))
-                .otherwise(F.col("s2"))
-                .alias("src"),
-                F.when(F.col("d1.ord") < F.col("d2.ord"), F.col("s2"))
-                .otherwise(F.col("s1"))
-                .alias("dst"),
-                F.greatest("d1.ord", "d2.ord").alias("dst_ord"),
-            )
-        )
-    elif orientation == "id":
-        # canonical s1 < s2 already orients by id; ord = id
-        oriented = edges.select(
-            F.col("s1").alias("src"),
-            F.col("s2").alias("dst"),
-            F.col("s2").alias("dst_ord"),
-        )
-    else:
-        raise ValueError(f"orientation must be degree|id, got {orientation!r}")
+    )
     # Bounded dense local path (the CC/PageRank cost-based-local
     # pattern): when the VERTEX universe fits a dense adjacency matrix
     # (suppliers here — dimension tables are small universes), triangle
     # count = sum((A @ A) * A) / 6 — row-blocked BLAS sgemm, exact in
     # float32 entries (common-neighbor counts <= n <= ceiling << 2^24)
     # with per-block float64 accumulation (every addend is an exact
-    # integer and 6*tri << 2^53). Two budgets gate the tier: the node
-    # ceiling bounds gemm flops (2*n^3 <= ~3.7e12, a few seconds at
-    # measured BLAS throughput) and dense scratch (n^2 floats, <=
-    # ~600 MB), and the EDGE budget bounds the driver Arrow transfer
-    # (4M edges ~= 64 MB — the similarity._collect_matrix contract);
-    # either budget exceeded -> the distributed degree-oriented wedge
-    # join below, whose O(m^1.5) bound is the 100 TB path. A bitset
-    # popcount tier was prototyped and rejected: this box's numpy
-    # runs uint64 elementwise ops ~500x slower than BLAS sgemm, so
-    # the gemm wins everywhere the transfer budget admits.
+    # integer and 6*tri << 2^53). Either budget (TRI_LOCAL_MAX_*)
+    # exceeded -> the distributed degree-oriented wedge join below,
+    # whose O(m^1.5) bound is the 100 TB path. A bitset popcount tier
+    # was prototyped and rejected: this box's numpy runs uint64
+    # elementwise ops ~500x slower than BLAS sgemm, so the gemm wins
+    # everywhere the transfer budget admits.
     from ..plans.budget import local_tier_enabled, table_rows
 
-    if local_tier_enabled(local_max_nodes):
-        # vertex-universe probe with ZERO Spark jobs: the co-supply
-        # graph's nodes are suppliers, so the supplier table's parquet
-        # footer row count (memoized, plans/budget.py) bounds the node
-        # count; falls back to a Spark-side distinct count when the
-        # dimension isn't a local parquet file
-        try:
-            n_node_bound = table_rows(sf_dir, "supplier")
-        except FileNotFoundError:
-            n_node_bound = (
-                edges.select(F.col("s1").alias("v"))
-                .union(edges.select(F.col("s2").alias("v")))
-                .distinct()
-                .count()
-            )
-        if n_node_bound <= local_max_nodes:
-            import numpy as np
+    # vertex-universe probe with ZERO Spark jobs: the co-supply graph's
+    # nodes are suppliers, so the supplier table's parquet footer row
+    # count (memoized, plans/budget.py) bounds the node count
+    if local_tier_enabled(TRI_LOCAL_MAX_NODES) and (
+        table_rows(sf_dir, "supplier", df=_t(spark, sf_dir, "supplier"))
+        <= TRI_LOCAL_MAX_NODES
+    ):
+        import numpy as np
 
-            # count-first probe on the persisted frame: the edge budget
-            # must be checked BEFORE any driver collect
-            n_edge_count = edges.count()
-            if n_edge_count <= local_max_edges:
-                pdf = edges.toPandas()
-                s1 = pdf["s1"].to_numpy(dtype=np.int64)
-                s2 = pdf["s2"].to_numpy(dtype=np.int64)
-                nodes, inv = np.unique(
-                    np.concatenate([s1, s2]), return_inverse=True
-                )
-                i, j = inv[: len(s1)], inv[len(s1):]
-                n = len(nodes)
-                A = np.zeros((n, n), dtype=np.float32)
-                A[i, j] = 1.0
-                A[j, i] = 1.0
-                # row blocks bound gemm scratch at ~256 MB; each block
-                # contributes an exact-integer float64 partial
-                total = 0.0
-                blk = max(1, (256 << 20) // (4 * max(1, n)))
-                for lo in range(0, n, blk):
-                    band = A[lo : lo + blk]
-                    total += float(((band @ A) * band).sum(dtype=np.float64))
-                tri = int(round(total / 6.0))
-                return spark.createDataFrame(
-                    [(n, int(n_edge_count), tri)],
-                    "n_nodes long, n_edges long, n_triangles long",
-                )
+        # count-first probe on the persisted frame: the edge budget
+        # must be checked BEFORE any driver collect
+        n_edge_count = edges.count()
+        if n_edge_count <= TRI_LOCAL_MAX_EDGES:
+            pdf = edges.toPandas()
+            s1 = pdf["s1"].to_numpy(dtype=np.int64)
+            s2 = pdf["s2"].to_numpy(dtype=np.int64)
+            nodes, inv = np.unique(np.concatenate([s1, s2]), return_inverse=True)
+            i, j = inv[: len(s1)], inv[len(s1):]
+            n = len(nodes)
+            A = np.zeros((n, n), dtype=np.float32)
+            A[i, j] = 1.0
+            A[j, i] = 1.0
+            # row blocks bound gemm scratch at ~256 MB; each block
+            # contributes an exact-integer float64 partial
+            total = 0.0
+            blk = max(1, (256 << 20) // (4 * max(1, n)))
+            for lo in range(0, n, blk):
+                band = A[lo : lo + blk]
+                total += float(((band @ A) * band).sum(dtype=np.float64))
+            tri = int(round(total / 6.0))
+            return spark.createDataFrame(
+                [(n, int(n_edge_count), tri)],
+                "n_nodes long, n_edges long, n_triangles long",
+            )
 
     o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
     # wedge endpoints PACK into one long (ids are < 2^24 — the same

@@ -371,10 +371,10 @@ def _exact_group_quantiles_small(
 
 
 # Below this many input rows the exact quantile uses the sorted-array
-# small form (fewer stages win on tiny inputs); above it, the
-# distributed value-counts form (nothing buffers a group's rows).
-# Same cost-based-tier contract as the graph operators' local paths;
-# both forms are value-identical by construction and pytest-pinned.
+# small form (fewer stages win on tiny inputs); above it, or under
+# SMRGH_FORCE_DISTRIBUTED, the distributed value-counts form (nothing
+# buffers a group's rows). Same budget gate as the graph operators'
+# local tiers; both forms are value-identical and pytest-pinned.
 MEDIAN_SMALL_MAX_ROWS = 2_000_000
 
 
@@ -391,37 +391,19 @@ def _lineitem_rows(li: DataFrame, sf_dir: str) -> int:
     return table_rows(sf_dir, "lineitem", df=li)
 
 
-def _exact_quantiles_tiered(
-    li: DataFrame,
-    nrows: int,
-    key: str,
-    specs: list[tuple[str, float, str]],
-    *,
-    small_max_rows: int | None = None,
-) -> DataFrame:
-    # read the module global at CALL time (not as a def-time default):
-    # tests monkeypatch relational.MEDIAN_SMALL_MAX_ROWS to force the
-    # at-scale plan, and a def-time binding silently kept the small
-    # exact form under the "at-scale" branch (r14 advisory)
-    if small_max_rows is None:
-        small_max_rows = MEDIAN_SMALL_MAX_ROWS
-    if nrows <= small_max_rows:
-        return _exact_group_quantiles_small(li, key, specs)
-    return _exact_group_quantiles(li, key, specs)
-
-
-def agg_median(
-    spark: SparkSession, sf_dir: str, *, exact_max_rows: int = MEDIAN_EXACT_MAX_ROWS
-) -> DataFrame:
+def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median + interpolated quartile per group, tiered by a
     zero-job footer row probe: sorted-array small form below
-    MEDIAN_SMALL_MAX_ROWS, distributed value-counts exact form above
-    it, and above `exact_max_rows` the plan swaps to percentile_approx
-    (mergeable sketch, bounded memory per group — the correct 100 TB
-    shape for a skewed/huge group). Outputs are plain round(x, 4)
-    doubles (driver-hash-safe)."""
+    MEDIAN_SMALL_MAX_ROWS (the budget-gated local tier), distributed
+    value-counts exact form above it, and above MEDIAN_EXACT_MAX_ROWS
+    the plan swaps to percentile_approx (mergeable sketch, bounded
+    memory per group — the correct 100 TB shape for a skewed/huge
+    group). Outputs are plain round(x, 4) doubles (driver-hash-safe)."""
+    from ..plans.budget import within_budget
+
     li = _t(spark, sf_dir, "lineitem")
-    if _lineitem_rows(li, sf_dir) > exact_max_rows:
+    nrows = _lineitem_rows(li, sf_dir)
+    if nrows > MEDIAN_EXACT_MAX_ROWS:
         # percentile_approx with accuracy 10000: ~0.01% rank error,
         # fixed-size sketch merged map-side, no value buffering.
         agg_cols = [
@@ -440,10 +422,14 @@ def agg_median(
                 F.round(F.col("_p")[1], 4).alias("p75_price"),
             )
         )
-    # exact path, tiered on the same probe (see _exact_quantiles_tiered)
-    q = _exact_quantiles_tiered(
+    # exact path, tiered on the same probe
+    exact = (
+        _exact_group_quantiles_small
+        if within_budget(nrows, MEDIAN_SMALL_MAX_ROWS)
+        else _exact_group_quantiles
+    )
+    q = exact(
         li,
-        _lineitem_rows(li, sf_dir),
         "l_linestatus",
         [
             ("l_quantity", 0.5, "_m"),
@@ -481,6 +467,8 @@ def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash covers the approximation contract itself — not just row
     shape. Tighter exact-vs-approx error is separately pytest-bounded
     (tests/test_relational.py)."""
+    from ..plans.budget import within_budget
+
     li = _t(spark, sf_dir, "lineitem")
     nrows = _lineitem_rows(li, sf_dir)
     # accuracy 1000 (rank error 1e-3): the KLL-style summary's merge
@@ -498,7 +486,7 @@ def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice", F.array(F.lit(0.25), F.lit(0.75)), F.lit(1000)
         ).alias("_pa"),
     ]
-    if nrows <= MEDIAN_SMALL_MAX_ROWS:
+    if within_budget(nrows, MEDIAN_SMALL_MAX_ROWS):
         # Small tier (r14, guide §2.4): ONE aggregation computes both
         # the exact sorted-array quantiles (the same
         # array_sort(collect_list) + _interp_quantile_sql arithmetic
@@ -530,9 +518,8 @@ def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         # that survives a skewed/huge group at 100 TB); the sketch
         # side stays its own aggregation, the two branches joined on
         # the group-cardinality key (AQE broadcasts).
-        exact = _exact_quantiles_tiered(
+        exact = _exact_group_quantiles(
             li,
-            nrows,
             "l_linestatus",
             [
                 ("l_quantity", 0.5, "_m"),
@@ -1380,6 +1367,11 @@ ORACLES["dq_audit"] = """
 # so the three paths cannot silently fork (r8 advice).
 _TRADE_PR_ITERS = 3
 _TRADE_PR_DAMPING_PCT = 85
+# Edge ceiling for the trade graph's driver-local tier (footer-bounded,
+# see graph_pagerank) — same bounded-budget class as
+# dedup.CC_LOCAL_MAX_EDGES / similarity's collect ceiling: 2M edges is
+# ~32 MB of longs via Arrow, the top of a sane broadcast build side.
+PR_LOCAL_MAX_EDGES = 2_000_000
 # Supplier node ids live at suppkey + SUPP_NODE_OFFSET so the two id
 # domains stay disjoint: custkey must stay BELOW the offset (guarded),
 # suppkey below 2^31 - offset so packed keys stay under 2^31. 2^30
@@ -1411,7 +1403,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-paying the |lineitem|-row join + packed dedup (~22s of the
     sf10 floor, r10 verdict). The first run on a fresh fixture pays
     the full build; artifacts disclose which runs are post-build."""
-    from ..operators.graph import PR_LOCAL_MAX_EDGES, pagerank_fixedpoint
+    from ..operators.graph import pagerank_fixedpoint
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -1422,7 +1414,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the FK join, dedup, symmetrization, and fixpoint replay run in
     # numpy (measured 1.99 -> 0.39s edge build at sf0.1; bit-identical
     # edge set). Above the ceiling (e.g. the derived sf1) the
-    # distributed join + shuffle-per-round loop runs exactly as before.
+    # distributed join + shuffle-per-round loop runs. The distinct
+    # pairs track the lineitem rows (586,871 of 600,000 at sf0.1), so
+    # no count of the real edges could flip the footer's decision.
     from ..plans.budget import within_budget
 
     full_li = _t(spark, sf_dir, "lineitem")
@@ -1455,7 +1449,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges,
         iters=_TRADE_PR_ITERS,
         damping_pct=_TRADE_PR_DAMPING_PCT,
-        edge_count_bound=bound,
         # the explode above emits both directions of every edge
         symmetric=True,
         node_deg=node_deg,
@@ -1511,7 +1504,7 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating integers) folded into every node's inflow — bit-exact
     vs the unrolled-CTE DuckDB replay. This is the web-graph shape
     (most of a crawl's frontier is dangling) at fixture scale."""
-    from ..operators.graph import PR_LOCAL_MAX_EDGES, pagerank_fixedpoint
+    from ..operators.graph import pagerank_fixedpoint
     from ..plans.budget import within_budget
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1527,49 +1520,45 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = _trade_pairs(spark, o, li)
     edges = cs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
     node_deg = None
-    if not within_budget(bound if bound > 0 else None, PR_LOCAL_MAX_EDGES):
-        # Above the local tier, reuse the SYMMETRIC write-once layout
-        # (both directions of every pair): under the _trade_pairs
-        # domain guard customer ids are strictly below
-        # SUPP_NODE_OFFSET and supplier node ids at or above it, so
-        # the customer->supplier direction is exactly the rows with
-        # dst >= offset — one shared materialization serves both the
-        # undirected and directed queries, and the filter prunes with
-        # parquet min/max stats. (Below the tier the replay collects
-        # the pair lineage directly, same as graph_pagerank.)
-        sym = cs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-                    F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
+    # Above the local tier, reuse the SYMMETRIC write-once layout
+    # (both directions of every pair): under the _trade_pairs domain
+    # guard customer ids are strictly below SUPP_NODE_OFFSET and
+    # supplier node ids at or above it, so the customer->supplier
+    # direction is exactly the rows with dst >= offset — one shared
+    # materialization serves both the undirected and directed
+    # queries, and the filter prunes with parquet min/max stats.
+    sym = cs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
+                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+    layout = _tradegraph_edge_layout(spark, sf_dir, sym)
+    if layout is not None:
+        edges = layout.where(F.col("dst") >= F.lit(SUPP_NODE_OFFSET))
+        nodes = _tradegraph_node_layout(spark, sf_dir, layout)
+        if nodes is not None:
+            # directed out-degrees off the symmetric node layout:
+            # a customer's symmetric degree IS its distinct-
+            # supplier out-degree (all its edges point at
+            # suppliers); suppliers are sinks (deg 0) but stay in
+            # the node universe for the dangling-mass term
+            node_deg = nodes.select(
+                "node_id",
+                F.when(
+                    F.col("node_id") < F.lit(SUPP_NODE_OFFSET),
+                    F.col("deg"),
                 )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-        layout = _tradegraph_edge_layout(spark, sf_dir, sym)
-        if layout is not None:
-            edges = layout.where(F.col("dst") >= F.lit(SUPP_NODE_OFFSET))
-            nodes = _tradegraph_node_layout(spark, sf_dir, layout)
-            if nodes is not None:
-                # directed out-degrees off the symmetric node layout:
-                # a customer's symmetric degree IS its distinct-
-                # supplier out-degree (all its edges point at
-                # suppliers); suppliers are sinks (deg 0) but stay in
-                # the node universe for the dangling-mass term
-                node_deg = nodes.select(
-                    "node_id",
-                    F.when(
-                        F.col("node_id") < F.lit(SUPP_NODE_OFFSET),
-                        F.col("deg"),
-                    )
-                    .otherwise(F.lit(0))
-                    .cast("bigint")
-                    .alias("deg"),
-                )
+                .otherwise(F.lit(0))
+                .cast("bigint")
+                .alias("deg"),
+            )
     return pagerank_fixedpoint(
         edges,
         iters=_TRADE_PR_ITERS,
         damping_pct=_TRADE_PR_DAMPING_PCT,
-        edge_count_bound=bound if bound > 0 else None,
         dangling="redistribute",
         node_deg=node_deg,
     )

@@ -20,8 +20,25 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    # 8g, not get_spark's 16g default: the default is all of a 16 GiB
+    # host's RAM, and tier-1 must fit beside tests/parity.py
+    s = get_spark(
+        app_name="tests",
+        cpus=8,
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "8g"},
+    )
     yield s
+
+
+@pytest.fixture()
+def forced(monkeypatch):
+    """SMRGH_FORCE_DISTRIBUTED for one test: every driver-local tier
+    off, the distributed twins run (plans/budget.py)."""
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.plans import budget
+
+    monkeypatch.setenv(budget.FORCE_DISTRIBUTED_ENV, "1")
+    yield
 
 
 @pytest.fixture(scope="session")

@@ -163,7 +163,7 @@ def test_basket_pairs_hand(spark, monkeypatch):
 def test_triangles_edge_budget_falls_through(spark, monkeypatch):
     # the dense local tier is gated by BOTH budgets: a graph whose
     # vertex universe fits the node ceiling but whose edge count
-    # exceeds local_max_edges must take the distributed wedge path
+    # exceeds TRI_LOCAL_MAX_EDGES must take the distributed wedge path
     # (never collect) and still produce the same exact counts
     rows = []
     for pk, sks in [(1, [1, 2, 3]), (2, [3, 4]), (3, [1, 4])]:
@@ -171,9 +171,8 @@ def test_triangles_edge_budget_falls_through(spark, monkeypatch):
     df = spark.createDataFrame(rows, "l_partkey long, l_suppkey long")
     monkeypatch.setattr(behavioral, "load_table", lambda s, d, n: df)
     local = behavioral.graph_triangles(spark, "unused").collect()
-    over_budget = behavioral.graph_triangles(
-        spark, "unused", local_max_edges=1
-    ).collect()
+    monkeypatch.setattr(behavioral, "TRI_LOCAL_MAX_EDGES", 1)
+    over_budget = behavioral.graph_triangles(spark, "unused").collect()
     assert local == over_budget
     assert over_budget[0]["n_triangles"] == 2
 

@@ -173,34 +173,33 @@ def test_connected_components_planted(spark):
     }
 
 
-def test_connected_components_edge_bound_skips_probe(spark):
+def test_connected_components_edge_bound_skips_probe(spark, monkeypatch):
     """r15: a caller-supplied n_edges_bound above the local-tier cap
     must skip the probe (whose limit+toPandas would execute the full
     edge pipeline a first, wasted time) and take the distributed loop
     directly; a bound at/under the cap keeps the local tier. Labels
     identical either way (the tier-equality contract)."""
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.operators.dedup import (
-        _connected_components_star,
-    )
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "CC_LOCAL_MAX_EDGES", 100)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "a long, b long"
     )
     # bound > cap: distributed loop runs (rounds > 0)
-    labels_d, rounds_d = _connected_components_star(
-        pairs, local_max_edges=100, n_edges_bound=101
+    labels_d, rounds_d = dedup._connected_components_star(
+        pairs, n_edges_bound=101
     )
     assert rounds_d > 0
     # bound <= cap: probe runs and the local tier answers (rounds == 0)
-    labels_l, rounds_l = _connected_components_star(
-        pairs, local_max_edges=100, n_edges_bound=3
+    labels_l, rounds_l = dedup._connected_components_star(
+        pairs, n_edges_bound=3
     )
     assert rounds_l == 0
     rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     assert rows(labels_d) == rows(labels_l)
 
 
-def test_connected_components_logn_on_deep_chain(spark):
+def test_connected_components_logn_on_deep_chain(spark, forced):
     """Adversarial deep chain: a 10k-edge path graph (the worst case
     for diameter-bound label propagation — it would need 10k rounds)
     must converge in O(log n) star-contraction rounds and still label
@@ -215,10 +214,10 @@ def test_connected_components_logn_on_deep_chain(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n_edges)], "a long, b long"
     )
-    # local_max_edges=0 forces the DISTRIBUTED loop — the point of the
-    # test; the bounded local fast path is covered by
+    # ``forced`` runs the DISTRIBUTED loop — the point of the test; the
+    # bounded local fast path is covered by
     # test_cc_local_fast_path_matches_distributed
-    labels, rounds = _connected_components_star(pairs, local_max_edges=0)
+    labels, rounds = _connected_components_star(pairs)
     bound = math.ceil(math.log2(n_edges + 1)) + 3
     assert rounds > 0, "distributed loop should have run"
     assert rounds <= bound, f"{rounds} rounds > log-bound {bound}"
@@ -226,7 +225,7 @@ def test_connected_components_logn_on_deep_chain(spark):
     assert labels.count() == n_edges + 1
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, forced):
     """Exhausting max_iters must raise, never silently return partial
     labels (callers would diverge from the oracle with no signal)."""
     import pytest
@@ -241,14 +240,14 @@ def test_connected_components_nonconvergence_raises(spark):
 
     pairs = spark.createDataFrame([(i, i + 1) for i in range(64)], "a long, b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        # force the distributed loop (the local fast path would answer
-        # this tiny chain without iterating)
-        _connected_components_star(pairs, max_iters=1, local_max_edges=0)
+        # ``forced``: the local fast path would answer this tiny chain
+        # without iterating
+        _connected_components_star(pairs, max_iters=1)
     # keep the public-API surface exercised
     assert connected_components(pairs).count() == 65
 
 
-def test_cc_local_fast_path_matches_distributed(spark):
+def test_cc_local_fast_path_matches_distributed(spark, monkeypatch):
     """The bounded union-find fast path must label identically to the
     distributed star contraction on the same graph."""
     import random
@@ -261,7 +260,10 @@ def test_cc_local_fast_path_matches_distributed(spark):
     edges = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
     pairs = spark.createDataFrame(edges, "a long, b long")
     local, r_local = _connected_components_star(pairs)
-    dist, r_dist = _connected_components_star(pairs, local_max_edges=0)
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.plans import budget
+
+    monkeypatch.setenv(budget.FORCE_DISTRIBUTED_ENV, "1")
+    dist, r_dist = _connected_components_star(pairs)
     assert r_local == 0 and r_dist > 0
     assert sorted(map(tuple, local.collect())) == sorted(
         map(tuple, dist.collect())

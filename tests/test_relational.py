@@ -83,16 +83,16 @@ def test_approx_distinct_within_bound(spark, sf_dir):
     assert all(v[1] == 1 for v in cert.values())
 
 
-def test_agg_median_sketch_tier_boundary(spark, tmp_path):
+def test_agg_median_sketch_tier_boundary(spark, tmp_path, monkeypatch):
     """The >MEDIAN_EXACT_MAX_ROWS sketch tier, exercised AT ITS
     BOUNDARY on a synthetic fixture (r8 verdict: the declared at-scale
     path must not stay theoretical). The tier decision is driven by
     the parquet FOOTER probe (_lineitem_rows), so this test builds a
     real lineitem.parquet whose footer count straddles the threshold:
 
-    - exact_max_rows == footer count  -> exact tier (plan has NO
+    - MEDIAN_EXACT_MAX_ROWS == footer count  -> exact tier (plan has NO
       percentile_approx);
-    - exact_max_rows == footer count - 1 -> the probe flips the plan
+    - MEDIAN_EXACT_MAX_ROWS == footer count - 1 -> the probe flips the plan
       to percentile_approx (asserted on the optimized plan), executed
       end-to-end, values within the documented sketch tolerance
       (accuracy 10000 ~ 0.01% rank error; the integer-quantity median
@@ -122,8 +122,10 @@ def test_agg_median_sketch_tier_boundary(spark, tmp_path):
     footer = relational._lineitem_rows(None, sf)
     assert footer == n  # the probe read the footer, no Spark job
 
-    exact_df = relational.agg_median(spark, sf, exact_max_rows=n)
-    sketch_df = relational.agg_median(spark, sf, exact_max_rows=n - 1)
+    monkeypatch.setattr(relational, "MEDIAN_EXACT_MAX_ROWS", n)
+    exact_df = relational.agg_median(spark, sf)
+    monkeypatch.setattr(relational, "MEDIAN_EXACT_MAX_ROWS", n - 1)
+    sketch_df = relational.agg_median(spark, sf)
     exact_plan = exact_df._jdf.queryExecution().optimizedPlan().toString()
     sketch_plan = sketch_df._jdf.queryExecution().optimizedPlan().toString()
     assert "percentile_approx" not in exact_plan
@@ -145,7 +147,7 @@ def test_agg_median_sketch_tier_boundary(spark, tmp_path):
         assert a75 == pytest.approx(p75, rel=0.02)
 
 
-def test_agg_median_approx_fallback(spark, sf_dir):
+def test_agg_median_approx_fallback(spark, sf_dir, monkeypatch):
     """The at-scale escape hatch: forcing the row threshold to 0 must
     swap the exact percentile for percentile_approx (bounded-memory
     sketch) and still land within sketch tolerance of the exact
@@ -154,9 +156,10 @@ def test_agg_median_approx_fallback(spark, sf_dir):
         r["l_linestatus"]: (r["med_qty"], r["p25_price"], r["p75_price"])
         for r in relational.agg_median(spark, sf_dir).collect()
     }
+    monkeypatch.setattr(relational, "MEDIAN_EXACT_MAX_ROWS", 0)
     approx = {
         r["l_linestatus"]: (r["med_qty"], r["p25_price"], r["p75_price"])
-        for r in relational.agg_median(spark, sf_dir, exact_max_rows=0).collect()
+        for r in relational.agg_median(spark, sf_dir).collect()
     }
     assert set(exact) == set(approx)
     for status, (m, p25, p75) in exact.items():
@@ -188,7 +191,7 @@ def test_agg_partition_invariance(spark, sf_dir):
 
 def test_exact_quantile_tiers_bit_identical(spark, sf_dir):
     """The two exact-quantile physical forms — sorted-array small tier
-    and distributed value-counts tier (_exact_quantiles_tiered) — must
+    and distributed value-counts tier (agg_median's two exact forms) — must
     produce BIT-identical doubles: both evaluate the same Percentile
     interpolation arithmetic, only the plan differs. Pins the
     cost-based tier flip at MEDIAN_SMALL_MAX_ROWS as a pure physical

@@ -23,18 +23,12 @@ def test_pagerank_symmetric_probe_raises_on_directed(spark, monkeypatch):
         [(1, 2), (2, 3), (3, 4)], "src long, dst long"
     )
     with pytest.raises(Exception, match="directed"):
-        # local_max_edges=0 forces the distributed path where the
-        # symmetric fast degree-build (and its probe) lives
-        pagerank_fixedpoint(
-            directed, iters=1, local_max_edges=0, symmetric=True
-        ).collect()
+        pagerank_fixedpoint(directed, iters=1, symmetric=True).collect()
 
     sym = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
     )
-    ok = pagerank_fixedpoint(
-        sym, iters=1, local_max_edges=0, symmetric=True
-    )
+    ok = pagerank_fixedpoint(sym, iters=1, symmetric=True)
     assert ok.count() == 3
 
 

@@ -266,47 +266,31 @@ def test_pagerank_star_graph(spark):
 
 
 def test_pagerank_local_fast_path_matches_distributed(spark):
-    """The bounded driver-local replay must be bit-identical to the
-    distributed fixed-point loop (exact integer arithmetic both ways)."""
+    """The driver-local replay (the trade-graph tier's engine) must be
+    bit-identical to the distributed fixed-point loop (exact integer
+    arithmetic both ways): on a symmetric graph, and on a directed one
+    under dangling redistribution."""
     import random
 
     from sycl_mapreduce_cpu_gpu_hybrid_spark.operators.graph import (
+        _pagerank_replay,
         pagerank_fixedpoint,
     )
 
     rng = random.Random(29)
     und = {(rng.randrange(60), rng.randrange(60)) for _ in range(150)}
     und = {(a, b) for a, b in und if a != b}
-    e = list(und) + [(b, a) for a, b in und]
-    edges = spark.createDataFrame(e, "src bigint, dst bigint")
-    local = sorted(map(tuple, pagerank_fixedpoint(edges, iters=3).collect()))
-    dist = sorted(
-        map(
-            tuple,
-            pagerank_fixedpoint(edges, iters=3, local_max_edges=0).collect(),
-        )
-    )
-    assert local == dist
-    # the zero-probe path (caller-supplied metadata bound) must agree
-    # too, and an over-ceiling bound must fall through to the probe
-    bounded = sorted(
-        map(
-            tuple,
-            pagerank_fixedpoint(
-                edges, iters=3, edge_count_bound=len(e)
-            ).collect(),
-        )
-    )
-    assert bounded == dist
-    over = sorted(
-        map(
-            tuple,
-            pagerank_fixedpoint(
-                edges, iters=3, local_max_edges=10, edge_count_bound=len(e)
-            ).collect(),
-        )
-    )
-    assert over == dist
+    cases = [
+        (list(und) + [(b, a) for a, b in und], "none"),
+        (sorted(und), "redistribute"),
+    ]
+    for e, dangling in cases:
+        edges = spark.createDataFrame(e, "src bigint, dst bigint")
+        local = _pagerank_replay(edges.toPandas(), spark, 3, 85, dangling)
+        dist = pagerank_fixedpoint(edges, iters=3, dangling=dangling)
+        assert sorted(map(tuple, local.collect())) == sorted(
+            map(tuple, dist.collect())
+        ), dangling
 
 
 def test_pagerank_trade_graph_local_matches_distributed(spark, sf_dir):
@@ -346,7 +330,7 @@ def test_pagerank_trade_graph_local_matches_distributed(spark, sf_dir):
     dist = sorted(
         map(
             tuple,
-            pagerank_fixedpoint(edges, iters=3, local_max_edges=0).collect(),
+            pagerank_fixedpoint(edges, iters=3).collect(),
         )
     )
     assert local == dist
@@ -443,6 +427,6 @@ def test_pagerank_symmetric_degree_path_matches_general(spark):
     both = [(a, b) for a, b in und if a != b]
     both += [(b, a) for a, b in both]
     edges = spark.createDataFrame(both, "src long, dst long")
-    gen = pagerank_fixedpoint(edges, iters=3, local_max_edges=0)
-    sym = pagerank_fixedpoint(edges, iters=3, local_max_edges=0, symmetric=True)
+    gen = pagerank_fixedpoint(edges, iters=3)
+    sym = pagerank_fixedpoint(edges, iters=3, symmetric=True)
     assert sorted(map(tuple, gen.collect())) == sorted(map(tuple, sym.collect()))

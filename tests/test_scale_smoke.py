@@ -180,26 +180,3 @@ def test_transition_matrix_scales_exactly(spark, sf_dir, monkeypatch):
         for r in behavioral.events_transition_matrix(spark, "unused").collect()
     }
     assert scaled == {k: v * 8 for k, v in base.items()}
-
-
-def test_triangle_orientation_invariance(spark, sf_dir):
-    """Triangle totals are orientation-independent: the degree-ordered
-    (declared, skew-safe) and id-ordered (measured faster on this
-    degree-uniform fixture) variants must agree exactly."""
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries.behavioral import (
-        graph_triangles,
-    )
-
-    # force the DISTRIBUTED wedge-closure for both orientations (the
-    # point of the equality property), then assert the bounded dense
-    # local path agrees with it
-    by_id = graph_triangles(
-        spark, sf_dir, orientation="id", local_max_nodes=0
-    ).collect()
-    by_deg = graph_triangles(
-        spark, sf_dir, orientation="degree", local_max_nodes=0
-    ).collect()
-    assert by_id == by_deg
-    assert by_id[0].n_triangles > 0
-    local = graph_triangles(spark, sf_dir).collect()
-    assert local == by_deg
