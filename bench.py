@@ -1,12 +1,16 @@
 """Benchmark harness — reproduces the reference's measurement protocol
 (runprogram.sh:16-101: per-point warm-up runs excluded from metrics,
 one appended points.txt row per measurement) over this engine's
-declared query inventory.
+declared query inventory. It is the one harness for per-query time,
+trace and the Spark-vs-DuckDB ratio.
 
 Default mode (driver contract): run every query in
-``__spark_entry__.queries()`` against ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``, one warm-up +
-one timed run each, and print ONE JSON line::
+``__spark_entry__.queries()`` against ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 test fixture) on ``local[$SPARK_GRAFT_CPUS]`` for
+``$SPARK_GRAFT_BENCH_PASSES`` passes (default 3). Pass 1 warms each
+query up and keeps the faster of two timed runs; later passes time each
+query once. The headline is the per-query min across passes, and ONE
+JSON line is printed::
 
     {"metric": "bench_total_wall", "value": total_sec, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
@@ -26,6 +30,17 @@ memory, layout scans and Python-boundary bytes it caused, read from
 Spark's in-process status store. To profile one query at one fixture::
 
     SPARK_GRAFT_SF_DIR=<fixture dir> SPARK_GRAFT_QUERIES=q python bench.py
+
+Under ``"duck"`` it carries each query's DuckDB oracle time: in every
+pass, right after a query's Spark timing, its ``oracle_sql()`` runs once
+on one DuckDB connection over the same parquet (``open_duck``: the
+parity gate's views), and ``duck_s`` is the min across passes — the
+same statistic as the Spark headline, from the same window.
+``duck.ratio`` is the Spark / DuckDB ratio overall and split at
+``DUCK_FLOOR_BOUND_S``. An oracle that raises or times out is listed in
+the ``duck`` block and leaves the query's Spark timing and the run's
+status alone. Each query prints a progress line to stderr as it starts
+and ends.
 
 Sweep mode (``SPARK_GRAFT_SWEEP=1``): additionally runs the
 reference's own experiment grid — k-mer counting over k x truncation-N
@@ -143,6 +158,110 @@ def duck_floor(sf_dir: str) -> dict[str, float]:
         floors[name] = round(best, 4)
     floors["total"] = round(sum(floors.values()), 4)
     return floors
+
+
+# An oracle still running after this many seconds is interrupted and
+# listed under duck.timeouts. It sits above the slowest oracle at sf0.1
+# (dedup_editdistance_verify, 13.9 s) and at the derived sf1 (34.9 s)
+# with room for a 1.5-3x host drift; one sf1 oracle replay once
+# ran past 25 minutes, and an sf10 sweep must stay finite.
+DUCK_DEADLINE_S = 120.0
+# Queries whose oracle costs DuckDB less than this are floor-bound:
+# their Spark time is the fixed per-query overhead, not operator work.
+DUCK_FLOOR_BOUND_S = 0.050
+
+
+def open_duck(sf_dir: str):
+    """The DuckDB connection the oracles run on: the parity gate's views
+    over ``sf_dir``, with no spill directory (with spilling on, one
+    oracle at the derived sf1 wrote 19 GB of temp files)."""
+    from tests.parity import duckdb_con
+
+    con = duckdb_con(sf_dir)
+    con.execute("SET temp_directory=''")
+    return con
+
+
+class DuckOracles:
+    """Each query's ``oracle_sql()`` timed on one DuckDB connection.
+
+    ``run`` executes one query's oracle once, under a
+    ``DUCK_DEADLINE_S`` timer that interrupts the connection, and keeps
+    the min across calls in ``times``. A timed-out query is listed in
+    ``timeouts`` and an oracle that raises in ``errors``; neither is run
+    again. Oracle failures stay in the ``duck`` block: they do not mark
+    the Spark run failed."""
+
+    def __init__(self, con, sqls: dict[str, str]):
+        self.con = con
+        self.sqls = sqls
+        self.times: dict[str, float] = {}
+        self.timeouts: list[str] = []
+        self.errors: dict[str, str] = {}
+
+    def run(self, name: str) -> str:
+        """Time ``name``'s oracle once; return a note for the progress
+        line (empty when the query has no oracle or is not re-run)."""
+        import threading
+
+        import duckdb
+
+        sql = self.sqls.get(name)
+        if sql is None or name in self.timeouts or name in self.errors:
+            return ""
+        # DuckDB runs inside this process beside the Spark JVM, whose
+        # resident size outgrows its heap (8g of heap ran at 9.7 GB at
+        # the derived sf1), so each oracle gets half of the host memory
+        # free right now; one too big for that raises instead of
+        # exhausting the host
+        host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        free_mb = host_mb - CpuMonitor.mem_used_mb()
+        self.con.execute(f"SET memory_limit='{max(free_mb // 2, 256)}MiB'")
+        timer = threading.Timer(DUCK_DEADLINE_S, self.con.interrupt)
+        timer.start()
+        try:
+            with timed() as t:
+                self.con.execute(sql).fetchall()
+        except duckdb.InterruptException:
+            self.timeouts.append(name)
+            return "duck timeout"
+        except Exception as exc:  # noqa: BLE001 — the Spark timing stands
+            self.errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            return "duck error"
+        finally:
+            timer.cancel()
+            timer.join()
+        self.times[name] = min(self.times.get(name, float("inf")), round(t["sec"], 4))
+        return f"duck {t['sec']:.3f} s"
+
+    def block(self, timings: dict[str, float]) -> dict:
+        """The artifact's ``duck`` block: per-query times, timeouts and
+        the Spark / DuckDB ratio over the queries timed on both, overall
+        and split at ``DUCK_FLOOR_BOUND_S``."""
+        both = [n for n in self.times if n in timings]
+
+        def ratio(names: list[str]) -> dict:
+            spark_s = sum(timings[n] for n in names)
+            duck_s = sum(self.times[n] for n in names)
+            return {
+                "spark_s": round(spark_s, 4),
+                "duck_s": round(duck_s, 4),
+                "x": round(spark_s / duck_s, 3) if duck_s else None,
+                "n": len(names),
+            }
+
+        return {
+            "queries": self.times,
+            "timeouts": self.timeouts,
+            "errors": self.errors,
+            "ratio": {
+                "overall": ratio(both),
+                "floor_bound": ratio([n for n in both if self.times[n] < DUCK_FLOOR_BOUND_S]),
+                "non_floor": ratio([n for n in both if self.times[n] >= DUCK_FLOOR_BOUND_S]),
+            },
+        }
+
+
 # local-size permutation sweep, mirroring runprogram.sh:119-129's
 # work-group sizes 1..512 at fixed N; the Spark local-size knob is
 # spark.sql.shuffle.partitions
@@ -216,16 +335,20 @@ def run_inventory(
     queries: dict | None = None,
     record_points: bool = True,
     trace: dict[str, dict] | None = None,
+    duck: DuckOracles | None = None,
 ) -> dict[str, float]:
     """Time every query; return ``{name: seconds}``. Failures go into
     ``errors``. Pass 1 (``record_points``) also appends points rows and
-    fills ``trace`` with one ``_trace_record`` per timed query."""
+    fills ``trace`` with one ``_trace_record`` per timed query. With
+    ``duck``, each query that timed runs its DuckDB oracle right after."""
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.session import release_cached
+
     if queries is None:
         import __spark_entry__ as entrymod
 
         queries = entrymod.queries()
-    # SPARK_GRAFT_QUERIES=a,b,c restricts the inventory (iteration +
-    # external-measurement smoke runs)
+    # SPARK_GRAFT_QUERIES=a,b,c restricts the inventory (profiling one
+    # query, same-window A/B subsets)
     if subset := os.environ.get("SPARK_GRAFT_QUERIES"):
         names = {s.strip() for s in subset.split(",")}
         queries = {k: v for k, v in queries.items() if k in names}
@@ -240,11 +363,6 @@ def run_inventory(
 
     cpu = CpuMonitor()
     timings: dict[str, float] = {}
-    # SPARK_GRAFT_MARKERS=1: emit the reference's START/STOP marker
-    # protocol (measyrepy.py:227-246) around each timed run so the
-    # external harness (scripts/measure.py) can bracket phases from
-    # outside the process
-    markers = os.environ.get("SPARK_GRAFT_MARKERS") == "1"
     for name, fn in queries.items():
         # Extra passes skip names that already errored in pass 1: a
         # late success would otherwise enter the headline from a single
@@ -252,6 +370,8 @@ def run_inventory(
         # the error ledger and the headline must describe the same set.
         if not record_points and name in errors:
             continue
+        # progress on stderr: a stalled run shows the query it is on
+        print(f"[bench] {name} ...", file=sys.stderr, flush=True)
         # Per-query fault isolation (round-5 fix): one broken query
         # must never zero the whole bench artifact — record the error
         # and keep timing the rest.
@@ -275,15 +395,11 @@ def run_inventory(
                 _skip_to_newest(reader, spark)
                 cpu.snapshot_start()
             for _ in range(2 if record_points else 1):
-                if markers:
-                    print(f"START {name}", flush=True)
                 with timed() as decl:
                     df = fn(spark, sf_dir)
                 decl_end = time.time()
                 with timed() as sink:
                     force(df)
-                if markers:
-                    print(f"STOP {name}", flush=True)
                 best = min(best, decl["sec"] + sink["sec"])
                 if record_points:
                     records.append(
@@ -299,43 +415,37 @@ def run_inventory(
                 # under a distinct key instead of overwriting the
                 # per-query ledger (r13 advisory)
                 errors.setdefault(f"{name} (extra-pass flake)", msg)
-            spark.catalog.clearCache()
+            print(f"[bench] {name}: error", file=sys.stderr, flush=True)
             continue
+        finally:
+            # each run registers fresh cached stages and checkpoints;
+            # a query that raised releases its blocks too
+            release_cached(spark)
         timings[name] = round(best, 4)
-        # operators persist intra-query shared stages (dedup.py) and
-        # each of the 3 runs above registers fresh entries; centralized
-        # cleanup keeps a 65-query x 3-run session from accumulating
-        # cache blocks for its whole lifetime. The explicit BLOCKING
-        # unpersist also drops the iterative loops' localCheckpoint
-        # RDDs (not in the SQL cache); async unpersist measured ~2GB
-        # of dead blocks still resident when the next query started
-        # at the 10x fixture.
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(True)
-        if not record_points:
-            continue
+        if record_points:
+            def rec(metric: int, value: float) -> None:
+                recorder.record(
+                    n=n_scale, k=_kmer_k(name), ls=ls, lsc=ls, mode="spark-local",
+                    metric=metric, value=value,
+                )
 
-        def rec(metric: int, value: float) -> None:
-            recorder.record(
-                n=n_scale, k=_kmer_k(name), ls=ls, lsc=ls, mode="spark-local",
-                metric=metric, value=value,
-            )
-
-        # points.txt records pass-1's min-of-2; the JSON headline is
-        # the tighter union-min across all bench_passes, so the two
-        # artifacts may disagree per query (JSON <= points.txt). The
-        # JSON carries the authoritative statistic; points.txt keeps
-        # the reference Metric() protocol's one-clean-window shape.
-        rec(METRIC_TIME_MS, round(best * 1000, 3))
-        rec(METRIC_CPU_UTIL_PCT, round(cpu.util_since_snapshot(), 2))
-        rec(METRIC_HOST_MEM_MB, cpu.mem_used_mb())
-        if (temp := cpu.temp_c()):
-            rec(METRIC_CPU_TEMP_C, temp)
-        trace[name] = r = min(records, key=lambda t: t["decl_s"] + t["exec_s"])
-        rec(METRIC_EXEC_PEAK_MEM_MB, round(r["peak_exec_mem_mb"], 3))
-        rec(METRIC_SHUFFLE_WRITE_MB, round(r["shuffle_write_mb"], 3))
-        rec(METRIC_SHUFFLE_READ_MB, round(r["shuffle_read_mb"], 3))
+            # points.txt records pass-1's min-of-2; the JSON headline is
+            # the tighter union-min across all bench_passes, so the two
+            # artifacts may disagree per query (JSON <= points.txt). The
+            # JSON carries the authoritative statistic; points.txt keeps
+            # the reference Metric() protocol's one-clean-window shape.
+            rec(METRIC_TIME_MS, round(best * 1000, 3))
+            rec(METRIC_CPU_UTIL_PCT, round(cpu.util_since_snapshot(), 2))
+            rec(METRIC_HOST_MEM_MB, cpu.mem_used_mb())
+            if (temp := cpu.temp_c()):
+                rec(METRIC_CPU_TEMP_C, temp)
+            trace[name] = r = min(records, key=lambda t: t["decl_s"] + t["exec_s"])
+            rec(METRIC_EXEC_PEAK_MEM_MB, round(r["peak_exec_mem_mb"], 3))
+            rec(METRIC_SHUFFLE_WRITE_MB, round(r["shuffle_write_mb"], 3))
+            rec(METRIC_SHUFFLE_READ_MB, round(r["shuffle_read_mb"], 3))
+        # after the points rows, so DuckDB's CPU stays out of them
+        note = duck.run(name) if duck is not None else ""
+        print(f"[bench] {name}: spark {best:.3f} s {note}", file=sys.stderr, flush=True)
     return timings
 
 
@@ -465,11 +575,16 @@ def write_attempt(
 
 def compact_summary(out: dict, full_path: str, budget: int = 1500) -> dict:
     """Bound the one-line stdout summary to ``budget`` serialized
-    bytes: keep headline fields intact, drop the per-query trace, trim
-    the per-query map to the slowest entries (10 at a time) until the
-    line fits. The full map and the trace live at ``full_path``."""
+    bytes: keep headline fields intact, drop the per-query trace and
+    DuckDB times but keep the three DuckDB ratios, trim the per-query
+    map to the slowest entries (10 at a time) until the line fits. The
+    full map, the trace and the DuckDB block live at ``full_path``."""
     timings = out["queries"]
-    compact = {k: v for k, v in out.items() if k != "trace"}
+    compact = {k: v for k, v in out.items() if k not in ("trace", "duck")}
+    if "duck" in out:
+        compact["duck_ratio"] = {
+            part: r["x"] for part, r in out["duck"]["ratio"].items()
+        }
     compact["n_queries"] = len(timings)
     compact["queries_full"] = full_path
     if out.get("errors"):
@@ -501,10 +616,17 @@ def main() -> None:
     ls = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_scale = int((sf or 0) * 1_000_000)
 
+    import __spark_entry__ as entrymod
+
+    duck = DuckOracles(open_duck(sf_dir), entrymod.oracle_sql())
     recorder = MetricsRecorder()
     errors: dict[str, str] = {}
     trace: dict[str, dict] = {}
-    timings = run_inventory(spark, sf_dir, recorder, n_scale, ls, errors, trace=trace)
+    n_passes = max(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")), 1)
+    print(f"[bench] pass 1 of {n_passes}", file=sys.stderr, flush=True)
+    timings = run_inventory(
+        spark, sf_dir, recorder, n_scale, ls, errors, trace=trace, duck=duck
+    )
     # Min-of-N passes (r12 verdict task 4): a single-pass total on this
     # shared host reads up to 24% over the quiet-window floor (BENCH_r12
     # 63.98 s vs 3 quiet passes at ~47 s on identical code — ambient
@@ -516,12 +638,12 @@ def main() -> None:
     # uncached execution. The artifact carries per-pass totals and the
     # headline becomes the per-query min across passes: the statistic
     # the quiet-window files carried manually in r11/r12.
-    n_passes = max(int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")), 1)
     pass_totals = [round(sum(timings.values()), 4)]
-    for _ in range(n_passes - 1):
+    for p in range(2, n_passes + 1):
+        print(f"[bench] pass {p} of {n_passes}", file=sys.stderr, flush=True)
         extra = run_inventory(
             spark, sf_dir, recorder, n_scale, ls, errors,
-            record_points=False,
+            record_points=False, duck=duck,
         )
         pass_totals.append(round(sum(extra.values()), 4))
         for name, sec in extra.items():
@@ -553,6 +675,7 @@ def main() -> None:
         "duck_floor": duck_floor(sf_dir),
         "spark_floor": spark_floor(spark),
         "trace": trace,
+        "duck": duck.block(timings),
     }
     if errors:
         out["errors"] = errors

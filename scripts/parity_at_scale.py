@@ -55,6 +55,7 @@ def main() -> None:
     from sycl_mapreduce_cpu_gpu_hybrid_spark.session import (
         ensure_driver_memory,
         get_spark,
+        release_cached,
     )
 
     print(f"driver heap: {ensure_driver_memory(sf_dir)}")
@@ -125,12 +126,7 @@ def main() -> None:
                 con = duckdb_con(sf_dir)
         else:
             r = holder["r"]
-        spark.catalog.clearCache()
-        # also drop orphaned localCheckpoint blocks (not in the SQL
-        # cache) — see tests/parity.py: they otherwise accumulate
-        # across the sweep until a broadcast build fails
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(True)
+        release_cached(spark)
         r["wall_sec"] = round(time.monotonic() - t0, 3)
         results.append(r)
         flush()

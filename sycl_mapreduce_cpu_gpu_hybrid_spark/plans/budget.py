@@ -1,6 +1,6 @@
 """Shared budget gate for bounded driver-local fast paths.
 
-Six tiers sit next to a distributed plan. Each is decided once, at
+Five tiers sit next to a distributed plan. Each is decided once, at
 one site, against one module constant read at call time:
 
 - trade-graph PageRank: queries/relational.graph_pagerank and
@@ -12,9 +12,7 @@ one site, against one module constant read at call time:
 - triangle gemm: queries/behavioral.graph_triangles,
   ``TRI_LOCAL_MAX_NODES`` (and ``TRI_LOCAL_MAX_EDGES``);
 - RFM ntile windows: queries/behavioral.orders_rfm,
-  ``RFM_NTILE_LOCAL_MAX``;
-- quantile sorted-array form: queries/relational.agg_median and
-  agg_median_approx, ``MEDIAN_SMALL_MAX_ROWS``.
+  ``RFM_NTILE_LOCAL_MAX``.
 
 Each tier is bounded (metadata probe or count-first probe), bit-
 identical to its distributed twin, and falls through past its ceiling

@@ -397,11 +397,11 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         import numpy as np
 
-        # count-first probe on the persisted frame: the edge budget
-        # must be checked BEFORE any driver collect
-        n_edge_count = edges.count()
-        if n_edge_count <= TRI_LOCAL_MAX_EDGES:
-            pdf = edges.toPandas()
+        # one bounded probe (the CC pattern, dedup.py): at most
+        # ceiling + 1 edges ever reach the driver, and <= ceiling rows
+        # back IS the complete edge set
+        pdf = edges.limit(TRI_LOCAL_MAX_EDGES + 1).toPandas()
+        if len(pdf) <= TRI_LOCAL_MAX_EDGES:
             s1 = pdf["s1"].to_numpy(dtype=np.int64)
             s2 = pdf["s2"].to_numpy(dtype=np.int64)
             nodes, inv = np.unique(np.concatenate([s1, s2]), return_inverse=True)
@@ -419,7 +419,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 total += float(((band @ A) * band).sum(dtype=np.float64))
             tri = int(round(total / 6.0))
             return spark.createDataFrame(
-                [(n, int(n_edge_count), tri)],
+                [(n, len(pdf), tri)],
                 "n_nodes long, n_edges long, n_triangles long",
             )
 

@@ -145,25 +145,6 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 MEDIAN_EXACT_MAX_ROWS = 100_000_000
 
 
-def _interp_quantile_sql(arr: str, p: float) -> str:
-    """Exact interpolated quantile over a pre-sorted double array —
-    the same formula Spark's Percentile aggregate evaluates
-    (v[lo+1] + (v[lo+2] - v[lo+1]) * frac at pos = p * (n - 1), double
-    arithmetic throughout, so results are bit-identical to
-    F.percentile / F.median). Kept for tests/small arrays; the
-    declared queries use _exact_group_quantiles (below), which is the
-    same formula over a DISTRIBUTED value-counts frame."""
-    pos = f"({p} * (size({arr}) - 1))"
-    lo = f"CAST(floor{pos} AS INT)"
-    v_lo = f"element_at({arr}, {lo} + 1)"
-    v_hi = f"element_at({arr}, {lo} + 2)"
-    return (
-        f"CASE WHEN size({arr}) = 0 THEN NULL ELSE {v_lo} + "
-        f"(CASE WHEN {pos} > floor{pos} THEN ({v_hi} - {v_lo}) * "
-        f"({pos} - floor{pos}) ELSE 0.0 END) END"
-    )
-
-
 # Range-bucket count for the exact-quantile locate phase: the bucket
 # frame is at most groups x measures x this many rows, and each pick
 # window sees ~1/B of a measure's distinct values.
@@ -179,9 +160,10 @@ def _exact_group_quantiles(
 ) -> DataFrame:
     """Exact interpolated quantiles per group WITHOUT buffering group
     values: one row per ``key`` with a column per (col, p, outname)
-    spec, numerically identical to F.percentile / the sorted-array
-    interpolation (_interp_quantile_sql — same literal arithmetic:
-    pos = p * (n - 1), result = v[lo] + (v[lo+1] - v[lo]) * frac).
+    spec: pos = p * (n - 1), result = v[lo] + (v[lo+1] - v[lo]) *
+    frac, the sorted-array interpolation. F.percentile agrees to the
+    last bit or two; it evaluates (hi_pos - pos) * v[lo] + (pos -
+    lo_pos) * v[hi].
 
     Plan, r9 (two-phase distributed selection): groupBy (key, measure,
     value) counts — map-side combinable, so the shuffle carries
@@ -200,8 +182,8 @@ def _exact_group_quantiles(
     shuffle stay bounded by distinct values per group, the windows by
     distinct values PER BUCKET — the shape that survives a 100 TB
     high-cardinality measure. NULL measures are dropped, matching
-    collect_list / Percentile; value-identical to the sorted-array
-    small form (pytest-pinned, test_exact_quantile_tiers_bit_identical).
+    Percentile; bit-identical to a sorted-array reference (pytest-
+    pinned, test_exact_quantile_tiers_bit_identical).
 
     Caller contracts (r9 advice; hooks added r11):
     - the persisted counts relation is NOT unpersisted here (the
@@ -344,42 +326,8 @@ def _exact_group_quantiles(
     )
 
 
-def _exact_group_quantiles_small(
-    df: DataFrame, key: str, specs: list[tuple[str, float, str]]
-) -> DataFrame:
-    """Small-input exact quantiles: one sorted value array per (group,
-    measure) + _interp_quantile_sql on top. O(group rows) buffered in
-    ONE task per group — only safe under MEDIAN_SMALL_MAX_ROWS, where
-    it beats the distributed form's 3-shuffle stage floor (0.71 vs
-    1.46s at sf0.1). Value-identical to _exact_group_quantiles
-    (pytest-pinned)."""
-    cols = sorted({c for c, _, _ in specs})
-    midx = {c: i for i, c in enumerate(cols)}
-    arrs = df.groupBy(key).agg(
-        *[
-            F.expr(f"array_sort(collect_list(CAST({c} AS DOUBLE)))").alias(f"_a{i}")
-            for i, c in enumerate(cols)
-        ]
-    )
-    return arrs.select(
-        key,
-        *[
-            F.expr(_interp_quantile_sql(f"_a{midx[c]}", p)).alias(out)
-            for c, p, out in specs
-        ],
-    )
-
-
-# Below this many input rows the exact quantile uses the sorted-array
-# small form (fewer stages win on tiny inputs); above it, or under
-# SMRGH_FORCE_DISTRIBUTED, the distributed value-counts form (nothing
-# buffers a group's rows). Same budget gate as the graph operators'
-# local tiers; both forms are value-identical and pytest-pinned.
-MEDIAN_SMALL_MAX_ROWS = 2_000_000
-
-
 def _lineitem_rows(li: DataFrame, sf_dir: str) -> int:
-    """Lineitem row count for the median tier probes — parquet FOOTER
+    """Lineitem row count for the row-count probes — parquet FOOTER
     metadata via the shared, memoized plans/budget.py helper (zero
     Spark jobs at query-declaration time; the r6 shape ran li.count(),
     a collect()-class action that is a full first-touch scan risk at
@@ -392,15 +340,12 @@ def _lineitem_rows(li: DataFrame, sf_dir: str) -> int:
 
 
 def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact median + interpolated quartile per group, tiered by a
-    zero-job footer row probe: sorted-array small form below
-    MEDIAN_SMALL_MAX_ROWS (the budget-gated local tier), distributed
-    value-counts exact form above it, and above MEDIAN_EXACT_MAX_ROWS
-    the plan swaps to percentile_approx (mergeable sketch, bounded
-    memory per group — the correct 100 TB shape for a skewed/huge
-    group). Outputs are plain round(x, 4) doubles (driver-hash-safe)."""
-    from ..plans.budget import within_budget
-
+    """Exact median + interpolated quartile per group through the
+    distributed value-counts form; above MEDIAN_EXACT_MAX_ROWS (a
+    zero-job footer row probe) the plan swaps to percentile_approx
+    (mergeable sketch, bounded memory per group — the correct 100 TB
+    shape for a skewed/huge group). Outputs are plain round(x, 4)
+    doubles (driver-hash-safe)."""
     li = _t(spark, sf_dir, "lineitem")
     nrows = _lineitem_rows(li, sf_dir)
     if nrows > MEDIAN_EXACT_MAX_ROWS:
@@ -422,13 +367,7 @@ def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("_p")[1], 4).alias("p75_price"),
             )
         )
-    # exact path, tiered on the same probe
-    exact = (
-        _exact_group_quantiles_small
-        if within_budget(nrows, MEDIAN_SMALL_MAX_ROWS)
-        else _exact_group_quantiles
-    )
-    q = exact(
+    q = _exact_group_quantiles(
         li,
         "l_linestatus",
         [
@@ -456,10 +395,10 @@ def _tol_flag(approx, exact, rel: float, abs_: float):
 
 def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The at-scale median plan on the VALUE gate via a bounded-error
-    certificate: one aggregation computes both the mergeable-sketch
-    quantiles (percentile_approx, accuracy 2e3 — fixed-size state,
-    map-side merged, the bounded-memory 100 TB plan) and the exact
-    ones, then emits the exact values plus 0/1 flags asserting the
+    certificate: the mergeable-sketch quantiles (percentile_approx,
+    accuracy 1e3 — fixed-size state, map-side merged, the
+    bounded-memory 100 TB plan) are joined to the exact ones, then
+    the query emits the exact values plus 0/1 flags asserting the
     sketch landed within tolerance (quantity: ±1 absolute — the
     sketch returns a data value while the exact median interpolates,
     so adjacent-integer gaps are legal; prices: ±2% relative). DuckDB
@@ -467,10 +406,7 @@ def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash covers the approximation contract itself — not just row
     shape. Tighter exact-vs-approx error is separately pytest-bounded
     (tests/test_relational.py)."""
-    from ..plans.budget import within_budget
-
     li = _t(spark, sf_dir, "lineitem")
-    nrows = _lineitem_rows(li, sf_dir)
     # accuracy 1000 (rank error 1e-3): the KLL-style summary's merge
     # cost scales with the compression threshold — measured 0.79s
     # (acc 2000) -> ~0.55s (acc 1000) on the sketch agg at the derived
@@ -486,49 +422,21 @@ def agg_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice", F.array(F.lit(0.25), F.lit(0.75)), F.lit(1000)
         ).alias("_pa"),
     ]
-    if within_budget(nrows, MEDIAN_SMALL_MAX_ROWS):
-        # Small tier (r14, guide §2.4): ONE aggregation computes both
-        # the exact sorted-array quantiles (the same
-        # array_sort(collect_list) + _interp_quantile_sql arithmetic
-        # as _exact_group_quantiles_small — value-identical by
-        # construction) and the sketches, halving the lineitem scans
-        # and dropping the branch join entirely. No Expand risk:
-        # neither aggregate is DISTINCT. Measured 2 scans + join
-        # (4 jobs) -> 1 scan (plan: 2 Exchanges -> 1).
-        arrs = li.groupBy("l_linestatus").agg(
-            F.expr(
-                "array_sort(collect_list(CAST(l_quantity AS DOUBLE)))"
-            ).alias("_aq"),
-            F.expr(
-                "array_sort(collect_list(CAST(l_extendedprice AS DOUBLE)))"
-            ).alias("_ap"),
-            *sketch_aggs,
-        )
-        g = arrs.select(
-            "l_linestatus",
-            F.expr(_interp_quantile_sql("_aq", 0.5)).alias("_m"),
-            F.expr(_interp_quantile_sql("_ap", 0.25)).alias("_p25"),
-            F.expr(_interp_quantile_sql("_ap", 0.75)).alias("_p75"),
-            "_ma",
-            "_pa",
-        )
-    else:
-        # At-scale tier: exact side via the distributed value-counts
-        # quantiles (nothing buffers a group's rows — the only shape
-        # that survives a skewed/huge group at 100 TB); the sketch
-        # side stays its own aggregation, the two branches joined on
-        # the group-cardinality key (AQE broadcasts).
-        exact = _exact_group_quantiles(
-            li,
-            "l_linestatus",
-            [
-                ("l_quantity", 0.5, "_m"),
-                ("l_extendedprice", 0.25, "_p25"),
-                ("l_extendedprice", 0.75, "_p75"),
-            ],
-        )
-        sk = li.groupBy("l_linestatus").agg(*sketch_aggs)
-        g = exact.join(sk, "l_linestatus")
+    # exact side via the distributed value-counts quantiles (nothing
+    # buffers a group's rows — the only shape that survives a
+    # skewed/huge group at 100 TB); the sketch side is its own
+    # aggregation, the two joined on the group-cardinality key (AQE
+    # broadcasts)
+    exact = _exact_group_quantiles(
+        li,
+        "l_linestatus",
+        [
+            ("l_quantity", 0.5, "_m"),
+            ("l_extendedprice", 0.25, "_p25"),
+            ("l_extendedprice", 0.75, "_p75"),
+        ],
+    )
+    g = exact.join(li.groupBy("l_linestatus").agg(*sketch_aggs), "l_linestatus")
     return g.select(
         "l_linestatus",
         F.round("_m", 4).alias("med_qty"),

@@ -106,3 +106,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_cached(spark: SparkSession) -> None:
+    """Drop everything one query left in the block manager; call it
+    between queries, never between a query's timed runs.
+
+    Operators persist intra-query shared stages and the iterative loops
+    ``localCheckpoint`` their frontiers, so without this a long session
+    accumulates blocks until a later broadcast build fails (derived
+    sf1, corpus_curate). The order matters:
+
+    1. ``clearCache()`` unregisters the SQL relation cache. Unpersisting
+       a cached relation's RDD while its CacheManager entry stays
+       registered leaves a poisoned entry with no storage, and any
+       later query whose plan canonicalizes onto it recomputes the
+       lineage per consumer (dedup_ngram_jaccard went from 5.8 s to
+       88.7 s in a sweep whose unpersist ran without the clearCache).
+    2. The persistent RDDs left are ``localCheckpoint`` blocks, which
+       are not in the SQL cache; they are unpersisted BLOCKING, since
+       an asynchronous unpersist left ~2 GB of dead blocks resident when
+       the next query started at the derived sf1.
+    """
+    spark.catalog.clearCache()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(True)

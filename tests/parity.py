@@ -157,7 +157,7 @@ def run(
     sf_dir: str = DEFAULT_SF, only: list[str] | None = None, strict: bool = True
 ) -> list[dict]:
     import __spark_entry__ as entrymod
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.session import get_spark
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.session import get_spark, release_cached
 
     spark = get_spark(app_name="parity", cpus=8, shuffle_partitions=8)
     con = duckdb_con(sf_dir)
@@ -174,21 +174,7 @@ def run(
         except Exception as exc:  # surface, keep going
             results.append({"name": name, "ok": False, "error": str(exc)[:500]})
         finally:
-            # operators persist intra-query shared stages (dedup.py);
-            # cleanup is centralized here so entries can't accumulate
-            # across a 125-query session
-            spark.catalog.clearCache()
-            # clearCache only empties the SQL relation cache —
-            # localCheckpoint blocks (CC / PageRank fixpoint loops)
-            # live as persistent RDDs and are only reclaimed when the
-            # ContextCleaner notices the object is unreachable. Over a
-            # full sweep at the derived sf1 the orphaned blocks filled
-            # the unified pool until a later broadcast build failed
-            # (r9: corpus_curate after the gate-priority reorder), so
-            # drop them explicitly; every query re-creates its own
-            # checkpoints on execution.
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(True)
+            release_cached(spark)
     return results
 
 

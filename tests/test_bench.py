@@ -71,6 +71,109 @@ def test_run_inventory_broken_analysis_time_query(spark):
     assert set(errors) == {"bad"}
 
 
+def test_failed_query_releases_its_checkpoints(spark):
+    """A query that raises after an eager ``localCheckpoint`` must not
+    leave its blocks resident for the next query: the release between
+    queries runs on the failure path too."""
+
+    def checkpoints_then_raises(spark, sf_dir):
+        spark.range(100).localCheckpoint()
+        raise RuntimeError("raised after a checkpoint")
+
+    def sees_no_blocks(spark, sf_dir):
+        assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+        return _ok_query(spark, sf_dir)
+
+    errors: dict[str, str] = {}
+    timings = run_inventory(
+        spark,
+        SF_DIR,
+        MetricsRecorder(),
+        n_scale=0,
+        ls=4,
+        errors=errors,
+        queries={"leaks": checkpoints_then_raises, "checks": sees_no_blocks},
+    )
+    assert set(errors) == {"leaks"}
+    assert set(timings) == {"checks"}
+
+
+class _CountingCon:
+    """A DuckDB connection that counts how often each SQL ran."""
+
+    def __init__(self):
+        import duckdb
+
+        self.con = duckdb.connect()
+        self.runs: dict[str, int] = {}
+
+    def execute(self, sql):
+        self.runs[sql] = self.runs.get(sql, 0) + 1
+        return self.con.execute(sql)
+
+    def interrupt(self):
+        self.con.interrupt()
+
+
+def test_run_inventory_times_each_oracle_in_the_same_pass(spark, monkeypatch):
+    """Each query that timed runs its oracle once per pass, right after:
+    a passing oracle gets a ``duck_s``; one that raises is listed in the
+    ``duck`` block's errors, not the run's; one past ``DUCK_DEADLINE_S``
+    is interrupted, listed in ``timeouts`` and not run in pass 2. The
+    Spark timing of every query stands."""
+    import bench
+
+    monkeypatch.setattr(bench, "DUCK_DEADLINE_S", 0.2)
+    sqls = {
+        "passes": "SELECT sum(i) FROM range(100000) t(i)",
+        "raises": "SELECT * FROM no_such_table",
+        "slow": "SELECT sum(hash(i)) FROM range(100000000000) t(i)",
+    }
+    con = _CountingCon()
+    duck = bench.DuckOracles(con, sqls)
+    queries = dict.fromkeys(sqls, _ok_query)
+    errors: dict[str, str] = {}
+    timings = run_inventory(
+        spark, SF_DIR, MetricsRecorder(), n_scale=0, ls=4, errors=errors,
+        queries=queries, duck=duck,
+    )
+    extra = run_inventory(
+        spark, SF_DIR, MetricsRecorder(), n_scale=0, ls=4, errors=errors,
+        queries=queries, record_points=False, duck=duck,
+    )
+    assert set(timings) == set(extra) == set(sqls)
+    assert errors == {}
+    assert set(duck.errors) == {"raises"} and "no_such_table" in duck.errors["raises"]
+    assert set(duck.times) == {"passes"} and duck.times["passes"] >= 0
+    assert duck.timeouts == ["slow"]
+    oracle_runs = {sql: n for sql, n in con.runs.items() if not sql.startswith("SET ")}
+    assert oracle_runs == {sqls["passes"]: 2, sqls["raises"]: 1, sqls["slow"]: 1}
+    block = duck.block(timings)
+    assert block["errors"] == duck.errors and block["timeouts"] == ["slow"]
+    ratio = block["ratio"]
+    assert ratio["overall"] == ratio["floor_bound"]
+    assert ratio["overall"]["n"] == 1 and ratio["overall"]["x"] > 0
+    assert ratio["non_floor"] == {"spark_s": 0, "duck_s": 0, "x": None, "n": 0}
+
+
+def test_oracle_memory_bound_is_half_the_free_host_memory(monkeypatch):
+    """Each oracle runs with DuckDB's memory limit at half of the host
+    memory free when it starts, so an oracle too big to fit beside the
+    Spark JVM raises instead of exhausting the host; the connection
+    does not spill, and reads the parity gate's views."""
+    import bench
+
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    monkeypatch.setattr(bench.CpuMonitor, "mem_used_mb", staticmethod(lambda: host_mb - 4096))
+    con = bench.open_duck(SF_DIR)
+    duck = bench.DuckOracles(con, {"q": "SELECT count(*) FROM lineitem"})
+    assert duck.run("q").startswith("duck ")
+    limit = con.execute("SELECT current_setting('memory_limit')").fetchone()[0]
+    assert limit == "2.0 GiB", limit
+    assert con.execute("SELECT current_setting('temp_directory')").fetchone()[0] == ""
+    assert con.execute("SELECT count(*) FROM lineitem").fetchone()[0] > 0
+
+
 TRACE_KEYS = {
     "decl_s", "exec_s", "jobs", "decl_jobs", "stages", "tasks", "task_s",
     "shuffle_write_mb", "shuffle_read_mb", "spill_mb", "peak_exec_mem_mb",
@@ -233,6 +336,18 @@ def test_compact_summary_fits_driver_tail_buffer():
     assert len(line) <= 1500
     assert "trace" not in json.loads(line)
     assert "trace" in traced
+    # the DuckDB times stay in the full artifact; the three ratios stay
+    part = {"spark_s": 60.0, "duck_s": 40.0, "x": 1.5, "n": 130}
+    ratio = {"overall": part, "floor_bound": part, "non_floor": part}
+    ducked = {
+        **traced,
+        "duck": {"queries": dict(timings), "timeouts": [], "ratio": ratio},
+    }
+    line = json.dumps(compact_summary(ducked, "x"))
+    assert len(line) <= 1500
+    parsed = json.loads(line)
+    assert "duck" not in parsed
+    assert parsed["duck_ratio"] == {"overall": 1.5, "floor_bound": 1.5, "non_floor": 1.5}
 
 
 def test_write_attempt_reference_ledger_format(tmp_path):

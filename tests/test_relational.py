@@ -9,6 +9,8 @@ oracle can't see (approx-distinct error bound, partition invariance).
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 
 from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import relational
@@ -189,13 +191,27 @@ def test_agg_partition_invariance(spark, sf_dir):
     assert summarize(li.repartition(1)) == summarize(li.repartition(64))
 
 
+def _sorted_array_quantile(values: list[float], p: float) -> float:
+    """The exact interpolated quantile of a sorted array, in the
+    arithmetic _exact_group_quantiles evaluates: v[lo] + (v[lo + 1] -
+    v[lo]) * frac at pos = p * (n - 1), where pos is DECIMAL (Spark
+    types the literal p as one) and frac is cast to double."""
+    v = sorted(values)
+    pos = Decimal(repr(p)) * (len(v) - 1)
+    lo = int(pos)
+    frac = pos - lo
+    return v[lo] + ((v[lo + 1] - v[lo]) * float(frac) if frac else 0.0)
+
+
 def test_exact_quantile_tiers_bit_identical(spark, sf_dir):
-    """The two exact-quantile physical forms — sorted-array small tier
-    and distributed value-counts tier (agg_median's two exact forms) — must
-    produce BIT-identical doubles: both evaluate the same Percentile
-    interpolation arithmetic, only the plan differs. Pins the
-    cost-based tier flip at MEDIAN_SMALL_MAX_ROWS as a pure physical
-    choice (the graph-local-path contract)."""
+    """The distributed value-counts quantiles must produce BIT-identical
+    doubles to the sorted-array form over each group's values: the
+    same interpolation arithmetic, only the plan differs. Spark's exact
+    ``F.percentile`` is the semantic reference; it interpolates as
+    (hi_pos - pos) * v[lo] + (pos - lo_pos) * v[hi], which can differ
+    from both in the last bit, so it is compared to 1e-12."""
+    from pyspark.sql import functions as F
+
     from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -205,26 +221,23 @@ def test_exact_quantile_tiers_bit_identical(spark, sf_dir):
         ("l_extendedprice", 0.75, "p75"),
         ("l_discount", 0.9, "p90"),
     ]
-    small = relational._exact_group_quantiles_small(li, "l_returnflag", specs)
     dist = relational._exact_group_quantiles(li, "l_returnflag", specs)
-    s = {r["l_returnflag"]: (r["m"], r["p25"], r["p75"], r["p90"]) for r in small.collect()}
-    d = {r["l_returnflag"]: (r["m"], r["p25"], r["p75"], r["p90"]) for r in dist.collect()}
-    assert s == d  # exact ==, not approx: bit-identical doubles
-
-
-def test_agg_median_approx_tiers_value_identical(spark, sf_dir, monkeypatch):
-    """The r14 fused small tier of agg_median_approx (ONE aggregation
-    computing sorted-array exact quantiles AND the sketches) must
-    produce the same rows as the at-scale two-branch form (separate
-    exact + sketch aggregations joined on the group key): the exact
-    doubles are the same interpolation arithmetic, and the certificate
-    flags stay 1 on both (the +-1 / 2% tolerances dwarf sketch merge
-    jitter). Pins the tier flip as a pure physical choice."""
-    fused = relational.agg_median_approx(spark, sf_dir)
-    monkeypatch.setattr(relational, "MEDIAN_SMALL_MAX_ROWS", 0)
-    two_branch = relational.agg_median_approx(spark, sf_dir)
-    f = {tuple(r) for r in fused.collect()}
-    t = {tuple(r) for r in two_branch.collect()}
-    assert f == t
-    assert all(r["med_ok"] == 1 and r["p25_ok"] == 1 and r["p75_ok"] == 1
-               for r in fused.collect())
+    d = {r["l_returnflag"]: tuple(r[out] for _, _, out in specs) for r in dist.collect()}
+    values: dict[str, dict[str, list[float]]] = {}
+    cols = sorted({c for c, _, _ in specs})
+    for r in li.select("l_returnflag", *[F.col(c).cast("double") for c in cols]).collect():
+        for c in cols:
+            if r[c] is not None:
+                values.setdefault(r["l_returnflag"], {}).setdefault(c, []).append(r[c])
+    arrays = {
+        g: tuple(_sorted_array_quantile(vs[c], p) for c, p, _ in specs)
+        for g, vs in values.items()
+    }
+    assert d and arrays == d  # exact ==, not approx: bit-identical doubles
+    ref = li.groupBy("l_returnflag").agg(
+        *[F.percentile(F.col(c).cast("double"), p).alias(out) for c, p, out in specs]
+    )
+    for r in ref.collect():
+        assert d[r["l_returnflag"]] == pytest.approx(
+            tuple(r[out] for _, _, out in specs), rel=1e-12
+        )
