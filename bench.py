@@ -480,13 +480,14 @@ def run_sweep_magnitude(spark, sf_dir: str, recorder: MetricsRecorder, ls: int) 
     (localCheckpoint — executor-side rows, the driver never holds a
     5 MB string): leaving the repeat() in the lazy plan would
     re-evaluate the O(N) expansion under every downstream projection.
-    ``spread=True`` is forced because Catalyst's size stats don't
-    model the 1000x row expansion (the auto decision would see the
-    tiny parquet scan and run single-task). The top grid point pushes
+    The expanded corpus goes through ``fan_out`` with no size floor,
+    because Catalyst's size stats don't model the 1000x row expansion
+    (kmer_explode's slice-frame floor would see the tiny parquet scan
+    and run single-task). The top grid point pushes
     ~120M exploded k-mers through the byte-windowed map kernel and
     the group-count reduce."""
     from sycl_mapreduce_cpu_gpu_hybrid_spark.operators.kmer import kmer_count
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import load_table
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import fan_out, load_table
 
     docs = load_table(spark, sf_dir, "documents").where(f"doc_id < {MAG_DOCS}")
     for n in MAG_NS:
@@ -496,7 +497,7 @@ def run_sweep_magnitude(spark, sf_dir: str, recorder: MetricsRecorder, ls: int) 
             f" 1, {n}) AS text",
         ).localCheckpoint()
         for k in MAG_KS:
-            q = kmer_count(expanded, k=k, min_count=2, spread=True)
+            q = kmer_count(fan_out(expanded), k=k, min_count=2)
             force(q)  # warm-up, suppressed (runprogram.sh:29-41)
             with timed() as t:
                 force(q)

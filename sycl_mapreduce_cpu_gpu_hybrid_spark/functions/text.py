@@ -170,22 +170,18 @@ def winnowing_fingerprints(
     sort, no global distinct (rows are already unique per doc). A
     doc's state is ~16 bytes per character in one row buffer;
     fingerprinting callers should pre-truncate multi-MB documents.
-    Input is spread across all cores whenever the scan yields fewer
-    partitions than the cluster has: unlike the bare k-mer count
-    (where tiny inputs run faster on one task), the per-character
-    least-of-``window`` frame min is heavy enough that fan-out wins
-    even at toy scale (measured 2.3s -> 1.2s on 1.5 MB).
+    Input goes through ``fan_out`` with no size floor: unlike the
+    bare k-mer count (where tiny inputs run faster on one task), the
+    per-character least-of-``window`` frame min is heavy enough that
+    fan-out wins even at toy scale (measured 2.3s -> 1.2s on 1.5 MB).
 
     ``portable=True`` swaps xxhash64 for the md5-derived 60-bit hash
     (functions/porthash.py) that DuckDB reproduces bit-identically —
     slower, but it upgrades the declared query from a rows-only check
     to a full value-hash oracle."""
-    from ..sources.tables import scan_num_partitions
+    from ..sources.tables import fan_out
 
-    sc = docs.sparkSession.sparkContext
-    base = docs.where(F.length(text_col) >= k)
-    if scan_num_partitions(docs) < sc.defaultParallelism:
-        base = base.repartition(sc.defaultParallelism)
+    base = fan_out(docs.where(F.length(text_col) >= k))
     gram = f"substring({text_col}, i, {k})"
     hash_sql = (
         f"cast(conv(substring(md5({gram}), 1, 15), 16, 10) AS bigint)"

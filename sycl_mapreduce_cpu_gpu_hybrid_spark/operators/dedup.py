@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import fan_out
 from .kmer import kmer_explode
 
 
@@ -58,14 +59,12 @@ def shingles(
     kernel with the count semantics replaced by set semantics."""
     return (
         kmer_explode(
-            docs.select(id_col, text_col),
+            # downstream consumers hash every shingle up to 64x, so the
+            # per-row work justifies fanning out even a small corpus
+            fan_out(docs.select(id_col, text_col)),
             k=k,
             text_col=text_col,
             keep_cols=[id_col],
-            enforce_reference_cap=False,
-            # downstream consumers hash every shingle up to 64x, so the
-            # per-row work justifies fanning out even a small corpus
-            spread=True,
         )
         .select(id_col, F.col("word").alias("shingle"))
         .distinct()
@@ -107,16 +106,14 @@ def minhash_signatures(
     pairwise estimate, so the constants moved to the components.)
     """
     sh = kmer_explode(
-        docs.select(id_col, text_col),
+        # per-shingle work is 2 base hashes + num_hashes derived mins,
+        # not a count: fanning out wins even below kmer_explode's
+        # slice-frame floor (measured ~1.6x on the sf0.1 corpus; both
+        # families now cost ~the same since the CW portable form)
+        fan_out(docs.select(id_col, text_col)),
         k=k,
         text_col=text_col,
         keep_cols=[id_col],
-        enforce_reference_cap=False,
-        # per-shingle work is 2 base hashes + num_hashes derived mins,
-        # not a count: fanning out wins even below the auto-spread
-        # size floor (measured ~1.6x on the sf0.1 corpus; both
-        # families now cost ~the same since the CW portable form)
-        spread=True,
     )
     # The per-component min aggregates are authored as ONE SQL string
     # per column (F.expr), not as Column-method chains: each Column op
@@ -284,11 +281,7 @@ def simhash(
     n_bits = 60 if portable else 64
     # spread the scan before the explode: every token row feeds
     # n_bits conditional-sum updates in the map-side partial agg, and
-    # below ~cluster scale the corpus arrives as one split (the
-    # kmer_explode _should_spread rule; minhash gets it for free via
-    # kmer_explode, simhash exploded its own tokens without it)
-    from ..sources.tables import fan_out
-
+    # below ~cluster scale the corpus arrives as one split
     docs = fan_out(docs, min_bytes=1_000_000)
     toks = docs.select(
         F.col(id_col),
@@ -565,9 +558,11 @@ def _ngram_rep_core(
     )
     # one doc per distinct content, carrying its group weight; the
     # join is on the id column (the rep side is |distinct contents|
-    # rows — AQE broadcasts it while small, shuffles both at scale)
+    # rows — AQE broadcasts it while small, shuffles both at scale).
+    # The docs side is spread before the join: every shingle the
+    # explode emits is hashed and joined, heavier than a count.
     rep_docs = (
-        docs.select(id_col, text_col)
+        fan_out(docs.select(id_col, text_col))
         .join(
             groups.select(F.col("_rep").alias("__rid"), "_w"),
             F.col(id_col) == F.col("__rid"),
@@ -575,12 +570,7 @@ def _ngram_rep_core(
         .drop("__rid")
     )
     sh = kmer_explode(
-        rep_docs,
-        k=k,
-        text_col=text_col,
-        keep_cols=[id_col, "_w"],
-        enforce_reference_cap=False,
-        spread=True,
+        rep_docs, k=k, text_col=text_col, keep_cols=[id_col, "_w"]
     ).select(id_col, "_w", F.col("word").alias("shingle"))
     # df cap as a lazy broadcast scalar (one 1-row aggregate inside the
     # same DAG — no eager driver-side count at plan-construction time),

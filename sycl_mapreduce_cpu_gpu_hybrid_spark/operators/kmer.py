@@ -12,7 +12,8 @@ Reference semantics being reproduced (citations into /root/reference):
   map-side partial aggregation, which replaces the reference's
   sort+atomic-merge scheme.
 - Sink filter: the production sink emits only count >= 2, deduplicated
-  (src/main.cpp:55-73, filter at :65) — exposed as ``min_count``.
+  (src/main.cpp:55-73, filter at :65) — ``kmer_sink`` applies it;
+  ``kmer_count``'s ``min_count=2`` reproduces it for declared queries.
 - Degenerate input: doc shorter than k produces no windows
   (src/main.cpp:133 clamps setsize to 0).
 
@@ -30,6 +31,11 @@ higher-order ``transform`` lambdas (measured ~15%% on the sf0.1 corpus)
 and no Python. The aggregation is an ordinary shuffle-based hash agg
 that spills — so the operator survives documents and corpora far bigger
 than executor memory.
+
+Nothing about the kernel is per-call configurable: the slice size is
+the module constant ``SLICE_SIZE``, the reference's MAXK=64 cap is
+always enforced, and whether the map phase is spread across cores is
+decided by ``sources.tables.fan_out``, the engine's one spread rule.
 """
 
 from __future__ import annotations
@@ -37,97 +43,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import fan_out
+
 MAXK = 64  # reference fixed-width key cap, src/GPU_Module/GPU.h:15
 # k-mer starts per slice; bounds per-row state (~64 KB slice bytes +
 # a 256 KB start-position array). With byte windowing the per-window
 # cost is O(1), so the optimum is the largest slice whose row state
 # stays trivially small: measured on 500 KB docs 4096 -> 0.42s,
 # 65536 -> 0.26s; short-doc corpora are insensitive (slice >= doc).
-DEFAULT_SLICE = 65536
-
-
-def _validate_k(k: int, enforce_reference_cap: bool) -> None:
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if enforce_reference_cap and k > MAXK:
-        raise ValueError(
-            f"k={k} exceeds the reference's MAXK={MAXK} "
-            "(src/GPU_Module/GPU.h:15); pass enforce_reference_cap=False to lift"
-        )
-
-
-# Spread the map phase across cores only when the corpus is big enough
-# that per-task compute dominates the repartition's fixed cost
-# (~0.1-0.2s shuffle setup). Measured on an idle host: sf0.1
-# (1.5M chars) 1 task 1.5s vs 32 tasks 0.45-0.58s (3x win); sf0.01
-# (150K chars) 0.28s vs 0.53s (spread loses). Crossover sits between,
-# so the floor is 1M chars; an earlier 8M floor came from a
-# measurement polluted by host CPU-steal noise.
-SPREAD_MIN_CHARS = 1_000_000
-# parquet on-disk → in-memory text decompression fudge for plan stats
-_DECOMPRESS_FUDGE = 3
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the frame (no job run)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # non-JVM-backed or API change: fall back to "unknown"
-        return None
-
-
-def _should_spread(docs: DataFrame) -> tuple[bool, int]:
-    """Decide whether the expanding Generate needs a repartition for CPU
-    parallelism, and to how many partitions.
-
-    The explode feeds a map-side partial agg, which *streams* — exploded
-    rows are never materialized or shuffled in full — so this is purely
-    a CPU-parallelism decision, not a memory one. At 100 TB the parquet
-    scan already yields >= cores partitions and this is a no-op; the rule
-    exists for mid-size inputs that arrive as a handful of files.
-    """
-    from ..sources.tables import scan_num_partitions
-
-    sc = docs.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    scan_parts = scan_num_partitions(docs)
-    if scan_parts >= target:
-        return False, scan_parts
-    size = _plan_size_bytes(docs)
-    if size is not None and size * _DECOMPRESS_FUDGE < SPREAD_MIN_CHARS:
-        return False, scan_parts
-    return True, target
+# Read at call time, so a test can shrink it to stress the overlap.
+SLICE_SIZE = 65536
+# fan_out floor on the slice frame's plan-size stat. The spread pays
+# only once per-task compute beats the repartition's fixed cost
+# (~0.1-0.2s shuffle setup): measured on an idle host, sf0.1 1 task
+# 1.5s vs 32 tasks 0.45-0.58s, sf0.01 0.28s vs 0.53s. The slice-frame
+# stat is ~1.24x the documents scan's and does not depend on k, so
+# the 1M-char crossover (a ~333 KB scan stat at 3x parquet
+# decompression) sits near 413 KB here: sf0.01 reads 80,647 B (stays
+# on one task), sf0.1 737,142 B and the 8 x 100,000-base genome
+# ~1.09 MB (both spread).
+SPREAD_MIN_SLICE_BYTES = 400_000
 
 
 def kmer_explode(
     docs: DataFrame,
     k: int,
     text_col: str = "text",
-    slice_size: int = DEFAULT_SLICE,
-    enforce_reference_cap: bool = True,
     keep_cols: list[str] | None = None,
-    spread: bool | None = None,
 ) -> DataFrame:
     """Emit one row per k-mer occurrence (the Map phase).
 
-    Two-level explode: slices of ``slice_size`` starts (each slice is
-    ``slice_size + k - 1`` chars, overlapping by ``k - 1`` so no window
+    Two-level explode: slices of ``SLICE_SIZE`` starts (each slice is
+    ``SLICE_SIZE + k - 1`` bytes, overlapping by ``k - 1`` so no window
     is lost or duplicated at slice boundaries), then k-mers per slice.
     Each level explodes start positions (``sequence`` int arrays) and
-    projects ``substring`` — plain codegen'd expressions end to end;
-    the slice string is cut *before* the spread repartition so the
-    exchange moves slice bytes, never whole documents per slice row.
+    projects ``substring`` — plain codegen'd expressions end to end.
     The aggregation downstream is an ordinary spillable shuffle hash
-    agg.
+    agg. ``k`` is capped at the reference's MAXK.
 
-    ``spread``: None = size-based auto decision; True/False forces.
-    Callers whose downstream per-row work is much heavier than a
-    count (e.g. MinHash's 64 hashes per shingle) should force True —
-    the auto floor models a counting workload only (interleaved A/B
-    at sf0.1: forced spread is ~1.6× faster for the xor-rotate
-    family, ~10× for portable md5). The auto decision reads Catalyst
-    size stats, which do not model row-expanding projections
-    (repeat/concat) upstream — such callers should force True too.
+    The spread decision is ``sources.tables.fan_out``'s, made on the
+    slice frame with the ``SPREAD_MIN_SLICE_BYTES`` floor: the slice
+    string is cut *before* the repartition, so the exchange moves
+    slice bytes, never whole documents per slice row, and one giant
+    document's slices scatter across cores. The floor models a
+    counting workload; callers whose per-row work is much heavier
+    (MinHash's 64 hashes per shingle) or whose upstream projections
+    expand rows beyond what Catalyst's size stats see (repeat/concat)
+    call ``fan_out`` on their own input first, which leaves the slice
+    frame already spread.
 
     BYTE windowing (r6): the window arithmetic runs on the text cast
     to BINARY, and each window is cast back to string at the end.
@@ -135,17 +98,18 @@ def kmer_explode(
     ``char*`` buffer (src/GPU_Module/GPU.cpp:32-45), i.e. bytes — and
     a 25x+ throughput win on multi-KB documents: ``substring`` on a
     STRING pays an O(position) UTF-8 codepoint scan per window
-    (measured: cost grows ∝ slice_size, 13.4s -> 0.49s at 12M chars
+    (measured: cost grows ∝ slice size, 13.4s -> 0.49s at 12M chars
     switching to binary), while BINARY substrings are O(1) byte
     slices. For pure-ASCII corpora (all driver fixtures) results are
     bit-identical to char windowing; multibyte UTF-8 input windows by
     byte exactly as the reference would.
     """
-    _validate_k(k, enforce_reference_cap)
-    if spread is None:
-        spread, n_parts = _should_spread(docs)
-    else:
-        n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if k > MAXK:
+        raise ValueError(
+            f"k={k} exceeds the reference's MAXK={MAXK} (src/GPU_Module/GPU.h:15)"
+        )
     carried = [F.col(c) for c in (keep_cols or [])]
     slices = (
         # validity predicate in BYTES, consistent with byte windowing
@@ -160,22 +124,18 @@ def kmer_explode(
             *carried,
             F.col("_bytes"),
             F.explode(
-                F.expr(f"sequence(1, length(_bytes), {slice_size})")
+                F.expr(f"sequence(1, length(_bytes), {SLICE_SIZE})")
             ).alias("_s"),
         )
         .select(
             *carried,
-            F.expr(f"substring(_bytes, _s, {slice_size + k - 1})").alias("_slice"),
+            F.expr(f"substring(_bytes, _s, {SLICE_SIZE + k - 1})").alias("_slice"),
         )
         .where(F.length("_slice") >= k)
     )
-    if spread:
-        # repartition at the *slice* level, not the doc level: a single
-        # giant document fans out across cores too (its slices scatter),
-        # at the cost of shuffling ~corpus-size bytes once.
-        slices = slices.repartition(n_parts)
     return (
-        slices.select(
+        fan_out(slices, min_bytes=SPREAD_MIN_SLICE_BYTES)
+        .select(
             *carried,
             F.col("_slice"),
             F.explode(
@@ -194,9 +154,6 @@ def kmer_count(
     k: int,
     text_col: str = "text",
     min_count: int = 1,
-    slice_size: int = DEFAULT_SLICE,
-    enforce_reference_cap: bool = True,
-    spread: bool | None = None,
 ) -> DataFrame:
     """k-mer occurrence counts across the corpus: DataFrame[word, cnt].
 
@@ -206,10 +163,11 @@ def kmer_count(
     pairs — the Spark-native equivalent of the reference's
     atomic-merge reduce (src/GPU_Module/GPU.cpp:100-108).
     """
-    kmers = kmer_explode(
-        docs, k, text_col, slice_size, enforce_reference_cap, spread=spread
+    counts = (
+        kmer_explode(docs, k, text_col)
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    counts = kmers.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     if min_count > 1:
         counts = counts.where(F.col("cnt") >= min_count)
     return counts
@@ -225,23 +183,13 @@ def total_kmers(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     return docs.agg(F.coalesce(F.sum(per_doc.cast("long")), F.lit(0).cast("long")).alias("total"))
 
 
-def kmer_sink(
-    counts: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    min_count: int = 2,
-) -> None:
+def kmer_sink(counts: DataFrame, path: str) -> None:
     """Filtered dedup sink — reference print_mapped_counts
-    (src/main.cpp:55-73): emit only count >= min_count rows. The
-    reference additionally dedups via an unordered_set; groupBy output
-    is already unique per word.
+    (src/main.cpp:55-73): write only the count >= 2 rows (the filter
+    at :65) as parquet. The reference additionally dedups via an
+    unordered_set; groupBy output is already unique per word.
     """
-    (
-        counts.where(F.col("cnt") >= min_count)
-        .write.format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )
+    counts.where(F.col("cnt") >= 2).write.mode("overwrite").parquet(path)
 
 
 def safe_num_to_string(col: F.Column | str) -> F.Column:

@@ -539,14 +539,11 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicted-language histogram (stopword-argmax heuristic; the
     synthetic corpus is English-vocabulary soup, so the useful check
     is determinism + the hand-built-sentence tests)."""
-    from ..sources.tables import scan_num_partitions
+    from ..sources.tables import fan_out
 
-    d = _docs(spark, sf_dir)
     # the per-doc score is ~langs x tokens interpreted lambda calls —
     # heavy enough to fan out when the scan arrives single-partition
-    sc = spark.sparkContext
-    if scan_num_partitions(d) < sc.defaultParallelism:
-        d = d.repartition(sc.defaultParallelism)
+    d = fan_out(_docs(spark, sf_dir))
     return d.groupBy(lang_id("text").alias("pred_lang")).agg(
         F.count(F.lit(1)).alias("n")
     )

@@ -171,15 +171,36 @@ def scan_num_partitions(df: DataFrame) -> int:
     application (fixtures are immutable; the split math depends only
     on session confs that don't change mid-run), so key the memo on
     ``semanticHash`` — one cheap analysis-only roundtrip — and pay the
-    RDD conversion once per distinct plan."""
+    RDD conversion once per distinct plan.
+
+    A plan with an exchange is never converted: under AQE that runs
+    every shuffle and broadcast stage upstream (and fills any cache on
+    the way) at declaration time. Its physical plan, which no job
+    builds, gives the count instead: a shuffle on the output path
+    sets it (before any AQE coalescing), and 0 means the output
+    follows a scan through broadcast joins, which reads as
+    under-partitioned."""
     sc = df.sparkSession.sparkContext
     try:
         key = (sc.applicationId, df.semanticHash())
     except Exception:  # non-classic backends: fall through uncached
         return df.rdd.getNumPartitions()
     if key not in _PARTS_CACHE:
-        _PARTS_CACHE[key] = df.rdd.getNumPartitions()
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            n = plan.executedPlan().outputPartitioning().numPartitions()
+        else:
+            n = df.rdd.getNumPartitions()
+        _PARTS_CACHE[key] = n
     return _PARTS_CACHE[key]
+
+
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for the frame (no job run)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # non-JVM-backed or API change: fall back to "unknown"
+        return None
 
 
 def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
@@ -191,20 +212,20 @@ def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     Exchange it inserts on small inputs moves the raw rows ONCE,
     before the expensive projection, and is repaid many times over
     (measured: text_repetition 12.1s -> sub-second at sf0.1, which
-    arrives as ONE split). Same rule as operators/kmer._should_spread
-    and text.lang_id.
+    arrives as ONE split). This is the engine's only spread decision:
+    every operator that fans out an under-partitioned input calls it.
+    The partition probe runs no job, even on a frame with exchanges
+    (``scan_num_partitions``).
 
     ``min_bytes``: skip the exchange when Catalyst's plan-size stat is
     below this floor — for kernels whose per-byte cost is low enough
     that on tiny inputs the exchange + task overhead exceeds the
-    single-core work it parallelizes (the kmer SPREAD_MIN_CHARS rule,
-    generalized; no job is run to probe)."""
+    single-core work it parallelizes (e.g. the k-mer count's
+    slice-frame floor; no job is run to probe)."""
     sc = df.sparkSession.sparkContext
     if scan_num_partitions(df) >= sc.defaultParallelism:
         return df
     if min_bytes > 0:
-        from ..operators.kmer import _plan_size_bytes
-
         size = _plan_size_bytes(df)
         if size is not None and size < min_bytes:
             return df

@@ -39,7 +39,7 @@ def test_roundtrip_matches_python_oracle(spark, fasta_dir, tmp_path):
 
     # sink parity: only count >= 2 rows emitted (src/main.cpp:65)
     out = str(tmp_path / "sink")
-    kmer_sink(counts, out, min_count=2)
+    kmer_sink(counts, out)
     emitted = {r["word"]: r["cnt"] for r in spark.read.parquet(out).collect()}
     assert emitted == {w: c for w, c in got.items() if c >= 2}
     assert emitted  # non-degenerate: repeats exist in the fixture

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sycl_mapreduce_cpu_gpu_hybrid_spark.operators import kmer
 from sycl_mapreduce_cpu_gpu_hybrid_spark.operators.kmer import (
     kmer_count,
     total_kmers,
@@ -36,15 +37,16 @@ def test_kmer_count_matches_python_oracle(spark, docs, texts, k):
     assert_matches(oracle, engine, ["word"], ["cnt"])
 
 
-def test_slice_boundaries_do_not_lose_or_duplicate(spark):
-    # doc length straddles multiple slices; tiny slice_size stresses overlap
+def test_slice_boundaries_do_not_lose_or_duplicate(spark, monkeypatch):
+    # doc length straddles multiple slices; a tiny slice stresses overlap
+    monkeypatch.setattr(kmer, "SLICE_SIZE", 7)
     text = "ABCDEFGHIJ" * 7  # len 70
     docs = spark.createDataFrame([("d1", text)], "doc_id string, text string")
     k = 3
     oracle = spark.createDataFrame(
         list(python_kmer_oracle([text], k).items()), "word string, cnt long"
     )
-    engine = kmer_count(docs, k, slice_size=7)
+    engine = kmer_count(docs, k)
     assert_matches(oracle, engine, ["word"], ["cnt"])
 
 
@@ -96,8 +98,6 @@ def test_partition_count_invariance(spark, docs, texts):
 def test_k_cap_validation(spark, docs):
     with pytest.raises(ValueError):
         kmer_count(docs, 65)
-    # lifting the cap is allowed for the general engine
-    kmer_count(docs, 65, enforce_reference_cap=False)
 
 
 def test_safe_num_to_string(spark):
