@@ -119,7 +119,6 @@ def pagerank_fixedpoint(
     edges: DataFrame,
     iters: int = 3,
     damping_pct: int = 85,
-    symmetric: bool = False,
     dangling: str = "none",
     node_deg: DataFrame | None = None,
 ) -> DataFrame:
@@ -140,19 +139,6 @@ def pagerank_fixedpoint(
     the distributed loop, the local replay, and
     :func:`pagerank_oracle_sql` (``dangling=True``).
 
-    ``symmetric=True`` declares that BOTH directions of every edge are
-    present (an undirected graph materialized as two directed rows).
-    Then every node occurs as a src and its src-count IS its degree,
-    so the node/degree frame is ONE exchange-free aggregation over the
-    already-src-partitioned edge checkpoint — instead of the general
-    path's union of both endpoint projections (2x the edge rows) plus
-    a shuffle. The agg preserves the hash(src) clustering, so the
-    checkpoint keeps both per-round joins exchange-free exactly like
-    the general path. Caller-asserted; set ``SMRGH_VERIFY_SYMMETRIC=1``
-    (CI does) for a bounded anti-join probe that raises on a directed
-    input instead of silently dropping dst-only nodes. The r10
-    trade-graph caller explodes both directions by construction.
-
     ``node_deg``: optional caller-supplied ``(node_id, deg)`` frame —
     e.g. a write-once node layout derived from the same edge relation
     (queries/relational._tradegraph_node_layout). When given, the
@@ -160,9 +146,8 @@ def pagerank_fixedpoint(
     |V|-row frame repartitions+checkpoints (measured: the aggregation
     was a full extra pass over the 117M-row sf10 edge relation per
     declaration). CONTRACT: must hold exactly the node universe and
-    out-degrees of ``edges`` under the declared ``symmetric``
-    semantics — derive it from the same materialized relation, never
-    hand-build it (the r13 layout-lifecycle lesson)."""
+    out-degrees of ``edges`` — derive it from the same materialized
+    relation, never hand-build it (the r13 layout-lifecycle lesson)."""
     # Materialize the raw edge relation ONCE, HASH-PARTITIONED ON src:
     # callers pass edges as an arbitrary lineage (here a join+distinct
     # over the fact table) and every iteration re-consumes it — without
@@ -199,15 +184,6 @@ def pagerank_fixedpoint(
         # |V|-row repartition+checkpoint only, no |E|-row aggregation;
         # the node_id clustering keeps the carry join exchange-free
         nd = node_deg.repartition(n_part, "node_id").localCheckpoint()
-    elif symmetric:
-        # src-count == degree and srcs == the node universe; ed is
-        # already hash-partitioned on src, so this aggregation inserts
-        # no exchange and its output inherits the clustering
-        nd = (
-            ed.groupBy(F.col("src").alias("node_id"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-            .localCheckpoint()
-        )
     else:
         nd = (
             ed.select(F.col("src").alias("node_id"), F.lit(1).alias("is_out"))
@@ -219,28 +195,6 @@ def pagerank_fixedpoint(
             .repartition(n_part, "node_id")
             .localCheckpoint()
         )
-    if symmetric:
-        import os
-
-        if os.environ.get("SMRGH_VERIFY_SYMMETRIC"):
-            # Debug-tier contract check: symmetric means every dst also
-            # occurs as a src (so the src universe IS the node
-            # universe). A directed edge set would otherwise silently
-            # drop dst-only nodes and return wrong ranks. One bounded
-            # anti-join probe against the |V|-row nd frame — off by
-            # default, enabled in CI.
-            orphan = (
-                ed.select(F.col("dst").alias("node_id"))
-                .join(nd, "node_id", "left_anti")
-                .limit(1)
-                .count()
-            )
-            if orphan:
-                raise ValueError(
-                    "pagerank_fixedpoint(symmetric=True) got a directed "
-                    "edge set: some dst never occurs as a src. Pass both "
-                    "directions of every edge, or symmetric=False."
-                )
     ranks = nd.select(
         "node_id", "deg", F.lit(RANK_SCALE).cast("bigint").alias("rank")
     )

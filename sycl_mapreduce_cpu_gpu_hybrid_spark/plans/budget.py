@@ -71,29 +71,3 @@ def within_budget(bound: int | None, ceiling: int) -> bool:
         and 0 <= bound <= ceiling
     )
 
-
-_TABLE_ROWS_CACHE: dict[str, tuple[tuple, int]] = {}
-
-
-def table_rows(sf_dir: str, table: str, df=None) -> int:
-    """Row count for ``{sf_dir}/{table}.parquet`` from the parquet
-    FOOTER (O(files) metadata, zero Spark jobs at declaration time),
-    memoized per path and source stamp, so a fixture rewritten in
-    place is counted again. Falls back to a Spark count when the
-    source isn't a local single-file parquet table (e.g. a view-backed
-    test sf_dir) and a DataFrame was provided."""
-    from ..sources.tables import _source_stamp
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    stamp = _source_stamp(path)
-    if _TABLE_ROWS_CACHE.get(path, (None,))[0] != stamp:
-        if os.path.isfile(path):
-            import pyarrow.parquet as _pq
-
-            rows = _pq.read_metadata(path).num_rows
-        elif df is not None:
-            rows = df.count()
-        else:
-            raise FileNotFoundError(path)
-        _TABLE_ROWS_CACHE[path] = (stamp, rows)
-    return _TABLE_ROWS_CACHE[path][1]

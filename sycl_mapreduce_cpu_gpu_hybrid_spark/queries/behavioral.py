@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, parquet_rows
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -386,14 +386,13 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was prototyped and rejected: this box's numpy runs uint64
     # elementwise ops ~500x slower than BLAS sgemm, so the gemm wins
     # everywhere the transfer budget admits.
-    from ..plans.budget import local_tier_enabled, table_rows
+    from ..plans.budget import local_tier_enabled
 
     # vertex-universe probe with ZERO Spark jobs: the co-supply graph's
     # nodes are suppliers, so the supplier table's parquet footer row
-    # count (memoized, plans/budget.py) bounds the node count
+    # count (memoized, sources/tables.py) bounds the node count
     if local_tier_enabled(TRI_LOCAL_MAX_NODES) and (
-        table_rows(sf_dir, "supplier", df=_t(spark, sf_dir, "supplier"))
-        <= TRI_LOCAL_MAX_NODES
+        parquet_rows(f"{sf_dir}/supplier.parquet") <= TRI_LOCAL_MAX_NODES
     ):
         import numpy as np
 
@@ -805,7 +804,7 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the timed query:
 
     1. Above RFM_NTILE_LOCAL_MAX customers (or under
-       SMRGH_FORCE_DISTRIBUTED, or with no footer bound): live
+       SMRGH_FORCE_DISTRIBUTED): live
        order-statistic selection (_ntile_boundary_buckets — histogram
        locate + one-bucket pick + literal comparison). EXACT, no
        full-frame sort anywhere, so a 1.5e8-customer dimension never
@@ -814,13 +813,10 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     2. At or below RFM_NTILE_LOCAL_MAX: the three global ntile
        windows — dimension-sized single tasks, fastest at toy
        scale."""
-    from ..plans.budget import table_rows, within_budget
+    from ..plans.budget import within_budget
 
     rfm = _rfm_frame(spark, sf_dir)
-    try:
-        cust_bound = table_rows(sf_dir, "customer")
-    except FileNotFoundError:
-        cust_bound = None  # view-backed test dir: take the scale tier
+    cust_bound = parquet_rows(f"{sf_dir}/customer.parquet")
     if within_budget(cust_bound, RFM_NTILE_LOCAL_MAX):
         bucketed = rfm.select(
             "o_custkey",

@@ -94,8 +94,7 @@ def _truth_pairs_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     it launches kept the declarations out of the prepared-plan
     cache). DuckDB's oracle still recomputes the same truth
     independently, so the certificate's cross-engine teeth are
-    unchanged. Falls back to the lazy pipeline for view-backed test
-    dirs."""
+    unchanged."""
     from ..sources.tables import derived_layout, read_layout
 
     build = lambda: ngram_jaccard_pairs(  # noqa: E731
@@ -112,7 +111,7 @@ def _truth_pairs_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"k=6;t=0.9;budget={_TRUTH_SAMPLE_BUDGET};v={_TRUTH_PAIRS_LAYOUT_V}",
         lambda tmp: build().write.mode("overwrite").parquet(tmp),
     )
-    return build() if path is None else read_layout(spark, path)
+    return read_layout(spark, path)
 
 
 def _pair_recall_cert(
@@ -141,9 +140,7 @@ def _pair_recall_cert(
     the original two-branch form evaluated the expensive truth
     lineage twice, the r13 single-pass fixed that — 9.8s -> ~4s at
     sf0.1 — and the r14 layout then made truth re-scans ~free, which
-    is what makes the broadcast direction strictly better now. For
-    the view-backed fallback the truth lineage is twice-evaluated
-    again, but only on toy test dirs.)
+    is what makes the broadcast direction strictly better now.)
 
     CONTRACT (r14): ``candidates`` must already be DISTINCT on
     (a, b) — a duplicate pair would multiply its truth row through
@@ -156,23 +153,7 @@ def _pair_recall_cert(
     is already unique). The contract is pinned for both production
     callers by tests/test_dedup.py::
     test_recall_cert_callers_emit_distinct_pairs — EXTEND THAT TEST
-    when adding a caller — and enforced at run time under
-    ``SMRGH_DEBUG_CERT=1`` (r14 advisory guardrail): the debug path
-    counts duplicates per pair inside the certificate's own pass and
-    raise_error()s on the first violation, so a non-distinct caller
-    fails loudly instead of silently corrupting n_truth/recall_ok."""
-    if os.environ.get("SMRGH_DEBUG_CERT") == "1":
-        n_dup = (
-            candidates.groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .where(F.col("_c") > 1)
-            .count()
-        )
-        if n_dup:
-            raise AssertionError(
-                f"_pair_recall_cert: {n_dup} non-distinct candidate"
-                " pair(s) — callers must emit DISTINCT (a, b)"
-            )
+    when adding a caller."""
     # both sides distinct on (a, b), so |candidates SEMI truth| ==
     # |truth ∩ candidates| == the old left-join's count(_hit)
     total = truth.agg(F.count(F.lit(1)).alias("n_truth"))
@@ -233,9 +214,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_GRAPH_LAYOUT_V = 1
 
 
-def _ngram_pair_graph(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, int | None]:
+def _ngram_pair_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """The contracted ngram-Jaccard pair graph for clustering
     consumers (dedup_clusters, corpus_curate — both consume the SAME
     (k=6, threshold=0.6) graph), materialized once per fixture
@@ -243,19 +222,16 @@ def _ngram_pair_graph(
     _tradegraph_edge_layout precedent (queries/relational.py): pair
     derivation is ingest-time work in a real curation pipeline, so
     repeat runs scan the ~|E|-row relation instead of re-paying the
-    shingle index + candidate join + Jaccard verify. Falls back to
-    the lazy pipeline for view-backed test dirs (no files to
-    fingerprint).
+    shingle index + candidate join + Jaccard verify.
 
-    Also returns the layout's footer row count (None on the
-    fallback) — a zero-job UPPER BOUND on the canonical edge count
-    that lets connected_components skip its local-tier probe when the
-    graph provably exceeds the cap (r15: the probe's
-    limit(cap+1).toPandas() executed the full edge pipeline once, then
-    the distributed loop's localCheckpoint paid it AGAIN — one wasted
-    full pass exactly on the graphs where the pipeline is most
-    expensive)."""
-    from ..sources.tables import derived_layout, layout_rows, read_layout
+    Also returns the layout's footer row count — a zero-job UPPER
+    BOUND on the canonical edge count that lets connected_components
+    skip its local-tier probe when the graph provably exceeds the cap
+    (r15: the probe's limit(cap+1).toPandas() executed the full edge
+    pipeline once, then the distributed loop's localCheckpoint paid it
+    AGAIN — one wasted full pass exactly on the graphs where the
+    pipeline is most expensive)."""
+    from ..sources.tables import derived_layout, parquet_rows, read_layout
 
     build = lambda: ngram_jaccard_pair_graph(  # noqa: E731
         _docs(spark, sf_dir), k=6, threshold=0.6
@@ -267,9 +243,7 @@ def _ngram_pair_graph(
         f"k=6;t=0.6;v={_NGRAM_GRAPH_LAYOUT_V}",
         lambda tmp: build().write.mode("overwrite").parquet(tmp),
     )
-    if path is None:
-        return build(), None
-    return read_layout(spark, path), layout_rows(path)
+    return read_layout(spark, path), parquet_rows(path)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,34 +273,27 @@ def text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EMB_LSH = dict(threshold=0.4, n_planes=64, bands=8, max_bucket=500, dim=64)
 
-_EMB_DIM_CACHE: dict[str, tuple[tuple, int]] = {}
+_EMB_DIM_CACHE: dict[str, tuple[tuple, int | None]] = {}
 
 
 def _embedding_dim_probe(sf_dir: str) -> int | None:
     """Embedding dimensionality from the first row of the fixture's
-    embeddings.parquet via pyarrow (bounded single-row read, zero
-    Spark jobs), memoized per path and source stamp
-    (sources.tables._source_stamp), so a fixture regenerated in-place
-    within one process lifetime can never serve a stale dim past the
-    dim-mismatch loud-failure guard. None when the fixture is not a
-    plain single-file parquet table or has zero rows (caller falls
-    back to a Spark probe)."""
+    embeddings.parquet, a file or a directory, via pyarrow (bounded
+    single-row read, zero Spark jobs), memoized per path and source
+    stamp (sources.tables._source_stamp), so a fixture regenerated
+    in-place within one process lifetime can never serve a stale dim
+    past the dim-mismatch loud-failure guard. None when the table has
+    zero rows."""
+    import pyarrow.dataset as ds
+
     from ..sources.tables import _source_stamp
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.isfile(path):
-        return None
     stamp = _source_stamp(path)
     if _EMB_DIM_CACHE.get(path, (None,))[0] != stamp:
-        import pyarrow.parquet as pq
-
-        batch = next(
-            pq.ParquetFile(path).iter_batches(batch_size=1, columns=["embedding"]),
-            None,
-        )
-        if batch is None or batch.num_rows == 0:
-            return None
-        _EMB_DIM_CACHE[path] = (stamp, len(batch.column(0)[0]))
+        head = ds.dataset(path, format="parquet").head(1, columns=["embedding"])
+        dim = len(head.column(0)[0]) if head.num_rows else None
+        _EMB_DIM_CACHE[path] = (stamp, dim)
     return _EMB_DIM_CACHE[path][1]
 
 
@@ -348,12 +315,9 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _EMB_LSH['dim'] dimensions while the Spark kernel infers dim from
     # the data — a fixture dim change must fail LOUDLY here, not as a
     # confusing downstream parity mismatch. The probe reads ONE row
-    # via the pyarrow reader when the fixture is a plain parquet file
-    # (no Spark job — the r11 plan paid a first() job per run for one
-    # scalar); view-backed test dirs keep the Spark probe.
-    dim = _embedding_dim_probe(sf_dir) or (
-        emb.select(F.size("embedding").alias("d")).first()["d"]
-    )
+    # via the pyarrow reader (no Spark job — the r11 plan paid a
+    # first() job per run for one scalar).
+    dim = _embedding_dim_probe(sf_dir)
     if dim != _EMB_LSH["dim"]:
         raise ValueError(
             f"embeddings fixture dim {dim} != _EMB_LSH dim {_EMB_LSH['dim']}; "
@@ -1495,15 +1459,14 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("_r.term").alias("term"), F.col("_r.tf").alias("tf")
     )
     dfc = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    # n_docs comes from the parquet footer (plans/budget.table_rows —
-    # O(files) metadata, zero Spark jobs; falls back to one count for
-    # view-backed test dirs). int.bit_length() == length(bin(n)) for
-    # n >= 1, so idf_bits folds to a literal minus the df bin length —
-    # the r11 plan paid a count aggregate plus a broadcast join per
-    # run for a constant the footer already holds.
-    from ..plans.budget import table_rows
+    # n_docs comes from the parquet footers (sources.tables.parquet_rows
+    # — O(files) metadata, zero Spark jobs). int.bit_length() ==
+    # length(bin(n)) for n >= 1, so idf_bits folds to a literal minus
+    # the df bin length — the r11 plan paid a count aggregate plus a
+    # broadcast join per run for a constant the footer already holds.
+    from ..sources.tables import parquet_rows
 
-    n_docs = table_rows(sf_dir, "documents", df=_docs(spark, sf_dir))
+    n_docs = parquet_rows(f"{sf_dir}/documents.parquet")
     idf = dfc.where(F.col("df") <= 100).select(
         "term",
         "df",

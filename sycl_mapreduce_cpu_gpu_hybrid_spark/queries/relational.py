@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
-from ..sources.tables import load_table
+from ..sources.tables import load_table, parquet_rows
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -326,19 +326,6 @@ def _exact_group_quantiles(
     )
 
 
-def _lineitem_rows(li: DataFrame, sf_dir: str) -> int:
-    """Lineitem row count for the row-count probes — parquet FOOTER
-    metadata via the shared, memoized plans/budget.py helper (zero
-    Spark jobs at query-declaration time; the r6 shape ran li.count(),
-    a collect()-class action that is a full first-touch scan risk at
-    100 TB). Falls back to the Spark count only if the source isn't a
-    local single-file parquet table (e.g. a test passes a view-backed
-    sf_dir)."""
-    from ..plans.budget import table_rows
-
-    return table_rows(sf_dir, "lineitem", df=li)
-
-
 def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median + interpolated quartile per group through the
     distributed value-counts form; above MEDIAN_EXACT_MAX_ROWS (a
@@ -347,7 +334,7 @@ def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape for a skewed/huge group). Outputs are plain round(x, 4)
     doubles (driver-hash-safe)."""
     li = _t(spark, sf_dir, "lineitem")
-    nrows = _lineitem_rows(li, sf_dir)
+    nrows = parquet_rows(f"{sf_dir}/lineitem.parquet")
     if nrows > MEDIAN_EXACT_MAX_ROWS:
         # percentile_approx with accuracy 10000: ~0.01% rank error,
         # fixed-size sketch merged map-side, no value buffering.
@@ -1327,8 +1314,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no count of the real edges could flip the footer's decision.
     from ..plans.budget import within_budget
 
-    full_li = _t(spark, sf_dir, "lineitem")
-    bound = 2 * _lineitem_rows(full_li, sf_dir)
+    bound = 2 * parquet_rows(f"{sf_dir}/lineitem.parquet")
     if bound > 0 and within_budget(bound, PR_LOCAL_MAX_EDGES):
         local = _pagerank_trade_graph_local(spark, o, li)
         if local is not None:
@@ -1349,17 +1335,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e")
     ).select("e.src", "e.dst")
     layout = _tradegraph_edge_layout(spark, sf_dir, edges)
-    node_deg = None
-    if layout is not None:
-        edges = layout
-        node_deg = _tradegraph_node_layout(spark, sf_dir, layout)
     return pagerank_fixedpoint(
-        edges,
+        layout,
         iters=_TRADE_PR_ITERS,
         damping_pct=_TRADE_PR_DAMPING_PCT,
-        # the explode above emits both directions of every edge
-        symmetric=True,
-        node_deg=node_deg,
+        node_deg=_tradegraph_node_layout(spark, sf_dir, layout),
     )
 
 
@@ -1417,7 +1397,7 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    bound = _lineitem_rows(_t(spark, sf_dir, "lineitem"), sf_dir)
+    bound = parquet_rows(f"{sf_dir}/lineitem.parquet")
     if bound > 0 and within_budget(bound, PR_LOCAL_MAX_EDGES):
         # same numpy searchsorted builder as graph_pagerank's local
         # tier (two projected scans, FK join + dedup + replay in
@@ -1426,8 +1406,6 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
         if local is not None:
             return local
     cs = _trade_pairs(spark, o, li)
-    edges = cs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-    node_deg = None
     # Above the local tier, reuse the SYMMETRIC write-once layout
     # (both directions of every pair): under the _trade_pairs domain
     # guard customer ids are strictly below SUPP_NODE_OFFSET and
@@ -1444,27 +1422,19 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e")
     ).select("e.src", "e.dst")
     layout = _tradegraph_edge_layout(spark, sf_dir, sym)
-    if layout is not None:
-        edges = layout.where(F.col("dst") >= F.lit(SUPP_NODE_OFFSET))
-        nodes = _tradegraph_node_layout(spark, sf_dir, layout)
-        if nodes is not None:
-            # directed out-degrees off the symmetric node layout:
-            # a customer's symmetric degree IS its distinct-
-            # supplier out-degree (all its edges point at
-            # suppliers); suppliers are sinks (deg 0) but stay in
-            # the node universe for the dangling-mass term
-            node_deg = nodes.select(
-                "node_id",
-                F.when(
-                    F.col("node_id") < F.lit(SUPP_NODE_OFFSET),
-                    F.col("deg"),
-                )
-                .otherwise(F.lit(0))
-                .cast("bigint")
-                .alias("deg"),
-            )
+    # directed out-degrees off the symmetric node layout: a customer's
+    # symmetric degree IS its distinct-supplier out-degree (all its
+    # edges point at suppliers); suppliers are sinks (deg 0) but stay
+    # in the node universe for the dangling-mass term
+    node_deg = _tradegraph_node_layout(spark, sf_dir, layout).select(
+        "node_id",
+        F.when(F.col("node_id") < F.lit(SUPP_NODE_OFFSET), F.col("deg"))
+        .otherwise(F.lit(0))
+        .cast("bigint")
+        .alias("deg"),
+    )
     return pagerank_fixedpoint(
-        edges,
+        layout.where(F.col("dst") >= F.lit(SUPP_NODE_OFFSET)),
         iters=_TRADE_PR_ITERS,
         damping_pct=_TRADE_PR_DAMPING_PCT,
         dangling="redistribute",
@@ -1506,9 +1476,7 @@ def _tradegraph_edge_layout(spark, sf_dir: str, edges):
     bucketed-scan checkpoint = 5.3-10.2 s (32 unsplittable bucket
     files scan worse than split parquet feeding a pipelined exchange),
     so pagerank keeps its one explicit repartition(src) per run.
-    Returns the opened relation, or None when the fixture has no
-    plain-file tables to fingerprint (view-backed test dirs keep the
-    lazy lineage)."""
+    Returns the opened relation."""
     from ..sources.tables import derived_layout, read_layout
 
     # ``deriv`` folds in every input the layout CONTENTS depend on,
@@ -1523,7 +1491,7 @@ def _tradegraph_edge_layout(spark, sf_dir: str, edges):
         f"off={SUPP_NODE_OFFSET};v={_EDGE_LAYOUT_DERIVATION_V}",
         lambda tmp: edges.write.mode("overwrite").parquet(tmp),
     )
-    return None if path is None else read_layout(spark, path)
+    return read_layout(spark, path)
 
 
 _NODE_LAYOUT_DERIVATION_V = 1
@@ -1531,20 +1499,21 @@ _NODE_LAYOUT_DERIVATION_V = 1
 
 def _tradegraph_node_layout(
     spark, sf_dir: str, edges_layout: DataFrame
-) -> DataFrame | None:
+) -> DataFrame:
     """(node_id, deg) of the SYMMETRIC trade graph, materialized
     write-once next to the edge layout (r14): the node universe and
     degrees are fixture properties exactly like the edges, and without
     this layout every pagerank declaration re-aggregated the 117M-row
     sf10 edge relation just to rebuild them (a full extra |E| pass per
-    run). Derived FROM the opened edge layout through the same
-    ``groupBy(src).count()`` the symmetric branch of
-    pagerank_fixedpoint runs (the real producer — r13 lifecycle
-    lesson). The directed consumer projects its out-degrees off the
-    same rows: customers keep their symmetric degree (= distinct
-    suppliers), supplier sinks go to 0 (see graph_pagerank_directed).
+    run). Derived FROM the opened edge layout as its
+    ``groupBy(src).count()``: both directions of every edge are
+    present, so every node occurs as a src and its src count IS its
+    degree (the real producer — r13 lifecycle lesson). The directed
+    consumer projects its out-degrees off the same rows: customers
+    keep their symmetric degree (= distinct suppliers), supplier sinks
+    go to 0 (see graph_pagerank_directed).
     Keyed on BOTH source fingerprints + the edge derivation version +
-    its own; returns None for view-backed dirs."""
+    its own."""
     from ..sources.tables import derived_layout, read_layout
 
     def _write(tmp: str) -> None:
@@ -1560,7 +1529,7 @@ def _tradegraph_node_layout(
         f";nv={_NODE_LAYOUT_DERIVATION_V}",
         _write,
     )
-    return None if path is None else read_layout(spark, path)
+    return read_layout(spark, path)
 
 
 def _pagerank_trade_graph_local(

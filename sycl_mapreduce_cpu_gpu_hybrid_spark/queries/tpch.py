@@ -51,15 +51,14 @@ _REV_E6_SQL = _REV_E6  # identical text is valid in both dialects
 _ORDERLINE_LAYOUT_V = 4
 
 
-def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-once denormalized orders|><|lineitem|><|customer|><|part
     sales view (l_orderkey, l_partkey, o_custkey, o_orderdate,
     l_shipdate, l_quantity, rev_e6, c_mktsegment, p_type) — the
     canonical wide warehouse materialization, maintained at ingest in
     a real deployment (sources/warehouse.py's thesis applied to the
     star join itself). Keyed on the fingerprints of all four source
-    tables + the derivation version; returns None for view-backed
-    test dirs.
+    tables + the derivation version.
 
     v2 is BUCKETED by l_orderkey (external bucketed table over the
     fingerprint-keyed dir): every l_orderkey's lines land in one
@@ -139,12 +138,11 @@ def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame | None
         # has its order, every l_partkey its part). A fixture
         # violating that would silently diverge from oracles that
         # join lineitem->part only (q14) — fail the BUILD loudly
-        # instead. Both counts are metadata-cheap (parquet
-        # footers).
-        from ..plans.budget import table_rows
+        # instead. The lineitem count is a parquet footer read.
+        from ..sources.tables import parquet_rows
 
         built_rows = spark.table(tmp_tbl).count()
-        expect = table_rows(sf_dir, "lineitem", _t(spark, sf_dir, "lineitem"))
+        expect = parquet_rows(f"{sf_dir}/lineitem.parquet")
         spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
         if built_rows != expect:
             raise AssertionError(
@@ -161,8 +159,6 @@ def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame | None
         f"v={_ORDERLINE_LAYOUT_V},buckets={n_buckets}",
         _write,
     )
-    if path is None:
-        return None
     tbl = f"smrgh_orderline_flat_{path[-16:]}"
     if built or not spark.catalog.tableExists(tbl):
         # single registration path: the build publishes FILES only;
@@ -186,46 +182,21 @@ def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame | None
 def tpch_q3_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape (shipping priority): top-10 unshipped-revenue
     orders for one market segment. Reads the write-once denormalized
-    bucketed order-line layout (_orderline_flat_layout) when the
-    fixture is file-backed: all three predicates (segment + both
-    dates) push into the bucketed scan, the bucket clustering on
-    l_orderkey satisfies the groupBy's distribution (o_orderdate is
-    functionally dependent on the order key), and the whole query
-    runs as ONE exchange-free stage — scan, filter, complete hash
-    agg, TakeOrderedAndProject (per-partition heaps, never a global
-    sort). Falls back to the three-table join (broadcast customer,
-    Catalyst order + AQE strategy) for view-backed dirs. Revenue is
-    exact integer e6 fixed-point, so the top-10 cutoff is
-    deterministic across engines — a double sum could flip
-    near-equal ranks 10 and 11 by accumulation order."""
-    flat = _orderline_flat_layout(spark, sf_dir)
-    if flat is not None:
-        scored = flat.where(
-            (F.col("c_mktsegment") == "BUILDING")
-            & (F.col("o_orderdate") < F.lit("1998-01-01"))
-            & (F.col("l_shipdate") > F.lit("1998-01-01"))
-        ).select("l_orderkey", "o_orderdate", "rev_e6")
-    else:
-        c = (
-            _t(spark, sf_dir, "customer")
-            .where(F.col("c_mktsegment") == "BUILDING")
-            .select("c_custkey")
-        )
-        o = (
-            _t(spark, sf_dir, "orders")
-            .where(F.col("o_orderdate") < F.lit("1998-01-01"))
-            .select("o_orderkey", "o_custkey", "o_orderdate")
-        )
-        li = (
-            _t(spark, sf_dir, "lineitem")
-            .where(F.col("l_shipdate") > F.lit("1998-01-01"))
-            .select("l_orderkey", F.expr(_REV_E6).alias("rev_e6"))
-        )
-        scored = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .select("l_orderkey", "o_orderdate", "rev_e6")
-        )
+    bucketed order-line layout (_orderline_flat_layout): all three
+    predicates (segment + both dates) push into the bucketed scan,
+    the bucket clustering on l_orderkey satisfies the groupBy's
+    distribution (o_orderdate is functionally dependent on the order
+    key), and the whole query runs as ONE exchange-free stage — scan,
+    filter, complete hash agg, TakeOrderedAndProject (per-partition
+    heaps, never a global sort). Revenue is exact integer e6
+    fixed-point, so the top-10 cutoff is deterministic across engines
+    — a double sum could flip near-equal ranks 10 and 11 by
+    accumulation order."""
+    scored = _orderline_flat_layout(spark, sf_dir).where(
+        (F.col("c_mktsegment") == "BUILDING")
+        & (F.col("o_orderdate") < F.lit("1998-01-01"))
+        & (F.col("l_shipdate") > F.lit("1998-01-01"))
+    ).select("l_orderkey", "o_orderdate", "rev_e6")
     return (
         scored.groupBy("l_orderkey", "o_orderdate")
         .agg(F.sum("rev_e6").alias("revenue_e6"))
@@ -501,15 +472,13 @@ def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape (promotion effect): monthly share of revenue
     from PROMO-type parts — the lineitem x part fact-dim join (the one
     dimension key the join family didn't yet cover) with a conditional
-    aggregate on top. Share is exact e4 fixed-point integer division;
-    part is dimension-sized, so AQE broadcasts it under the fact
-    scan's month grouping in the fallback path.
+    aggregate on top. Share is exact e4 fixed-point integer division.
 
     Layout path (r13): the v4 wide view carries p_type, so the join
     vanishes — the run is one join-free scan-project-agg stage. At
-    the 10x fixture the fallback's broadcast build alone (2M part
-    rows collected and hash-built on the driver, per run) cost ~5s of
-    an 8s query; DuckDB's parallel shared-hash build did the same in
+    the 10x fixture the two-table join's broadcast build alone (2M
+    part rows collected and hash-built on the driver, per run) cost
+    ~5s of an 8s query; DuckDB's parallel shared-hash build did the same in
     ~1s, and no plan tweak beats simply not paying it per-run."""
     # the group key is NUMERIC (year*100 + month — two cheap field
     # extractions); the month STRING renders after the aggregate, on
@@ -518,21 +487,11 @@ def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout path (measured 1.20 -> 0.69 s at the 10x fixture,
     # value-identical output).
     mk = (F.year("l_shipdate") * 100 + F.month("l_shipdate")).alias("mk")
-    flat = _orderline_flat_layout(spark, sf_dir)
-    if flat is not None:
-        j = flat.select(
-            mk,
-            F.col("rev_e6").alias("rev"),
-            (F.col("p_type") == "PROMO").alias("is_promo"),
-        )
-    else:
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_partkey", mk, F.expr(_REV_E6).alias("rev")
-        )
-        p = _t(spark, sf_dir, "part").select(
-            "p_partkey", (F.col("p_type") == "PROMO").alias("is_promo")
-        )
-        j = li.join(p, li.l_partkey == p.p_partkey)
+    j = _orderline_flat_layout(spark, sf_dir).select(
+        mk,
+        F.col("rev_e6").alias("rev"),
+        (F.col("p_type") == "PROMO").alias("is_promo"),
+    )
     return (
         j.groupBy("mk")
         .agg(
@@ -596,53 +555,23 @@ def tpch_q18_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey bucket-clustering argument as q3), and the orders join
     disappears entirely — o_custkey and o_orderdate are functionally
     dependent on the order key, so they ride the aggregate as min().
-    Only the customer-name dimension probe remains.
-
-    Fallback join strategy (r9): the post-HAVING side has no usable
-    static stats (Catalyst sees only the 6M-row lineitem parent, so it
-    estimated `big` as the LARGE side and planned a broadcast of the
-    1.5M-row orders table — a 1.10s plan at the derived sf1, and an
-    OOM at scale). The shuffle_hash hint pins the correct shape:
-    partitioned hash join BUILDING the selective aggregate (~5% of
-    orders pass the threshold), orders streaming — no broadcast of an
-    unbounded side, per-partition build memory = |big|/shuffle
-    partitions. Measured 1.10 -> 0.48s at sf1; the same plan is the
-    one that survives 100 TB (big is fact-derived, never
-    driver-collectable)."""
+    Only the customer-name dimension probe remains."""
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    flat = _orderline_flat_layout(spark, sf_dir)
-    if flat is not None:
-        big = (
-            flat.groupBy("l_orderkey")
-            .agg(
-                F.expr("CAST(round(sum(l_quantity)) AS BIGINT)").alias(
-                    "total_qty"
-                ),
-                F.min("o_custkey").alias("o_custkey"),
-                F.min("o_orderdate").alias("o_orderdate"),
-            )
-            .where(F.col("total_qty") > 210)
-        )
-        # no broadcast hint: the threshold passes ~5% of orders, so
-        # AQE broadcasts the post-HAVING side at runtime — the side
-        # that stays bounded at 100 TB (customer grows with the fact)
-        return big.join(c, big.o_custkey == c.c_custkey).select(
-            "c_custkey", "c_name", "l_orderkey", "o_orderdate", "total_qty"
-        )
-    li = _t(spark, sf_dir, "lineitem")
     big = (
-        li.groupBy("l_orderkey")
-        .agg(F.expr("CAST(round(sum(l_quantity)) AS BIGINT)").alias("total_qty"))
+        _orderline_flat_layout(spark, sf_dir)
+        .groupBy("l_orderkey")
+        .agg(
+            F.expr("CAST(round(sum(l_quantity)) AS BIGINT)").alias("total_qty"),
+            F.min("o_custkey").alias("o_custkey"),
+            F.min("o_orderdate").alias("o_orderdate"),
+        )
         .where(F.col("total_qty") > 210)
     )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    return (
-        big.hint("shuffle_hash")
-        .join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select("c_custkey", "c_name", "l_orderkey", "o_orderdate", "total_qty")
+    # no broadcast hint: the threshold passes ~5% of orders, so
+    # AQE broadcasts the post-HAVING side at runtime — the side
+    # that stays bounded at 100 TB (customer grows with the fact)
+    return big.join(c, big.o_custkey == c.c_custkey).select(
+        "c_custkey", "c_name", "l_orderkey", "o_orderdate", "total_qty"
     )
 
 

@@ -1,8 +1,12 @@
 """Loaders for the driver's test tables (TESTDATA.md).
 
-Parquet scans are the engine's primary source: columnar, predicate
-pushdown and column pruning reach the scan via Catalyst, partition
-count follows spark.sql.files.maxPartitionBytes at cluster scale.
+The one input contract: a table ``name`` of fixture ``sf_dir`` is
+``{sf_dir}/{name}.parquet``, either one parquet file or a
+Spark-written directory of part files. Parquet scans are the engine's
+primary source: columnar, predicate pushdown and column pruning reach
+the scan via Catalyst, partition count follows
+spark.sql.files.maxPartitionBytes at cluster scale. Metadata probes
+(row counts, schemas) read footers and run no Spark job.
 """
 
 from __future__ import annotations
@@ -52,6 +56,32 @@ def _ns_timestamp_cols(path: str) -> list[str]:
 
 _NS_COLS_CACHE: dict[str, tuple[tuple, list[str]]] = {}
 _SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+_ROWS_CACHE: dict[str, tuple[tuple, int]] = {}
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of the parquet at ``path`` from its footers: one
+    footer for a file, the sum over the part files of a directory
+    (names starting with ``_`` or ``.`` are skipped, as Spark's reader
+    skips them). O(files) metadata, never a Spark job; memoized per
+    path and source stamp, so a table rewritten in place is counted
+    again. Raises OSError when ``path`` does not exist."""
+    stamp = _source_stamp(path)
+    if _ROWS_CACHE.get(path, (None,))[0] != stamp:
+        import pyarrow.parquet as pq
+
+        files = (
+            [path]
+            if os.path.isfile(path)
+            else [
+                os.path.join(path, f)
+                for f in os.listdir(path)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+        )
+        rows = sum(pq.read_metadata(f).num_rows for f in files)
+        _ROWS_CACHE[path] = (stamp, rows)
+    return _ROWS_CACHE[path][1]
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
@@ -236,8 +266,8 @@ def fingerprint(sf_dir: str, table: str) -> str:
     """Digest of the source parquet ``{sf_dir}/{table}.parquet``: its
     absolute path plus each file's name, size and mtime, so a
     regenerated fixture or one read from another CWD changes it.
-    Raises OSError when the table cannot be stat'ed (view-backed test
-    dirs). Local-filesystem paths only."""
+    Raises OSError when the table does not exist. Local-filesystem
+    paths only."""
     src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
     h = hashlib.sha256(src.encode())
     files = (
@@ -271,22 +301,6 @@ def read_layout(spark: SparkSession, path: str) -> DataFrame:
     if key not in per_session:
         _cache_insert(per_session, key, spark.read.parquet(path))
     return per_session[key]
-
-
-def layout_rows(path: str) -> int | None:
-    """Footer row count of a published layout dir — O(files) metadata,
-    zero Spark jobs (the table_rows pattern for layouts). None when
-    the path isn't a readable local parquet dir."""
-    try:
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    except OSError:
-        return None
 
 
 def publish_layout_atomic(write_fn, path: str) -> None:
@@ -352,7 +366,7 @@ def keyed_dir(
 
 def derived_layout(
     sf_dir: str, family: str, tables: tuple[str, ...], deriv: str, write
-) -> str | None:
+) -> str:
     """The one write-once layout mechanism: the published directory of
     layout ``family``, derived from the fixture's ``tables`` by
     ``write``, built on first use.
@@ -363,13 +377,9 @@ def derived_layout(
     The dir and its pruning are :func:`keyed_dir`'s. ``write(tmp)``
     fills ``tmp`` and runs only while the keyed dir lacks its
     ``_SUCCESS`` marker; the marker is added after it returns, and
-    :func:`publish_layout_atomic` publishes the result. Returns None
-    when a table cannot be fingerprinted (view-backed test dirs), so
-    callers keep their lazy lineage."""
-    try:
-        path = keyed_dir(sf_dir, family, tables, deriv)
-    except OSError:
-        return None
+    :func:`publish_layout_atomic` publishes the result. Raises
+    OSError when a table cannot be fingerprinted."""
+    path = keyed_dir(sf_dir, family, tables, deriv)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
 
         def build(tmp: str) -> None:

@@ -9,11 +9,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sycl_mapreduce_cpu_gpu_hybrid_spark.session import get_spark
 
-# CI runs the symmetric-graph contract probe (a bounded anti-join per
-# symmetric pagerank run) so a directed caller fails loudly here
-# rather than silently in production; benches leave it off.
-os.environ.setdefault("SMRGH_VERIFY_SYMMETRIC", "1")
-
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 

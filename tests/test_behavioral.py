@@ -14,6 +14,32 @@ def _ts(day: int, hour: int = 0) -> dt.datetime:
     return dt.datetime(2024, 1, day, hour)
 
 
+def _supply_fixture(tmp_path, rows) -> str:
+    """A fixture dir holding lineitem.parquet (l_partkey, l_suppkey)
+    and supplier.parquet (one row per supplier in ``rows``), the two
+    tables graph_triangles reads: lineitem is scanned, supplier's
+    footer bounds the node count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pks, sks = zip(*rows)
+    sf = str(tmp_path)
+    pq.write_table(
+        pa.table(
+            {
+                "l_partkey": pa.array(pks, pa.int64()),
+                "l_suppkey": pa.array(sks, pa.int64()),
+            }
+        ),
+        f"{sf}/lineitem.parquet",
+    )
+    pq.write_table(
+        pa.table({"s_suppkey": pa.array(sorted(set(sks)), pa.int64())}),
+        f"{sf}/supplier.parquet",
+    )
+    return sf
+
+
 def test_funnel_strict_order(spark, monkeypatch):
     # u1 completes the funnel in order; u2 clicks BEFORE its view
     # (must not count as a click conversion); u3 views only.
@@ -98,15 +124,14 @@ def test_scd2_intervals(spark, monkeypatch):
     assert c1[-1]["valid_to"] is None
 
 
-def test_triangles_hand_graph(spark, monkeypatch):
+def test_triangles_hand_graph(spark, tmp_path):
     # parts -> suppliers: p1 {1,2,3} forms a triangle; p2 {3,4} adds an
     # edge; p3 {1,4} closes a second triangle {1,3,4}.
     rows = []
     for pk, sks in [(1, [1, 2, 3]), (2, [3, 4]), (3, [1, 4])]:
         rows += [(pk, sk) for sk in sks]
-    df = spark.createDataFrame(rows, "l_partkey long, l_suppkey long")
-    monkeypatch.setattr(behavioral, "load_table", lambda s, d, n: df)
-    out = behavioral.graph_triangles(spark, "unused").collect()[0]
+    sf = _supply_fixture(tmp_path, rows)
+    out = behavioral.graph_triangles(spark, sf).collect()[0]
     assert out["n_nodes"] == 4
     # edges: 12 13 23 34 14 -> 5
     assert out["n_edges"] == 5
@@ -160,7 +185,7 @@ def test_basket_pairs_hand(spark, monkeypatch):
     assert [(r["p1"], r["p2"], r["support"]) for r in out] == [(1, 2, 2)]
 
 
-def test_triangles_edge_budget_falls_through(spark, monkeypatch):
+def test_triangles_edge_budget_falls_through(spark, monkeypatch, tmp_path):
     # the dense local tier is gated by BOTH budgets: a graph whose
     # vertex universe fits the node ceiling but whose edge count
     # exceeds TRI_LOCAL_MAX_EDGES must take the distributed wedge path
@@ -168,22 +193,20 @@ def test_triangles_edge_budget_falls_through(spark, monkeypatch):
     rows = []
     for pk, sks in [(1, [1, 2, 3]), (2, [3, 4]), (3, [1, 4])]:
         rows += [(pk, sk) for sk in sks]
-    df = spark.createDataFrame(rows, "l_partkey long, l_suppkey long")
-    monkeypatch.setattr(behavioral, "load_table", lambda s, d, n: df)
-    local = behavioral.graph_triangles(spark, "unused").collect()
+    sf = _supply_fixture(tmp_path, rows)
+    local = behavioral.graph_triangles(spark, sf).collect()
     monkeypatch.setattr(behavioral, "TRI_LOCAL_MAX_EDGES", 1)
-    over_budget = behavioral.graph_triangles(spark, "unused").collect()
+    over_budget = behavioral.graph_triangles(spark, sf).collect()
     assert local == over_budget
     assert over_budget[0]["n_triangles"] == 2
 
 
-def test_triangles_df_cap(spark, monkeypatch):
+def test_triangles_df_cap(spark, tmp_path):
     # a hub part above the cap contributes nothing
     hub = [(99, sk) for sk in range(behavioral._TRI_PART_CAP + 1)]
     small = [(1, 1), (1, 2)]
-    df = spark.createDataFrame(hub + small, "l_partkey long, l_suppkey long")
-    monkeypatch.setattr(behavioral, "load_table", lambda s, d, n: df)
-    out = behavioral.graph_triangles(spark, "unused").collect()[0]
+    sf = _supply_fixture(tmp_path, hub + small)
+    out = behavioral.graph_triangles(spark, sf).collect()[0]
     assert out["n_edges"] == 1 and out["n_triangles"] == 0
 
 

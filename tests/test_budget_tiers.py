@@ -26,7 +26,9 @@ def test_switch_semantics(monkeypatch):
 
 
 def test_table_rows_footer_matches_spark(spark):
-    n = budget.table_rows(SF, "supplier")
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import parquet_rows
+
+    n = parquet_rows(f"{SF}/supplier.parquet")
     assert n == spark.read.parquet(f"{SF}/supplier.parquet").count()
 
 

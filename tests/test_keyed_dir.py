@@ -83,16 +83,18 @@ def test_fixture_memos_follow_source_stamp(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.plans.budget import table_rows
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import _ns_timestamp_cols
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import (
+        _ns_timestamp_cols,
+        parquet_rows,
+    )
 
     path = str(tmp_path / "events.parquet")
     pq.write_table(pa.table({"ts": pa.array([0, 1, 2], pa.timestamp("ns"))}), path)
-    assert table_rows(str(tmp_path), "events") == 3
+    assert parquet_rows(path) == 3
     assert _ns_timestamp_cols(path) == ["ts"]
     time.sleep(0.01)
     pq.write_table(pa.table({"ts": pa.array(range(5), pa.timestamp("us"))}), path)
-    assert table_rows(str(tmp_path), "events") == 5
+    assert parquet_rows(path) == 5
     assert _ns_timestamp_cols(path) == []
 
 

@@ -34,7 +34,7 @@ def _dirs(family: str, sf_dir: str = SF) -> set[str]:
 def _build_orderline(spark):
     from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import tpch
 
-    assert tpch._orderline_flat_layout(spark, SF) is not None
+    tpch._orderline_flat_layout(spark, SF)
 
 
 def _build_ngram(spark):
@@ -54,9 +54,11 @@ def _build_tradegraph(spark):
     # production writes under this key: the layout is keyed by
     # (fixture fingerprints, derivation version) and trusts the
     # caller's edge frame — an earlier version of this helper wrote a
-    # DIRECTED edge set under the real key and silently poisoned
-    # graph_pagerank's symmetric validation in a different test file
-    # (exactly the stale-layout class this test exists to catch)
+    # DIRECTED edge set under the real key and silently poisoned the
+    # node layout derived from it (src counts are degrees only when
+    # both directions are present), so graph_pagerank in a different
+    # test file read wrong ranks (exactly the stale-layout class this
+    # test exists to catch)
     from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import relational
 
     # the tiny fixture takes the driver-local budget tier, which
@@ -238,8 +240,9 @@ def test_derived_layout_lifecycle(tmp_path, monkeypatch):
     assert sorted(os.listdir(root)) == [os.path.basename(p2)]
     assert len(calls) == 3
 
-    # a table that cannot be fingerprinted keeps the caller lazy
-    assert derived_layout(str(fx), "fam", ("absent",), "v=1", write) is None
+    # a table that cannot be fingerprinted has no layout
+    with pytest.raises(OSError):
+        derived_layout(str(fx), "fam", ("absent",), "v=1", write)
 
     # the prune is scoped to one fixture: another fixture's layout of
     # the same family survives this one's re-derivation

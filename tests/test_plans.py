@@ -221,14 +221,6 @@ def test_q3_reads_flat_layout_exchange_free(spark, sf_dir):
     # push into the bucketed scan, the l_orderkey bucket clustering
     # satisfies the groupBy distribution, the top-k plans as
     # TakeOrderedAndProject — one stage, zero Exchange nodes
-    # (file-backed fixture dirs only — the three-table fallback
-    # covers view-backed dirs)
-    import os
-
-    if not os.path.isfile(os.path.join(sf_dir, "orders.parquet")):
-        import pytest
-
-        pytest.skip("view-backed fixture: q3 uses the join fallback")
     plan = _plan(spark, sf_dir, "tpch_q3_priority")
     assert "Join" not in plan, plan
     assert "Exchange" not in plan, plan
@@ -242,16 +234,10 @@ def test_q3_reads_flat_layout_exchange_free(spark, sf_dir):
 
 def test_q18_aggregates_on_bucket_clustering(spark, sf_dir):
     # the v3 layout carries l_quantity, so q18's full-fact HAVING
-    # aggregate (the heaviest shuffle in its fallback form) runs
+    # aggregate (the heaviest shuffle in a join-only plan) runs
     # partial+final directly on the bucketed scan: no shuffle
     # exchange anywhere in the plan — the only exchange is the
     # dimension broadcast (whichever side the planner sizes smaller)
-    import os
-
-    if not os.path.isfile(os.path.join(sf_dir, "orders.parquet")):
-        import pytest
-
-        pytest.skip("view-backed fixture: q18 uses the join fallback")
     plan = _plan(spark, sf_dir, "tpch_q18_volume_customers")
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Bucketed: true" in plan, plan

@@ -14,6 +14,7 @@ from decimal import Decimal
 import pytest
 
 from sycl_mapreduce_cpu_gpu_hybrid_spark.queries import relational
+from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import parquet_rows
 
 
 def _plan(df) -> str:
@@ -89,7 +90,7 @@ def test_agg_median_sketch_tier_boundary(spark, tmp_path, monkeypatch):
     """The >MEDIAN_EXACT_MAX_ROWS sketch tier, exercised AT ITS
     BOUNDARY on a synthetic fixture (r8 verdict: the declared at-scale
     path must not stay theoretical). The tier decision is driven by
-    the parquet FOOTER probe (_lineitem_rows), so this test builds a
+    the parquet FOOTER probe (parquet_rows), so this test builds a
     real lineitem.parquet whose footer count straddles the threshold:
 
     - MEDIAN_EXACT_MAX_ROWS == footer count  -> exact tier (plan has NO
@@ -121,7 +122,7 @@ def test_agg_median_sketch_tier_boundary(spark, tmp_path, monkeypatch):
     )
     sf = str(tmp_path)
     pq.write_table(tbl, f"{sf}/lineitem.parquet")
-    footer = relational._lineitem_rows(None, sf)
+    footer = parquet_rows(f"{sf}/lineitem.parquet")
     assert footer == n  # the probe read the footer, no Spark job
 
     monkeypatch.setattr(relational, "MEDIAN_EXACT_MAX_ROWS", n)

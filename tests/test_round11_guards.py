@@ -1,35 +1,10 @@
-"""Round-11 guard tests: the symmetric-graph debug probe, the
-directory-walking driver-memory sizing, its host-RAM clamp, and the
-exact-quantile library hooks (unpersist registry + many_groups)."""
+"""Round-11 guard tests: the directory-walking driver-memory sizing,
+its host-RAM clamp, and the exact-quantile library hooks (unpersist
+registry + many_groups)."""
 
 from __future__ import annotations
 
 import os
-
-import pytest
-from pyspark.sql import functions as F
-
-
-def test_pagerank_symmetric_probe_raises_on_directed(spark, monkeypatch):
-    """symmetric=True with SMRGH_VERIFY_SYMMETRIC set must RAISE on a
-    directed edge set (dst-only nodes) instead of silently dropping
-    them, and still pass on a genuinely symmetric set."""
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.operators.graph import (
-        pagerank_fixedpoint,
-    )
-
-    monkeypatch.setenv("SMRGH_VERIFY_SYMMETRIC", "1")
-    directed = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "src long, dst long"
-    )
-    with pytest.raises(Exception, match="directed"):
-        pagerank_fixedpoint(directed, iters=1, symmetric=True).collect()
-
-    sym = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
-    )
-    ok = pagerank_fixedpoint(sym, iters=1, symmetric=True)
-    assert ok.count() == 3
 
 
 def test_ensure_driver_memory_walks_directories(tmp_path, monkeypatch):

@@ -409,24 +409,3 @@ def test_dq_audit_detects_violations(spark):
     assert rows["orders_custkey_refs_customer"]["n_violations"] == 1
     assert rows["lineitem_qty_range"]["n_violations"] == 1
     assert rows["orders_key_not_null"]["ok"] == 1
-
-
-def test_pagerank_symmetric_degree_path_matches_general(spark):
-    """The r10 symmetric fast path (src-count == degree, exchange-free
-    over the src-partitioned checkpoint) must be bit-identical to the
-    general union-of-endpoints path on an undirected edge set, through
-    the DISTRIBUTED loop (local tier disabled)."""
-    import random
-
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.operators.graph import (
-        pagerank_fixedpoint,
-    )
-
-    rng = random.Random(11)
-    und = {(rng.randrange(40), rng.randrange(40)) for _ in range(120)}
-    both = [(a, b) for a, b in und if a != b]
-    both += [(b, a) for a, b in both]
-    edges = spark.createDataFrame(both, "src long, dst long")
-    gen = pagerank_fixedpoint(edges, iters=3)
-    sym = pagerank_fixedpoint(edges, iters=3, symmetric=True)
-    assert sorted(map(tuple, gen.collect())) == sorted(map(tuple, sym.collect()))

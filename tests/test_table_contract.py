@@ -1,0 +1,94 @@
+"""The one input contract: a table is ``{sf_dir}/{name}.parquet``, one
+parquet file or a Spark-written directory of part files. Row counts
+come from footers for either form, through one memoized counter
+(sources.tables.parquet_rows) that never starts a Spark job."""
+
+from __future__ import annotations
+
+import ast
+import os
+import pathlib
+import shutil
+
+SF = "/root/testdata/sf0.001"
+PKG = pathlib.Path(__file__).resolve().parents[1] / "sycl_mapreduce_cpu_gpu_hybrid_spark"
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs, read from the status
+    tracker through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"table_contract_{id(fn)}"
+    sc.setJobGroup(group, "declaration probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_rows_sums_directory_part_files(spark, tmp_path):
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import parquet_rows
+
+    df = spark.range(0, 1234)
+    path = str(tmp_path / "t.parquet")
+    df.coalesce(2).write.parquet(path)
+    parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(parts) == 2 and os.path.isfile(os.path.join(path, "_SUCCESS"))
+    assert parquet_rows(path) == df.count() == 1234
+    # one file: the same counter reads its single footer
+    single = str(tmp_path / "single.parquet")
+    shutil.copy(os.path.join(path, parts[0]), single)
+    assert 0 < parquet_rows(single) < 1234
+
+
+def test_tfidf_on_directory_fixture_declares_without_jobs(spark, tmp_path):
+    """text_tfidf_topterms reads n_docs from the footers: on a fixture
+    whose documents table is a Spark-written directory, declaring the
+    query runs no Spark job (a count fallback would run one)."""
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries.llm import text_tfidf_topterms
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import load_table
+
+    sf = str(tmp_path)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs.coalesce(2).write.parquet(f"{sf}/documents.parquet")
+    assert os.path.isdir(f"{sf}/documents.parquet")
+    # the first load infers the schema (one job), memoized per path
+    load_table(spark, sf, "documents")
+    assert _jobs_during(spark, lambda: text_tfidf_topterms(spark, sf)) == 0
+
+
+def _enclosing_functions(tree: ast.AST, attr: str) -> list[str]:
+    """Names of the functions whose bodies call ``<x>.attr(...)``."""
+    hits = []
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == attr
+                ):
+                    hits.append(fn.name)
+    return hits
+
+
+def test_footer_reads_only_in_parquet_rows():
+    """One footer counter: every parquet footer read in the package
+    sits in sources.tables.parquet_rows, and the paths that served
+    other kinds of input are gone."""
+    calls = {}
+    # the removed knobs are spelled in parts, so this file does not
+    # itself name them
+    gone = ("view-backed", "symmetric=") + tuple(
+        "SMRGH_" + k for k in ("VERIFY_SYMMETRIC", "DEBUG_CERT")
+    )
+    for p in PKG.rglob("*.py"):
+        src = p.read_text()
+        assert not [w for w in gone if w in src], p
+        if "read_metadata(" in src:
+            calls[p.relative_to(PKG).as_posix()] = src.count("read_metadata(")
+            fns = _enclosing_functions(ast.parse(src), "read_metadata")
+            assert fns == ["parquet_rows"] * len(fns), (p, fns)
+    assert calls == {"sources/tables.py": 1}
