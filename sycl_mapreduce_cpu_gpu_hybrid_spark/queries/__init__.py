@@ -44,7 +44,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.tables import _source_stamp
+from ..sources.tables import _one_partition_floor, _source_stamp
 from . import behavioral, extensions, kmerq, llm, relational, scalars, tpch
 
 _MODULES = [kmerq, relational, scalars, llm, extensions, behavioral, tpch]
@@ -153,7 +153,9 @@ _GATE_PRIORITY = [
 # a statement once and executes the prepared plan repeatedly; this
 # cache is that, for the DataFrame API: the declared (lazy, immutable)
 # frame is memoized per (application, fixture dir, fixture stat
-# fingerprint, query name), and every materialization still executes
+# fingerprint, the session's one-partition read floor, query name; the
+# floor decides at declaration whether a tiny scan is coalesced, see
+# sources.tables.read_parquet), and every materialization still executes
 # the FULL physical pipeline — scans, shuffles, UDFs, sinks.
 #
 # Self-auditing purity guard: the first declaration runs inside a job
@@ -173,7 +175,13 @@ _DECL_SEQ = [0]  # unique probe job-group per declaration attempt
 def _prepared(name: str, fn: Callable) -> Callable:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc = spark.sparkContext
-        key = (sc.applicationId, sf_dir, _source_stamp(sf_dir), name)
+        key = (
+            sc.applicationId,
+            sf_dir,
+            _source_stamp(sf_dir),
+            _one_partition_floor(spark),
+            name,
+        )
         hit = _PLAN_CACHE.get(key)
         if hit is not None:
             return hit

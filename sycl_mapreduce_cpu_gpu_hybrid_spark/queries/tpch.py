@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, parquet_schema
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -169,7 +169,7 @@ def _orderline_flat_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString()}"
-            for f in spark.read.parquet(path).schema.fields
+            for f in parquet_schema(spark, path).fields
         )
         spark.sql(
             f"CREATE TABLE {tbl} ({cols}) USING parquet"

@@ -12,6 +12,7 @@ spark.sql.files.maxPartitionBytes at cluster scale. Metadata probes
 from __future__ import annotations
 
 import contextlib
+import glob
 import hashlib
 import os
 import re
@@ -36,19 +37,39 @@ TABLE_NAMES = [
 ]
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files of a table or layout: ``[path]`` for a file,
+    the part files of a directory otherwise (names starting with ``_``
+    or ``.`` are skipped, as Spark's reader skips them)."""
+    if os.path.isfile(path):
+        return [path]
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
 def _ns_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's reader
-    rejects ([PARQUET_TYPE_ILLEGAL]). Footer-only read — no data I/O;
-    memoized per path and source stamp (every load_table call would
-    otherwise re-read the footer; a rewritten file is read again)."""
+    rejects ([PARQUET_TYPE_ILLEGAL]). Footer-only read of the file, or
+    of a directory's first part file — no data I/O; memoized per path
+    and source stamp (every load_table call would otherwise re-read
+    the footer; a rewritten file is read again)."""
     stamp = _source_stamp(path)
     if _NS_COLS_CACHE.get(path, (None,))[0] != stamp:
         try:
             import pyarrow.parquet as pq
 
-            schema = pq.read_schema(path)
+            # INT96 (Spark's default timestamp encoding) also maps to
+            # timestamp[ns] in Arrow; Spark reads it natively, so
+            # coerce it to µs and keep only true TIMESTAMP(NANOS)
+            with pq.ParquetFile(
+                _parquet_files(path)[0], coerce_int96_timestamp_unit="us"
+            ) as pf:
+                schema = pf.schema_arrow
             cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
-        except Exception:
+        except (OSError, IndexError):
             cols = []
         _NS_COLS_CACHE[path] = (stamp, cols)
     return _NS_COLS_CACHE[path][1]
@@ -70,16 +91,7 @@ def parquet_rows(path: str) -> int:
     if _ROWS_CACHE.get(path, (None,))[0] != stamp:
         import pyarrow.parquet as pq
 
-        files = (
-            [path]
-            if os.path.isfile(path)
-            else [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-        )
-        rows = sum(pq.read_metadata(f).num_rows for f in files)
+        rows = sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
         _ROWS_CACHE[path] = (stamp, rows)
     return _ROWS_CACHE[path][1]
 
@@ -94,7 +106,7 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     stream_events does; load_table reads such files itself."""
     stamp = _source_stamp(path)
     if _SCHEMA_CACHE.get(path, (None,))[0] != stamp:
-        _SCHEMA_CACHE[path] = (stamp, spark.read.parquet(path).schema)
+        _SCHEMA_CACHE[path] = (stamp, read_parquet(spark, path).schema)
     return _SCHEMA_CACHE[path][1]
 
 
@@ -118,20 +130,27 @@ def _source_stamp(path: str) -> tuple:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan; ns-precision timestamps are read as raw int64
-    nanoseconds (``nanosAsLong``) and converted to microsecond
-    timestamps (floor division — same truncation DuckDB applies when it
-    narrows TIMESTAMP_NS to its µs TIMESTAMP).
+    """Parquet scan through :func:`read_parquet`: a table no larger than
+    the session's AQE minimum partition size (1 MiB by default) reads
+    as ONE partition, so its aggregates, windows and sorts plan no
+    exchange. That holds on a cluster too: a sub-MiB table is one split
+    anywhere, and AQE would coalesce its shuffle to one reduce task.
+    ns-precision timestamps are read as raw int64 nanoseconds
+    (``nanosAsLong``) and converted to microsecond timestamps (floor
+    division — same truncation DuckDB applies when it narrows
+    TIMESTAMP_NS to its µs TIMESTAMP).
 
-    The returned (lazy, immutable) frame is memoized per SESSION and
-    source stamp: a read pays several py4j roundtrips, pure
+    The returned (lazy, immutable) frame is memoized per SESSION,
+    source stamp and floor: a read pays several py4j roundtrips, pure
     declaration overhead for a fixture that never changes mid-run, and
     the schema comes from :func:`parquet_schema`, so a new session
-    (a scoped streaming clone) launches no schema job either. Sessions
-    are held weakly, so ephemeral clones don't pin their frames."""
+    (a scoped streaming clone) launches no schema job either. A session
+    whose floor changes gets a frame planned for the new floor.
+    Sessions are held weakly, so ephemeral clones don't pin their
+    frames."""
     path = f"{sf_dir}/{name}.parquet"
     per_session = _cache_for(spark)
-    key = ("table", path, _source_stamp(path))
+    key = ("table", path, _source_stamp(path), _one_partition_floor(spark))
     if key in per_session:
         return per_session[key]
     df = _load_table_uncached(spark, path)
@@ -149,15 +168,14 @@ def _cache_for(spark: SparkSession) -> dict:
 
 
 def _cache_insert(per_session: dict, key: tuple, df: DataFrame) -> None:
-    """Insert under a (namespace, path, stamp) key, evicting superseded
-    stamps of the same (namespace, path) — without this, every
-    republished layout/fixture leaks one dead lazy frame into the
-    per-session dict for the session's lifetime (r14 advisory). The
-    namespace tag keeps load_table frames (which carry the
-    nanosAsLong -> timestamp_micros rewrite) from ever being served
-    through read_layout (raw reads) or vice versa."""
-    ns, path, _stamp = key
-    stale = [k for k in per_session if k[0] == ns and k[1] == path and k != key]
+    """Insert under a (namespace, path, stamp, floor) key, evicting
+    superseded stamps and floors of the same (namespace, path) —
+    without this, every republished layout/fixture leaks one dead lazy
+    frame into the per-session dict for the session's lifetime (r14
+    advisory). The namespace tag keeps load_table frames (which carry
+    the nanosAsLong -> timestamp_micros rewrite) from ever being
+    served through read_layout (raw reads) or vice versa."""
+    stale = [k for k in per_session if k[:2] == key[:2] and k != key]
     for k in stale:
         del per_session[k]
     per_session[key] = df
@@ -166,17 +184,17 @@ def _cache_insert(per_session: dict, key: tuple, df: DataFrame) -> None:
 def _load_table_uncached(spark: SparkSession, path: str) -> DataFrame:
     ns_cols = _ns_timestamp_cols(path)
     if not ns_cols:
-        return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+        return read_parquet(spark, path, parquet_schema(spark, path))
     # Scope the legacy flag to this read: the reader captures it at
     # DataFrame creation (verified: execution after restore still
     # reads longs), so restoring immediately keeps unrelated
-    # spark.read.parquet calls in the session on the loud
+    # parquet reads in the session on the loud
     # PARQUET_TYPE_ILLEGAL behavior instead of silently yielding longs.
     flag = "spark.sql.legacy.parquet.nanosAsLong"
     prior = spark.conf.get(flag, None)
     spark.conf.set(flag, "true")
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         df.schema  # force schema resolution under the flag
     finally:
         if prior is None:
@@ -186,6 +204,68 @@ def _load_table_uncached(spark: SparkSession, path: str) -> DataFrame:
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """The one batch parquet read in the package: ``spark.read.parquet``
+    of ``path`` (a file, a directory or a glob), with ``schema`` given to
+    the reader when passed, coalesced to ONE partition when its files
+    total no more than the session's
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``.
+
+    Why: ``CoalesceExec(1)`` reports SinglePartition, which satisfies
+    every distribution an aggregate, window or sort requires, so the
+    planner inserts no hash or range exchange above it and those
+    operators run in the scan's own stage and job. The exchange it
+    saves bought no parallelism: with ``parallelismFirst`` AQE
+    coalesces any shuffle under that size to one reduce task anyway.
+    The rule holds on a cluster too: a sub-MiB file is one split on any
+    cluster (splits never go below ``openCostInBytes``), so the scan
+    runs as one task either way. Expanding operators still spread
+    through :func:`fan_out`, which sees one partition, as it does for
+    any single-split file. A path with no local files (a remote URI)
+    is never coalesced."""
+    if schema is None:
+        df = spark.read.parquet(path)
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    if _files_fit(path, _one_partition_floor(spark)):
+        return df.coalesce(1)
+    return df
+
+
+def _one_partition_floor(spark: SparkSession) -> int:
+    """The session's AQE minimum partition size, in bytes: Spark's
+    byte-string form (``1048576b``, ``1m``, ``64kb``; no suffix means
+    bytes)."""
+    value = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    m = re.fullmatch(r"([0-9]+)([kmgtp]?)b?", value.strip().lower())
+    if m is None:
+        raise ValueError(f"unparseable minPartitionSize {value!r}")
+    return int(m[1]) << (10 * " kmgtp".index(m[2] or " "))
+
+
+def _files_fit(path: str, limit: int) -> bool:
+    """Whether the files a read of ``path`` scans total at most
+    ``limit`` bytes: a file, a directory walked recursively, or every
+    match of a glob; names starting with ``_`` or ``.`` are skipped, as
+    Spark's file index skips them. False when nothing matches locally.
+    Stops walking once past ``limit``."""
+    roots = glob.glob(path)
+    total = 0
+    for root in roots:
+        if os.path.isfile(root):
+            total += os.path.getsize(root)
+        for d, dirs, files in os.walk(root):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            for f in files:
+                if not f.startswith(("_", ".")):
+                    total += os.path.getsize(os.path.join(d, f))
+            if total > limit:
+                return False
+    return bool(roots) and total <= limit
 
 
 _PARTS_CACHE: dict[tuple[str, int], int] = {}
@@ -245,7 +325,11 @@ def fan_out(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     arrives as ONE split). This is the engine's only spread decision:
     every operator that fans out an under-partitioned input calls it.
     The partition probe runs no job, even on a frame with exchanges
-    (``scan_num_partitions``).
+    (``scan_num_partitions``). A table under the AQE minimum partition
+    size arrives as ONE partition (:func:`read_parquet` coalesces it,
+    a sub-MiB file being one split on any cluster anyway), so an
+    expanding operator over it spreads here once above ``min_bytes``,
+    and a non-expanding plan over it stays in one task.
 
     ``min_bytes``: skip the exchange when Catalyst's plan-size stat is
     below this floor — for kernels whose per-byte cost is low enough
@@ -282,7 +366,7 @@ def fingerprint(sf_dir: str, table: str) -> str:
 
 
 def read_layout(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet`` over a published write-once
+    """Memoized :func:`read_parquet` over a published write-once
     layout (r14): the read itself is pure declaration, but its
     schema-resolution/file-listing step launches one small Spark job
     per call, which (a) costs ~0.3-0.5 s of py4j + scheduling per
@@ -290,16 +374,16 @@ def read_layout(spark: SparkSession, path: str) -> DataFrame:
     guard (queries/__init__._prepared), so every consumer re-paid its
     WHOLE declaration forever. Layouts are immutable once their
     ``_SUCCESS`` marker exists, so the lazy frame is memoized with the
-    same session + source-stamp key as :func:`load_table` — a
+    same session + source-stamp + floor key as :func:`load_table` — a
     republished layout (new fingerprint dir, or a pruned-and-rebuilt
     one) changes the stamp and can never be served stale. Every
     materialization still scans the layout files. Keys are
     namespaced apart from load_table's (see _cache_insert) and
     superseded stamps are evicted on insert."""
     per_session = _cache_for(spark)
-    key = ("layout", path, _source_stamp(path))
+    key = ("layout", path, _source_stamp(path), _one_partition_floor(spark))
     if key not in per_session:
-        _cache_insert(per_session, key, spark.read.parquet(path))
+        _cache_insert(per_session, key, read_parquet(spark, path))
     return per_session[key]
 
 

@@ -27,6 +27,7 @@ from ..sources.tables import (
     keyed_dir,
     load_table,
     parquet_schema,
+    read_parquet,
 )
 
 
@@ -221,7 +222,7 @@ def stream_tumbling_to_table(
     )
     sink = _overwrite_sink(f"{base}/state")
     stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
-    return scoped.read.schema(result.schema).parquet(f"{base}/state")
+    return read_parquet(scoped, f"{base}/state", result.schema)
 
 
 def stream_sliding_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,8 +238,7 @@ def stream_sliding_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = _overwrite_sink(f"{base}/state")
     stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
     return (
-        scoped.read.schema(result.schema)
-        .parquet(f"{base}/state")
+        read_parquet(scoped, f"{base}/state", result.schema)
         .select("win_start", "n", "sum_value")
     )
 
@@ -265,8 +265,7 @@ def stream_running_max_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream_foreach_batch(result, sink, f"{base}/ckpt", "update")
     return (
-        scoped.read.schema(result.schema)
-        .parquet(f"{base}/sink/b*")
+        read_parquet(scoped, f"{base}/sink/b*", result.schema)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -320,8 +319,7 @@ def stream_interval_join_to_table(spark: SparkSession, sf_dir: str) -> DataFrame
     base = keyed_dir(sf_dir, "stream_ssjoin", ("events",), joined.schema.json())
     stream_to_parquet(joined, f"{base}/sink", f"{base}/ckpt")
     return (
-        scoped.read.schema(joined.schema)
-        .parquet(f"{base}/sink")
+        read_parquet(scoped, f"{base}/sink", joined.schema)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -352,8 +350,7 @@ def stream_enrich_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream_to_parquet(enriched, f"{base}/sink", f"{base}/ckpt")
     return (
-        scoped.read.schema(enriched.schema)
-        .parquet(f"{base}/sink")
+        read_parquet(scoped, f"{base}/sink", enriched.schema)
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -471,7 +468,7 @@ def stream_purchases_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = keyed_dir(sf_dir, "stream_pq", ("events",), purchases.schema.json())
     stream_to_parquet(purchases, f"{base}/data", f"{base}/ckpt")
-    back = scoped.read.schema(purchases.schema).parquet(f"{base}/data")
+    back = read_parquet(scoped, f"{base}/data", purchases.schema)
     return (
         back.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
         .agg(
@@ -530,7 +527,7 @@ def stream_rate_source_to_parquet(
                 f"({_n_committed(ckpt)}/{n_batches} after {attempts} starts)"
             )
         stream_to_parquet(src, f"{base}/data", ckpt)
-    return scoped.read.schema(src.schema).parquet(f"{base}/data")
+    return read_parquet(scoped, f"{base}/data", src.schema)
 
 
 def stream_foreach_batch(
@@ -634,7 +631,7 @@ def stream_cdc_upsert_to_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(state_dir)
 
     stream_foreach_batch(src, apply_batch, ckpt)
-    return spark.read.schema(schema).parquet(state_dir)
+    return read_parquet(spark, state_dir, schema)
 
 
 def stream_dedup_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -690,7 +687,7 @@ def stream_dedup_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{os.path.basename(feed)};{deduped.schema.json()}",
     )
     stream_to_parquet(deduped, f"{base}/sink", f"{base}/ckpt")
-    back = scoped.read.schema(deduped.schema).parquet(f"{base}/sink")
+    back = read_parquet(scoped, f"{base}/sink", deduped.schema)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -34,6 +35,25 @@ def forced(monkeypatch):
 
     monkeypatch.setenv(budget.FORCE_DISTRIBUTED_ENV, "1")
     yield
+
+
+@pytest.fixture()
+def read_floor(spark):
+    """``with read_floor("1b"):`` sets the session's one-partition read
+    floor (AQE's minPartitionSize, sources.tables.read_parquet) for a
+    block, so a plan-shape check can run above and below it."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+    @contextlib.contextmanager
+    def at(value: str):
+        prior = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prior)
+
+    return at
 
 
 @pytest.fixture(scope="session")

@@ -69,28 +69,41 @@ def test_no_spread_when_already_partitioned(spark, sf_dir, tmp_path):
     assert ROUND_ROBIN not in _plan(kmer_count(docs, k=4))
 
 
-def test_probe_runs_no_job_behind_an_exchange(spark, sf_dir):
+def test_probe_runs_no_job_behind_an_exchange(spark, sf_dir, read_floor):
     """A frame behind a shuffle or broadcast is sized from its physical
     plan: converting it to an RDD would run the stages upstream (and
-    fill the persisted frame) at declaration time."""
-    docs = load_table(spark, sf_dir, "documents")
-    groups = (
-        docs.groupBy(F.md5("text").alias("h"))
-        .agg(F.min("doc_id").alias("rep"))
-        .persist()
-    )
-    try:
-        joined = docs.join(groups, F.col("doc_id") == F.col("rep"))
-        spread = docs.repartition(spark.sparkContext.defaultParallelism)
-        before = _jobs(spark)
+    fill the persisted frame) at declaration time. Checked above the
+    one-partition read floor, where the groupBy shuffles, and below it
+    (sf0.001's sub-MiB documents), where only the broadcast does."""
+    n = spark.sparkContext.defaultParallelism
+
+    def probe() -> list[int]:
+        docs = load_table(spark, sf_dir, "documents")
+        groups = (
+            docs.groupBy(F.md5("text").alias("h"))
+            .agg(F.min("doc_id").alias("rep"))
+            .persist()
+        )
+        try:
+            joined = docs.join(groups, F.col("doc_id") == F.col("rep"))
+            spread = docs.repartition(n)
+            before = _jobs(spark)
+            counts = [
+                scan_num_partitions(joined),
+                scan_num_partitions(
+                    spread.join(groups, F.col("doc_id") == F.col("rep"))
+                ),
+            ]
+            assert _jobs(spark) == before
+        finally:
+            groups.unpersist()
+        return counts
+
+    with read_floor("1b"):
         # a broadcast join over the one-split scan reads as under-partitioned
-        assert scan_num_partitions(joined) == 0
-        assert scan_num_partitions(
-            spread.join(groups, F.col("doc_id") == F.col("rep"))
-        ) == spark.sparkContext.defaultParallelism
-        assert _jobs(spark) == before
-    finally:
-        groups.unpersist()
+        assert probe() == [0, n]
+    # the coalesced scan's single partition carries through the join
+    assert probe() == [1, n]
 
 
 def test_partition_probes_live_in_tables():

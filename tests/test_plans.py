@@ -192,12 +192,18 @@ def test_transition_matrix_two_exchanges(spark, sf_dir):
     assert final.count("Exchange") <= 3, final
 
 
-def test_runtime_bloom_filter_reaches_fact_scan(spark, sf_dir):
+def test_runtime_bloom_filter_reaches_fact_scan(spark, sf_dir, read_floor):
     # the dim-side bloom filter must probe the fact side before the
-    # shuffle: might_contain over the join key appears in the plan
-    plan = _plan(spark, sf_dir, "join_runtime_filtered")
+    # shuffle: might_contain over the join key appears in the plan.
+    # Only a shuffle join gets one, so this runs above the
+    # one-partition read floor (sources.tables.read_parquet)
+    with read_floor("1b"):
+        plan = _plan(spark, sf_dir, "join_runtime_filtered")
     assert "might_contain" in plan, plan
     assert "bloom_filter_agg" in plan, plan
+    # below it (sf0.001's sub-MiB tables) the join shuffles nothing
+    tiny = _plan(spark, sf_dir, "join_runtime_filtered")
+    assert "Exchange hashpartitioning" not in tiny, tiny
 
 
 def test_tfidf_rle_stays_staged(spark, sf_dir):

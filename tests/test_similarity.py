@@ -64,18 +64,28 @@ def test_ivf_probes_fewer_candidates(spark, sf_dir):
     assert approx.count() == 30
 
 
-def test_bruteforce_plan_no_join(spark, sf_dir):
+def test_bruteforce_plan_no_join(spark, sf_dir, read_floor):
     """The query matrix lives in the scorer's closure: the corpus is
     scanned once through MapInPandas with no join anywhere, and the
-    only Exchange is the per-query top-k window."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    plan = (
-        brute_force_topk(emb, queries_from_corpus(emb, n=5), k=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange") == 1
+    only Exchange is the per-query top-k window — above the
+    one-partition read floor; below it (sf0.001's sub-MiB embeddings)
+    the window needs none."""
+
+    def plan() -> str:
+        emb = load_table(spark, sf_dir, "embeddings")
+        return (
+            brute_force_topk(emb, queries_from_corpus(emb, n=5), k=10)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+
+    with read_floor("1b"):
+        above = plan()
+    below = plan()
+    for p in (above, below):
+        assert "MapInPandas" in p
+        assert "Join" not in p
+    assert above.count("Exchange") == 1, above
+    assert below.count("Exchange") == 0, below
 
 
 def test_collect_matrix_ceiling_raises_loudly(spark, sf_dir):

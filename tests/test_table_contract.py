@@ -59,6 +59,42 @@ def test_tfidf_on_directory_fixture_declares_without_jobs(spark, tmp_path):
     assert _jobs_during(spark, lambda: text_tfidf_topterms(spark, sf)) == 0
 
 
+def test_ns_timestamps_load_from_a_directory(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column is found in a directory's part file
+    too, so a one-part directory loads through load_table with the
+    same microsecond timestamps as the single-file form."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sycl_mapreduce_cpu_gpu_hybrid_spark.sources.tables import (
+        _ns_timestamp_cols,
+        load_table,
+    )
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, 5]
+    tbl = pa.table(
+        {"id": pa.array([1, 2, 3]), "ts": pa.array(ns, type=pa.timestamp("ns"))}
+    )
+    single, nested = tmp_path / "single", tmp_path / "nested"
+    single.mkdir()
+    (nested / "events.parquet").mkdir(parents=True)
+    pq.write_table(tbl, single / "events.parquet")
+    pq.write_table(tbl, nested / "events.parquet" / "part-00000.parquet")
+    assert _ns_timestamp_cols(str(nested / "events.parquet")) == ["ts"]
+    # Spark's own INT96 timestamps read as ns in Arrow; they are not ns
+    spark_dir = str(tmp_path / "spark.parquet")
+    spark.sql("SELECT TIMESTAMP'2024-01-01 00:00:00' AS ts").write.parquet(spark_dir)
+    assert _ns_timestamp_cols(spark_dir) == []
+
+    def rows(sf: str) -> list:
+        return sorted(load_table(spark, sf, "events").collect())
+
+    got = rows(str(nested))
+    assert got == rows(str(single))
+    # floor division to microseconds, as DuckDB narrows TIMESTAMP_NS
+    assert [r.ts.microsecond for r in got] == [123456, 0, 0]
+
+
 def _enclosing_functions(tree: ast.AST, attr: str) -> list[str]:
     """Names of the functions whose bodies call ``<x>.attr(...)``."""
     hits = []
