@@ -154,7 +154,6 @@ def winnowing_fingerprints(
     window: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al.): hash every
     k-gram, slide a ``window``-wide frame over the hash sequence, keep
@@ -175,19 +174,14 @@ def winnowing_fingerprints(
     per-character least-of-``window`` frame min is heavy enough that
     fan-out wins even at toy scale (measured 2.3s -> 1.2s on 1.5 MB).
 
-    ``portable=True`` swaps xxhash64 for the md5-derived 60-bit hash
-    (functions/porthash.py) that DuckDB reproduces bit-identically —
-    slower, but it upgrades the declared query from a rows-only check
-    to a full value-hash oracle."""
+    Each k-gram hashes to the md5-derived 60-bit value
+    (functions/porthash.py) that DuckDB reproduces bit-identically,
+    so the declared query carries a full value-hash oracle."""
     from ..sources.tables import fan_out
 
     base = fan_out(docs.where(F.length(text_col) >= k))
     gram = f"substring({text_col}, i, {k})"
-    hash_sql = (
-        f"cast(conv(substring(md5({gram}), 1, 15), 16, 10) AS bigint)"
-        if portable
-        else f"xxhash64({gram})"
-    )
+    hash_sql = f"cast(conv(substring(md5({gram}), 1, 15), 16, 10) AS bigint)"
     hashes = F.expr(
         f"transform(sequence(1, length({text_col}) - {k} + 1), i -> {hash_sql})"
     )

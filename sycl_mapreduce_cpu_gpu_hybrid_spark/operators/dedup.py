@@ -16,8 +16,15 @@ Four tiers, all shuffle-bounded (never all-pairs):
   join with a document-frequency cap (stop-shingles dropped), so hot
   shingles cannot explode the join.
 
-All hashing is xxhash64 (JVM built-in, seedable); no Python in any
-row path.
+Hashing is xxhash64 (JVM built-in, seedable) by default, with no
+Python in any row path of these four tiers. MinHash and SimHash also
+take ``portable=True``, the md5-derived family of functions/porthash.py
+that DuckDB replays bit-identically. It costs 1.5-3.4x the xxhash64
+form (see minhash_signatures), so the production pair queries
+(dedup_minhash_pairs, dedup_simhash_pairs) keep xxhash64 and only the
+oracle-replayed ones (dedup_minhash_portable, text_simhash) pay for
+md5. embedding_lsh_pairs projects onto md5-derived Rademacher planes
+only.
 """
 
 from __future__ import annotations
@@ -108,8 +115,10 @@ def minhash_signatures(
     sh = kmer_explode(
         # per-shingle work is 2 base hashes + num_hashes derived mins,
         # not a count: fanning out wins even below kmer_explode's
-        # slice-frame floor (measured ~1.6x on the sf0.1 corpus; both
-        # families now cost ~the same since the CW portable form)
+        # slice-frame floor (measured ~1.6x on the sf0.1 corpus). The
+        # portable md5 family is NOT as cheap: 64-hash signatures ran
+        # 1.34 vs 0.71 s on the sf0.1 docs and 8.65 vs 2.56 s on the
+        # docs tiled 16x (4 cores, medians of 5 alternating noop sinks)
         fan_out(docs.select(id_col, text_col)),
         k=k,
         text_col=text_col,
@@ -528,9 +537,17 @@ def _ngram_rep_core(
     row-form mapping instead (the expansion output is quadratic in
     that count anyway, so such a corpus is pathological for the
     declared pair semantics, not for the contraction).
+
+    ``id_col`` must be an integer column: pairs travel packed as one
+    long (see below). Any other type raises ValueError here.
     """
     from pyspark import StorageLevel
 
+    id_type = dict(docs.dtypes)[id_col]
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"ngram pairs need an integer {id_col!r}, got {id_type}"
+        )
     spark = docs.sparkSession
     hashed = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("_ch"))
     # ONE aggregation yields rep (= first of the sorted members), copy
@@ -576,7 +593,6 @@ def _ngram_rep_core(
     # same DAG — no eager driver-side count at plan-construction time),
     # clamped to >= 1 so corpora under 1/max_doc_freq_frac docs don't
     # silently drop every shingle and return an empty pair set
-    n_docs = docs.agg(F.countDistinct(F.col(id_col)).alias("_n"))
     # r7: the FRACTIONAL cap alone is a scale bug — 0.02·N grows with
     # the corpus, so per-shingle pair fan-out (≤ df_cap²/2) is still
     # quadratic in N. The ABSOLUTE component bounds it at any scale:
@@ -590,17 +606,13 @@ def _ngram_rep_core(
     if max_doc_freq_abs is not None:
         frac_cap = F.least(frac_cap, F.lit(max_doc_freq_abs))
     df_cap = F.greatest(F.lit(1), frac_cap)
-    # integer doc ids additionally ride the PACKED pair path below —
-    # the id-domain stats come from the same single-row aggregate as
-    # the df cap
-    id_type = dict(docs.dtypes)[id_col]
-    packed = id_type in ("tinyint", "smallint", "int", "bigint")
-    if packed:
-        n_docs = docs.agg(
-            F.countDistinct(F.col(id_col)).alias("_n"),
-            F.min(F.col(id_col)).alias("_mn"),
-            F.max(F.col(id_col)).alias("_mx"),
-        )
+    # the id-domain stats of the PACKED pair keys below ride the same
+    # single-row aggregate as the df cap
+    n_docs = docs.agg(
+        F.countDistinct(F.col(id_col)).alias("_n"),
+        F.min(F.col(id_col)).alias("_mn"),
+        F.max(F.col(id_col)).alias("_mx"),
+    )
     idx = (
         sh.groupBy("shingle")
         # collect_set IS the per-shingle rep dedup — feeding it raw
@@ -625,19 +637,18 @@ def _ngram_rep_core(
         )
         .withColumn("ds", F.expr("transform(dw, x -> x.i)"))
     )
-    if packed:
-        # refuse loudly (per surviving index row — a few-k predicate
-        # evaluations) rather than silently corrupt packed keys on an
-        # out-of-domain corpus; non-integer ids take the struct path
-        idx = idx.where(
-            F.when(
-                (F.col("_mn") < 0) | (F.col("_mx") >= F.lit(1 << 31)),
-                F.expr(
-                    "raise_error('ngram pair packing requires"
-                    " doc ids in [0, 2^31)')"
-                ).cast("boolean"),
-            ).otherwise(F.lit(True))
-        )
+    # refuse loudly (per surviving index row — a few-k predicate
+    # evaluations) rather than silently corrupt packed keys on an
+    # out-of-domain corpus
+    idx = idx.where(
+        F.when(
+            (F.col("_mn") < 0) | (F.col("_mx") >= F.lit(1 << 31)),
+            F.expr(
+                "raise_error('ngram pair packing requires"
+                " doc ids in [0, 2^31)')"
+            ).cast("boolean"),
+        ).otherwise(F.lit(True))
+    )
     # the index frame feeds TWO consumers (pair generation + sizes);
     # it is the SMALLEST frame in the pipeline (distinct capped
     # shingles x bounded rep arrays), so it carries the explicit
@@ -704,40 +715,26 @@ def _ngram_rep_core(
     # 1 -> 16-40s at sf0.1. Both shapes produce identical counts.
     capped = max_doc_freq_abs is not None or max_doc_freq_frac < 1.0
     n_part = docs.sparkSession.sparkContext.defaultParallelism
-    if packed:
-        rows = idx.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " y -> x * CAST(2147483648 AS BIGINT) + y)))"
-                )
-            ).alias("pk")
-        )
-        if capped:
-            rows = rows.repartition(n_part, "pk")
-        inter = (
-            rows.groupBy("pk")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .select(
-                F.expr("pk DIV 2147483648").cast(id_type).alias("a"),
-                F.expr("pk % 2147483648").cast(id_type).alias("b"),
-                "inter",
+    rows = idx.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ds, (x, i) ->"
+                " transform(slice(ds, i + 2, size(ds)),"
+                " y -> x * CAST(2147483648 AS BIGINT) + y)))"
             )
+        ).alias("pk")
+    )
+    if capped:
+        rows = rows.repartition(n_part, "pk")
+    inter = (
+        rows.groupBy("pk")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .select(
+            F.expr("pk DIV 2147483648").cast(id_type).alias("a"),
+            F.expr("pk % 2147483648").cast(id_type).alias("b"),
+            "inter",
         )
-    else:
-        rows = idx.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        ).select("p.a", "p.b")
-        if capped:
-            rows = rows.repartition(n_part, "a", "b")
-        inter = rows.groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
+    )
     sz_a = sizes.select(
         F.col("a"), F.col("cnt").alias("na"), F.col("_members").alias("_mas")
     )
@@ -801,6 +798,8 @@ def ngram_jaccard_pairs(
     This is the exact-verify stage run after LSH at scale; here it
     is also a standalone DuckDB-oracleable query (the oracle replays
     the UNCONTRACTED formulation — outputs are bit-identical).
+    ``id_col`` must be an integer column in [0, 2^31); any other type
+    raises ValueError at declaration.
     """
     core, _groups, sizes = _ngram_rep_core(
         docs, k, threshold, max_doc_freq_frac, max_doc_freq_abs, text_col, id_col
@@ -1132,14 +1131,12 @@ def embedding_lsh_pairs(
     n_planes: int = 64,
     bands: int = 16,
     max_bucket: int = 500,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """Scale path for embedding near-dup: random-hyperplane LSH.
 
-    Sign bits of ``n_planes`` seeded random projections form a
+    Sign bits of ``n_planes`` random ±1 projections form a
     bit-signature; band buckets (``n_planes/bands`` bits each) gate an
     exact cosine verify, so only same-bucket pairs are ever scored —
     compute is bucket-bounded, never all-pairs. For two vectors at
@@ -1155,16 +1152,19 @@ def embedding_lsh_pairs(
     (the JVM higher-order cosine is ~ms per pair — a non-starter for
     candidate sets), so vector payloads move only for candidates.
 
-    ``portable=True`` swaps the Gaussian planes for the md5-derived
-    ±1 Rademacher matrix (functions/porthash.rademacher_matrix) and
-    projects *integer-quantized* vectors (floor(x * 1e6) — every
-    product and partial sum stays an integer below 2^53, so the
-    float64 arithmetic is EXACT and order-independent), which lets a
-    DuckDB oracle rebuild every sign bit identically. Production
-    callers keep the Gaussian default."""
+    The planes are the md5-derived ±1 Rademacher matrix
+    (functions/porthash.rademacher_matrix), and the projection runs on
+    *integer-quantized* vectors (floor(x * 1e6) — every product and
+    partial sum stays an integer below 2^53, so the float64 arithmetic
+    is EXACT and order-independent), which lets a DuckDB oracle
+    rebuild every sign bit identically. Recall at threshold 0.4 on the
+    fixture embeddings: 0.924 (sf0.001), 0.949 (sf0.01), 0.958
+    (sf0.1), no false positives."""
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
+
+    from ..functions.porthash import rademacher_matrix
 
     if n_planes % bands:
         raise ValueError("n_planes must be divisible by bands")
@@ -1173,16 +1173,9 @@ def embedding_lsh_pairs(
 
     def _planes(d: int) -> np.ndarray:
         if d not in planes_by_dim:
-            if portable:
-                from ..functions.porthash import rademacher_matrix
-
-                planes_by_dim[d] = np.array(
-                    rademacher_matrix(n_planes, d), dtype=np.float64
-                )
-            else:
-                planes_by_dim[d] = np.random.default_rng(seed).standard_normal(
-                    (n_planes, d)
-                )
+            planes_by_dim[d] = np.array(
+                rademacher_matrix(n_planes, d), dtype=np.float64
+            )
         return planes_by_dim[d]
 
     # The projection CARRIES the vector through (one extra Arrow
@@ -1200,8 +1193,7 @@ def embedding_lsh_pairs(
             if not len(pdf):
                 continue
             v = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if portable:
-                v = np.floor(v * 1_000_000.0)
+            v = np.floor(v * 1_000_000.0)
             bits = (v @ _planes(v.shape[1]).T) >= 0  # (batch, n_planes)
             packed = np.zeros(len(v), dtype=np.int64)
             for i in range(n_planes):

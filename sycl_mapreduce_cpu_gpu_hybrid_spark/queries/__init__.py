@@ -55,6 +55,25 @@ _MODULES = [kmerq, relational, scalars, llm, extensions, behavioral, tpch]
 # cover these before re-sampling queries already green in prior
 # CORRECTNESS_r*.json rounds. Updated per round from the driver logs.
 _GATE_PRIORITY = [
+    # --- touched this round first: the queries whose code the
+    # one-path-per-operator change edits, read off the call graph
+    # (winnowing_fingerprints, embedding_lsh_pairs,
+    # stream_tumbling_to_table, stateful_running_max,
+    # _exact_group_quantiles, and every caller of _ngram_rep_core:
+    # the pair query, the pair-graph layout's two consumers and the
+    # truth-pairs layout's two recall certificates).
+    "text_fingerprint",
+    "dedup_embedding_pairs",
+    "stream_tumbling_counts",
+    "stream_running_max",
+    "agg_median",
+    "agg_median_approx",
+    "dedup_ngram_jaccard",
+    "dedup_clusters",
+    "corpus_curate",
+    "dedup_minhash_pairs",
+    "dedup_simhash_pairs",
+    # --- then oldest-green:
     # --- r15 rotation (r14 verdict task 6, the standing no-stale-green
     # invariant): replaying CORRECTNESS_r01-r14, the 26 names below
     # have latest green evidence from r12 (two rounds stale after the
@@ -91,8 +110,6 @@ _GATE_PRIORITY = [
     # r13 cohort (oldest-first coverage for the sample tail):
     "agg_approx_distinct",
     "agg_count_distinct",
-    "agg_median",
-    "agg_median_approx",
     "agg_pricing_summary",
     "agg_quantile_bands",
     "agg_stats_moments",
@@ -100,11 +117,8 @@ _GATE_PRIORITY = [
     "basket_pairs",
     "corpus_split",
     "date_map_pack",
-    "dedup_embedding_pairs",
     "dedup_exact",
-    "dedup_minhash_pairs",
     "dedup_minhash_portable",
-    "dedup_simhash_pairs",
     "embedding_kmeans",
     "events_json_extract",
     "events_sessionization",

@@ -542,75 +542,8 @@ _TRANSITION_SQL = """
 
 RFM_NTILE_LOCAL_MAX = 1_000_000  # customer-dimension ceiling for the
 # single-task global ntile windows; above it (or under the forced-
-# distributed switch) the two-phase exact-rank tier runs instead
-
-
-def _ntile_distributed(
-    df: DataFrame, k: int, sort_cols: list, out: str
-) -> DataFrame:
-    """Exact global ntile(k) WITHOUT a single-task sort — bit-identical
-    to ``F.ntile(k).over(Window.orderBy(*sort_cols))`` (pytest-pinned,
-    test_rfm_ntile_tiers_bit_identical): the classic two-phase
-    distributed ranking. Rows range-partition on the sort key (a total
-    order — callers include a unique tiebreak column), rank locally per
-    range partition (row_number over a pid window), and the global rank
-    is the local rank plus the broadcast cumulative count of all lower
-    ranges. The bucket then follows SQL ntile semantics exactly: with
-    n rows, the first n % k buckets hold ceil(n/k) rows, the rest
-    floor(n/k). Every stage is parallel and dimension-bounded — the
-    shape that survives a 1.5e8-customer dimension where the global
-    window serializes. The range exchange is consumed by both the
-    local-rank window and the per-range counts; plan-level exchange
-    reuse executes it once."""
-    sess = df.sparkSession
-    n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    # local rank WITHOUT a pid-window: a window partitioned on the
-    # physical partition id would re-exchange on _pid (the planner
-    # cannot know RangePartitioning already co-locates it — measured
-    # one extra 1.5M-row exchange per dimension at the 10x fixture).
-    # After sortWithinPartitions the row order is the total key order,
-    # so monotonically_increasing_id (pid << 33 | row-index) yields
-    # both the range-partition id and the in-partition rank for free —
-    # deterministic here because the sort key is a total order.
-    ranged = (
-        df.repartitionByRange(n_part, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
-    )
-    loc = ranged.select(
-        "*",
-        F.shiftrightunsigned("_mid", 33).alias("_pid"),
-        (F.col("_mid") % F.lit(1 << 33) + 1).alias("_lr"),
-    ).drop("_mid")
-    cnt = loc.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c"))
-    w_off = (
-        Window.orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_all = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off = cnt.select(
-        "_pid",
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_c").over(w_all).alias("_n"),
-    )
-    # integer DIV throughout — float division would mis-bucket ranks
-    # near cut points once n outgrows a double's integer precision
-    bucket = F.expr(
-        f"""CAST(CASE
-            WHEN (_off + _lr) <= (_n % {k}) * (_n DIV {k} + 1)
-            THEN (_off + _lr - 1) DIV (_n DIV {k} + 1) + 1
-            ELSE (_n % {k})
-                 + (_off + _lr - (_n % {k}) * (_n DIV {k} + 1) - 1)
-                   DIV (_n DIV {k}) + 1
-        END AS INT)"""
-    )
-    return (
-        loc.join(F.broadcast(off), "_pid")
-        .withColumn(out, bucket)
-        .drop("_pid", "_lr", "_off", "_n")
-    )
+# distributed switch) the boundary-key tier (_ntile_boundary_buckets)
+# runs instead
 
 
 def _ntile_boundary_keys(
@@ -632,7 +565,7 @@ def _ntile_boundary_keys(
     over the 3 x B frame locates the bucket covering each boundary
     rank, and only that bucket's ~n/B rows sort (tiny window task) to
     pick the exact key. No full-frame range exchange, no full sort —
-    the r10 tier paid THREE of each (chained _ntile_distributed
+    the r10 tier paid THREE of each (chained two-phase range-rank
     passes, 6.9s at the 10x fixture); this shape's full-data work is
     two projections over the checkpointed dimension frame plus
     tiny-frame stages, and at 1.5e8 customers every stage stays

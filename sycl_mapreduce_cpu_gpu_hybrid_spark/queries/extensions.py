@@ -49,7 +49,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed aggregate (bounded state: ids expire with the watermark);
     event_id is unique in the fixture, so the batch oracle — 1-hour
     window starts == date_trunc — is unchanged."""
-    return stream_tumbling_to_table(spark, sf_dir, dedup_key="event_id")
+    return stream_tumbling_to_table(spark, sf_dir)
 
 
 def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -302,10 +302,9 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-hyperplane LSH banding gates an Arrow-batched exact-cosine
     verify, so compute is bucket-bounded, never all-pairs — the shape
     that survives when the corpus matrix stops fitting one executor.
-    Declared with the portable md5-Rademacher planes + integer-
-    quantized projections so the DuckDB oracle rebuilds every sign bit
-    and bucket identically (mirroring the minhash portable/production
-    split); the exact all-pairs operator (embedding_near_dup_pairs)
+    The operator's md5-Rademacher planes + integer-quantized
+    projections let the DuckDB oracle rebuild every sign bit and
+    bucket identically; the exact all-pairs operator (embedding_near_dup_pairs)
     stays as the verify twin, with LSH recall pytest-asserted against
     it. The synthetic embeddings have no planted duplicates (max
     pairwise cosine ~0.6), so the threshold sits at the fixture's
@@ -329,7 +328,6 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_EMB_LSH["n_planes"],
         bands=_EMB_LSH["bands"],
         max_bucket=_EMB_LSH["max_bucket"],
-        portable=True,
     )
 
 
@@ -515,11 +513,11 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint summary per doc (count + min, so the
-    result is compact and deterministic). Uses the portable md5 hash
-    so DuckDB replays the winnow bit-identically (full value-hash
-    oracle); production callers keep the default xxhash64."""
+    result is compact and deterministic). The winnow hashes with the
+    portable md5 hash, so DuckDB replays it bit-identically (full
+    value-hash oracle)."""
     d = _docs(spark, sf_dir)
-    fp = winnowing_fingerprints(d, k=8, window=4, portable=True)
+    fp = winnowing_fingerprints(d, k=8, window=4)
     return fp.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_fingerprints"),
         F.min("fingerprint").alias("min_fp"),

@@ -155,8 +155,6 @@ def _exact_group_quantiles(
     df: DataFrame,
     key: str,
     specs: list[tuple[str, float, str]],
-    unpersist_registry: list | None = None,
-    many_groups: bool = False,
 ) -> DataFrame:
     """Exact interpolated quantiles per group WITHOUT buffering group
     values: one row per ``key`` with a column per (col, p, outname)
@@ -185,21 +183,11 @@ def _exact_group_quantiles(
     Percentile; bit-identical to a sorted-array reference (pytest-
     pinned, test_exact_quantile_tiers_bit_identical).
 
-    Caller contracts (r9 advice; hooks added r11):
-    - the persisted counts relation is NOT unpersisted here (the
-      returned frame is lazy; unpersisting before materialization
-      would forfeit the share). The repo's harnesses clear the SQL
-      cache between queries; a long-lived library session should pass
-      ``unpersist_registry`` (a list) — the persisted relation is
-      appended to it, and the caller unpersists after materializing
-      the result (or calls ``spark.catalog.clearCache()``).
-    - BOTH small-frame broadcasts (the per-group range frame onto the
-      counts, and the locate frame onto the pick join) are
-      |groups| x |specs|-sized — fine for low-cardinality group keys
-      (the declared queries'), a broadcast-OOM hazard for a
-      high-cardinality ``key``. Pass ``many_groups=True`` to drop the
-      hints and let both joins shuffle (AQE still broadcasts if the
-      measured size permits).
+    The persisted counts relation is not unpersisted here (the
+    returned frame is lazy); the harnesses release it between queries
+    (``session.release_cached``). Both small-frame joins broadcast
+    |groups| x |specs|-row frames, which suits the declared queries'
+    low-cardinality group keys.
     """
     from pyspark import StorageLevel
 
@@ -214,9 +202,6 @@ def _exact_group_quantiles(
         .agg(F.count(F.lit(1)).alias("_c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if unpersist_registry is not None:
-        unpersist_registry.append(cnts)
-    _maybe_bcast = (lambda f: f) if many_groups else F.broadcast
     # phase 0: per-(group, measure) totals and value range (tiny;
     # broadcast back onto the counts frame)
     rng = cnts.groupBy(key, "_mi").agg(
@@ -230,7 +215,7 @@ def _exact_group_quantiles(
         f" (CASE WHEN _mx > _mn THEN _mx - _mn ELSE 1.0 END)"
         f" * {QUANTILE_LOCATE_BUCKETS}) AS BIGINT))"
     )
-    wb = cnts.join(_maybe_bcast(rng), [key, "_mi"]).withColumn(
+    wb = cnts.join(F.broadcast(rng), [key, "_mi"]).withColumn(
         "_b", F.expr(bexpr)
     )
     # phase 1 (locate): cumulative counts over the BUCKET frame — at
@@ -284,7 +269,7 @@ def _exact_group_quantiles(
     # the distinct values each) re-window; exactly one row covers each
     # in-bucket rank
     sub = wb.select(key, "_mi", "_b", "_v", "_c").join(
-        _maybe_bcast(needs), [key, "_mi", "_b"]
+        F.broadcast(needs), [key, "_mi", "_b"]
     )
     w_in = Window.partitionBy(key, "_mi", "_si", "_w").orderBy("_v")
     picked = (
@@ -1669,7 +1654,7 @@ def _running_sum_distributed(
 ) -> DataFrame:
     """Exact global running sum of ``val`` in ``sort_cols`` order
     WITHOUT a single-task sort — the classic two-phase distributed
-    prefix sum (the _ntile_distributed sibling, r14): rows
+    prefix sum (r14): rows
     range-partition on the sort key (a total order — callers include
     a unique tiebreak column), accumulate locally per range, and each
     range adds the broadcast sum of all lower ranges. Every stage is

@@ -127,11 +127,6 @@ def run_available_now(result: DataFrame, name: str, mode: str = "complete") -> N
     q.awaitTermination()
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def _n_committed(checkpoint: str) -> int:
     """Number of micro-batches durably committed at ``checkpoint`` —
     the engine's own offset ledger (one all-digit file per committed
@@ -152,73 +147,52 @@ def _overwrite_sink(path: str):
     return lambda batch_df, batch_id: batch_df.write.mode("overwrite").parquet(path)
 
 
-def stream_tumbling_to_table(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str = "stream_tumbling",
-    dedup_key: str | None = None,
-    state_partitions: int | None = 8,
-    rocksdb_state: bool = False,
-) -> DataFrame:
-    """End-to-end: stream the events fixture through watermarked
-    tumbling windows, drain with availableNow, return the result.
-    ``dedup_key`` inserts a dropDuplicatesWithinWatermark stage before
-    the aggregation — the exactly-once ingestion guard (state bounded
-    by the watermark horizon, not the stream length).
+def stream_tumbling_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end: stream the events fixture through an event_id
+    dropDuplicatesWithinWatermark stage (the exactly-once ingestion
+    guard: state bounded by the watermark horizon, not the stream
+    length) and watermarked tumbling windows, drain with availableNow,
+    return the result. The watermark is declared once, upstream of the
+    dedup.
 
-    ``state_partitions`` sizes the stateful shuffles: a streaming
+    The stateful shuffles run on 8 state partitions: a streaming
     query's state partitioning is pinned at the first checkpoint, so
-    it must be sized to *state cardinality* (distinct keys within the
+    it is sized to *state cardinality* (distinct keys within the
     watermark horizon), never inherited from the batch shuffle
     parallelism — each state-store partition pays checkpoint IO per
-    micro-batch whether or not it holds keys. Size up for a Kafka
-    deployment with millions of in-horizon keys; pass ``None`` to
-    inherit the session's shuffle parallelism.
+    micro-batch whether or not it holds keys. State lives in the
+    default HDFS-backed in-memory provider; a RocksDB provider (state
+    spilled to local disk) would be a new option, added when a query
+    needs it.
 
-    ``rocksdb_state`` switches the state store to the RocksDB
-    provider: per-partition state then spills to local disk instead of
-    living on the JVM heap — required once in-horizon state outgrows
-    executor memory (e.g. id-dedup over a wide watermark). Local
-    replays of tiny fixtures keep the default HDFS-backed in-memory
-    provider (RocksDB's JNI + compaction overhead dominates at toy
-    state sizes). Both knobs are pinned into the checkpoint at first
-    start — changing either later means a new checkpoint.
-
-    The shuffle/state-store overrides are scoped to a CLONED session
+    The shuffle override is scoped to a CLONED session
     (``spark.newSession()`` — shared SparkContext, isolated SQLConf),
     so batch queries running concurrently on the caller's session
     never observe the streaming conf; the returned DataFrame is bound
     to the clone (same JVM data, collectable anywhere).
 
     The sink is DURABLE (foreachBatch complete-overwrite parquet +
-    checkpoint in a ``keyed_dir`` of family ``stream_tumbling_{name}``,
-    keyed on the fixture fingerprint, the drained schema, ``dedup_key``
-    and both state knobs): a re-run against an unchanged fixture resumes
+    checkpoint in a ``keyed_dir`` keyed on the fixture fingerprint and
+    the drained schema): a re-run against an unchanged fixture resumes
     a complete checkpoint, drains nothing, and reads the persisted
     result back — restart-resume exactly-once, the r7 pattern the
-    append-mode streaming queries already use. Single-process use per keyed tree
-    (local-FS markers, no cross-process locking)."""
+    append-mode streaming queries already use. Single-process use per
+    keyed tree (local-FS markers, no cross-process locking)."""
     scoped = spark.newSession()
-    src = stream_events(scoped, sf_dir)
-    watermark: str | None = "2 hours"
-    if dedup_key is not None:
-        src = src.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
-            [dedup_key]
-        )
-        watermark = None  # already declared upstream of the dedup
-    result = tumbling_counts(src, watermark=watermark)
-    if state_partitions is not None:
-        scoped.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if rocksdb_state:
-        scoped.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
+    src = (
+        stream_events(scoped, sf_dir)
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
+    result = tumbling_counts(src, watermark=None)
+    scoped.conf.set("spark.sql.shuffle.partitions", "8")
+    # the family keeps its older spelling, so this tree's first build
+    # prunes the trees drained under the older derivation
     base = keyed_dir(
         sf_dir,
-        f"stream_tumbling_{name}",
+        "stream_tumbling_stream_tumbling",
         ("events",),
-        f"{result.schema.json()};dedup={dedup_key}"
-        f";parts={state_partitions};rocksdb={rocksdb_state}",
+        f"{result.schema.json()};dedup=event_id",
     )
     sink = _overwrite_sink(f"{base}/state")
     stream_foreach_batch(result, sink, f"{base}/ckpt", "complete")
@@ -311,7 +285,7 @@ def stream_interval_join_to_table(spark: SparkSession, sf_dir: str) -> DataFrame
     # join state keys = users in the watermark horizon (150 in the
     # fixture): 4 state partitions measured best locally; size to
     # horizon key-cardinality on a real deployment (see
-    # stream_tumbling_to_table's state_partitions discussion)
+    # stream_tumbling_to_table's state-partition discussion)
     scoped.conf.set("spark.sql.shuffle.partitions", "4")
     # durable keyed sink: re-runs resume the complete checkpoint and
     # drain nothing (restart-resume exactly-once; inner-join append
@@ -381,11 +355,7 @@ def session_counts(
     )
 
 
-def stateful_running_max(
-    events: DataFrame,
-    key: str = "user_id",
-    timeout_minutes: int | None = None,
-) -> DataFrame:
+def stateful_running_max(events: DataFrame, key: str = "user_id") -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-key
     running max of ``value`` with event count. The state tuple is the
     streaming analog of the reference's per-key accumulation
@@ -394,10 +364,9 @@ def stateful_running_max(
 
     Each micro-batch emits one row per updated key; state survives
     across batches and is bounded by the distinct-key count, never the
-    event count. Pass ``timeout_minutes`` on a live (unbounded) stream
-    to evict idle keys via processing-time timeout; leave it None for
-    finite replays — a pending timeout keeps an availableNow drain
-    alive until the wall clock reaches it."""
+    event count. No key times out: a pending processing-time timeout
+    would keep an availableNow drain alive until the wall clock
+    reaches it."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -405,17 +374,12 @@ def stateful_running_max(
     state_schema = "n long, mx double"
 
     def update(key_tuple, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
         n, mx = state.get if state.exists else (0, float("-inf"))
         for pdf in pdfs:
             n += len(pdf)
             if len(pdf):
                 mx = max(mx, float(pdf["value"].max()))
         state.update((n, mx))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
         yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n], "max_value": [mx]})
 
     return events.groupBy(key).applyInPandasWithState(
@@ -423,11 +387,7 @@ def stateful_running_max(
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_minutes is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

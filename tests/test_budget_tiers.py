@@ -98,9 +98,9 @@ def test_median_forced_distributed_matches(spark):
 
 def test_rfm_ntile_tiers_bit_identical(spark, forced, monkeypatch):
     """orders_rfm under the switch: the three global ntile windows are
-    disabled and each dimension ranks through _ntile_distributed
-    (range partition + local row_number + broadcast offsets) — the
-    segment rollup must be bit-identical to the window tier."""
+    disabled and each dimension buckets through _ntile_boundary_buckets
+    (histogram-located exact boundary keys, assigned by comparison) —
+    the segment rollup must be bit-identical to the window tier."""
     from sycl_mapreduce_cpu_gpu_hybrid_spark.queries.behavioral import (
         orders_rfm,
     )
@@ -109,32 +109,6 @@ def test_rfm_ntile_tiers_bit_identical(spark, forced, monkeypatch):
     monkeypatch.delenv(budget.FORCE_DISTRIBUTED_ENV)
     local = _rows(orders_rfm(spark, SF))
     assert dist == local and len(dist) > 0
-
-
-def test_ntile_distributed_matches_window_on_skew(spark, forced):
-    """_ntile_distributed vs F.ntile on an adversarial frame: heavy
-    ties (forcing the unique tiebreak to matter), n not divisible by
-    k (mixed ceil/floor bucket sizes), and n smaller than k in one
-    variant (every bucket ceil-sized, ELSE branch dead)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries.behavioral import (
-        _ntile_distributed,
-    )
-
-    for n in (3, 23, 997):
-        df = spark.range(n).select(
-            F.col("id"), (F.col("id") % 7).alias("v")
-        )
-        cols = [F.col("v").desc(), F.col("id")]
-        want = _rows(
-            df.select(
-                "id", F.ntile(5).over(Window.orderBy(*cols)).alias("b")
-            )
-        )
-        got = _rows(_ntile_distributed(df, 5, cols, "b").select("id", "b"))
-        assert got == want, f"n={n}"
 
 
 def test_pagerank_directed_forced_distributed_matches(spark, forced, monkeypatch):

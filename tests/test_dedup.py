@@ -399,21 +399,14 @@ def test_ngram_contraction_matches_bruteforce(dup_heavy):
             assert got[(100 + i, 100 + j)] == 1.0
 
 
-def test_ngram_contraction_string_id_fallback(spark, dup_heavy):
-    """Non-integer ids take the struct (unpacked) pair path; the
-    contraction must produce the same pair set there too."""
+def test_ngram_pairs_reject_string_ids(dup_heavy):
+    """Pairs travel packed as one long, so a non-integer id column is
+    refused when the pairs are declared, before any job runs."""
     docs = dup_heavy.select(
         F.format_string("d%04d", F.col("doc_id")).alias("doc_id"), "text"
     )
-    rows = [(r["doc_id"], r["text"]) for r in docs.collect()]
-    want = _brute_ngram_pairs(rows, frac=0.5, cap=10)
-    got = {
-        (r["a"], r["b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.6, max_doc_freq_frac=0.5, max_doc_freq_abs=10
-        ).collect()
-    }
-    assert got == want
+    with pytest.raises(ValueError, match="integer"):
+        ngram_jaccard_pairs(docs, threshold=0.6)
 
 
 def test_pair_graph_components_match_full_pairs(dup_heavy):

@@ -1,8 +1,8 @@
 """Every tree under ``$TMPDIR/smrgh_roundtrip`` comes from one rule,
 sources.tables.keyed_dir: a stream's durable tree is replaced, not
-accumulated, when its fixture changes, the prune never reaches another
-fixture's trees, and every constant pinned into a checkpoint is part of
-its key. The fixture memos follow a file rewritten in place."""
+accumulated, when its fixture changes, and the prune never reaches
+another fixture's trees. The fixture memos follow a file rewritten in
+place."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ import time
 
 from sycl_mapreduce_cpu_gpu_hybrid_spark.streaming.events import (
     stream_purchases_to_parquet,
-    stream_tumbling_to_table,
 )
 
 
@@ -53,28 +52,6 @@ def test_stream_trees_pruned_per_fixture(spark, sf_dir, tmp_path, monkeypatch):
     (tree_a2,) = _trees("stream_pq", a)
     assert tree_a2 != tree_a
     assert _trees("stream_pq", b) == [tree_b]
-
-
-def test_tumbling_state_partitions_key_the_tree(spark, sf_dir, tmp_path, monkeypatch):
-    """The state partition count is pinned into a checkpoint at its
-    first start, so a call with another count drains a tree of its own
-    rather than resuming a checkpoint it cannot use."""
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
-
-    def drain(parts):
-        rows = _all_rows(
-            stream_tumbling_to_table(
-                spark, sf_dir, name="t_parts", dedup_key="event_id",
-                state_partitions=parts,
-            )
-        )
-        (tree,) = _trees("stream_tumbling_t_parts", sf_dir)
-        return tree, rows
-
-    tree4, rows4 = drain(4)
-    tree2, rows2 = drain(2)
-    assert tree2 != tree4
-    assert rows2 == rows4
 
 
 def test_fixture_memos_follow_source_stamp(tmp_path):

@@ -1,6 +1,5 @@
 """Round-11 guard tests: the directory-walking driver-memory sizing,
-its host-RAM clamp, and the exact-quantile library hooks (unpersist
-registry + many_groups)."""
+its host-RAM clamp, and the trade-graph layout key."""
 
 from __future__ import annotations
 
@@ -50,36 +49,6 @@ def test_ensure_driver_memory_clamps_to_host_ram(tmp_path, monkeypatch):
         1 << 30
     )
     assert need <= host_gib * 0.8 + 8  # clamped, not 20*26=520g
-
-
-def test_exact_quantiles_hooks_value_identical(spark):
-    """many_groups=True (no broadcast hints) and the unpersist
-    registry must not change values; the registry receives exactly the
-    persisted counts relation."""
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.queries.relational import (
-        _exact_group_quantiles,
-    )
-
-    df = spark.createDataFrame(
-        [(g, float(v)) for g in ("a", "b") for v in range(17)],
-        "k string, x double",
-    )
-    specs = [("x", 0.5, "med"), ("x", 0.9, "p90")]
-    base = sorted(
-        map(tuple, _exact_group_quantiles(df, "k", specs).collect())
-    )
-    reg: list = []
-    alt = sorted(
-        map(
-            tuple,
-            _exact_group_quantiles(
-                df, "k", specs, unpersist_registry=reg, many_groups=True
-            ).collect(),
-        )
-    )
-    assert base == alt
-    assert len(reg) == 1
-    reg[0].unpersist()
 
 
 def test_tradegraph_layout_key_tracks_both_sources(tmp_path, monkeypatch):

@@ -126,29 +126,6 @@ def test_stream_foreach_batch_idempotent_paths(spark, sf_dir, tmp_path):
     assert back.count() == load_table(spark, sf_dir, "events").count()
 
 
-def test_rocksdb_state_store_agrees_and_restores_conf(spark, sf_dir):
-    # same result under the RocksDB provider (the scale path once
-    # in-horizon state outgrows executor memory), and both scoped
-    # conf overrides restored afterwards
-    from sycl_mapreduce_cpu_gpu_hybrid_spark.streaming.events import (
-        stream_tumbling_to_table,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    default = stream_tumbling_to_table(
-        spark, sf_dir, name="t_state_default", dedup_key="event_id"
-    )
-    rocks = stream_tumbling_to_table(
-        spark, sf_dir, name="t_state_rocks", dedup_key="event_id",
-        rocksdb_state=True,
-    )
-    cols = ["win_start", "event_type", "n", "sum_value"]
-    assert _rows(rocks, cols) == _rows(default, cols)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prior_parts
-    assert spark.conf.get(key, None) is None
-
-
 def test_rate_source_restart_exactly_once(spark):
     """Non-file source E2E: n_batches separate query starts against
     one checkpoint must yield exactly the contiguous value range —

@@ -128,3 +128,48 @@ def test_footer_reads_only_in_parquet_rows():
             fns = _enclosing_functions(ast.parse(src), "read_metadata")
             assert fns == ["parquet_rows"] * len(fns), (p, fns)
     assert calls == {"sources/tables.py": 1}
+
+
+def test_single_path_options_stay_deleted():
+    """One path per operator: the options that selected a second
+    branch no declared query took stay off their functions, and the
+    deleted distributed-ntile helper and RocksDB provider name do not
+    come back anywhere in the package."""
+    gone_params = {
+        ("functions/text.py", "winnowing_fingerprints"): {"portable"},
+        ("operators/dedup.py", "embedding_lsh_pairs"): {"seed", "portable"},
+        ("streaming/events.py", "stream_tumbling_to_table"): {
+            "name",
+            "dedup_key",
+            "state_partitions",
+            "rocksdb_state",
+        },
+        ("streaming/events.py", "stateful_running_max"): {"timeout_minutes"},
+        ("queries/relational.py", "_exact_group_quantiles"): {
+            "unpersist_registry",
+            "many_groups",
+        },
+    }
+    for (rel, fn_name), params in gone_params.items():
+        tree = ast.parse((PKG / rel).read_text())
+        (fn,) = [
+            n
+            for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name == fn_name
+        ]
+        a = fn.args
+        names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        assert not names & params, (rel, fn_name, names & params)
+    gone_names = {"_ntile_distributed", "_ROCKSDB_PROVIDER"}
+    for p in PKG.rglob("*.py"):
+        found = set()
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                found.add(node.name)
+            elif isinstance(node, ast.Name):
+                found.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                found.add(node.attr)
+            elif isinstance(node, ast.alias):
+                found.add(node.name.rsplit(".", 1)[-1])
+        assert not found & gone_names, (p, found & gone_names)
